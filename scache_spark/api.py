@@ -1,13 +1,20 @@
-"""User-facing composable API: the engine's operators, parameterized
+"""User-facing composable API: the engine's algorithms, parameterized
 over ARBITRARY DataFrames.
 
-The registry (`registry.py`) binds every operator to the fixture
-tables so the round driver can oracle-check it; this module is the
-surface an application actually imports — the same scale-first plans
-(hash-before-shuffle dedup, banded LSH joins, broadcast codebooks,
-union+window as-of joins) exposed as functions of (DataFrame, column
-names, knobs).  Each function returns a lazy DataFrame: callers
-compose them and let Catalyst optimize across the seams.
+This module holds the one implementation of each algorithm that both
+an application and the registry (`registry.py`) use.  The registry's
+queries for these algorithms are fixture wrappers: they load the
+fixture tables, call the function here and project/rename the result
+for their DuckDB oracle.  The plans are the scale-first ones
+(hash-before-shuffle dedup, capped banded LSH joins, broadcast
+codebooks, union+window as-of joins), and each function returns a
+DataFrame: callers compose them and let Catalyst optimize across the
+seams.  Dependencies point one way, ``operators/* -> api ->
+functions``; nothing here imports an operator module.
+
+Algorithm constants (shingle width, minhash bands, BM25 k1/b, sketch
+shape, bucket counts) are fixed module constants, because the
+registry's oracles replicate them in SQL.
 
 Determinism contract matches the registry: md5-derived hashing only,
 every ranking totally ordered, no unseeded randomness anywhere.
@@ -15,14 +22,22 @@ every ranking totally ordered, no unseeded randomness anywhere.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from scache_spark.functions import (
     bounded_window,
+    cosine_defined,
+    hash64,
     salted_md5,
+    tokens,
     vec_cosine,
+    vec_dot,
+    vec_l2sq,
+    vec_norm,
     word_shingles,
 )
 
@@ -33,6 +48,7 @@ __all__ = [
     "knn_topk",
     "sessionize",
     "asof_join",
+    "windowed_pair_join",
     "quality_signals",
     "top_k_per_group",
     "shard_assign",
@@ -42,12 +58,28 @@ __all__ = [
     "span_dedup_rewrite",
     "dsir_score",
     "perplexity_buckets",
+    "cms_increments",
     "cms_sketch",
     "cms_estimate",
     "edit_distance_pairs",
     "skyline_2d",
     "auc_rank",
 ]
+
+SHINGLE_N = 3  # words per minhash shingle
+N_MINHASH = 8  # minhash permutations
+N_BANDS = 4  # LSH bands of 2 rows each
+BAND_CAP = 8  # max docs per (band_id, band_hash) bucket before demotion
+BM25_K1 = 1.2
+BM25_B = 0.75
+SEG_N = 5  # tokens per (non-overlapping) rewrite span
+DSIR_BUCKETS = 256  # hashed-unigram feature buckets
+PPL_BINS = 512  # fine equal-width bins feeding the tertile map
+# 3 md5-derived hash rows x 256 counters = 768 cells total, independent
+# of stream size: eps ~ e/256 ~ 1% of the stream length as the
+# worst-case overcount at delta ~ e^-3.
+CMS_ROWS = 3
+CMS_WIDTH = 256
 
 
 def exact_dedup(df: DataFrame, content_col: str, id_col: str) -> DataFrame:
@@ -66,86 +98,111 @@ def exact_dedup(df: DataFrame, content_col: str, id_col: str) -> DataFrame:
     )
 
 
-def minhash_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    *,
-    n_hashes: int = 8,
-    n_bands: int = 4,
-    shingle_n: int = 3,
-    threshold: float = 0.5,
-) -> DataFrame:
-    """Near-duplicate pairs (id_a, id_b, jaccard) via MinHash banding.
+def _signature_cols() -> list:
+    """minhash_i = min over shingles of md5('i:' || shingle), over a
+    frame with an ``sh`` shingle-array column."""
+    return [
+        F.array_min(F.transform(F.col("sh"), lambda s: salted_md5(s, i))).alias(
+            f"sig_{i}"
+        )
+        for i in range(N_MINHASH)
+    ]
 
-    The banded self-join bounds the candidate space (never all-pairs);
-    exact Jaccard verifies candidates only (cf. ``dedup.py``).
-    ``n_hashes`` must be divisible by ``n_bands``.
-    """
-    rows = n_hashes // n_bands
-    toks = F.split(F.lower(F.col(text_col)), " ")
-    sh = df.select(
-        F.col(id_col).alias("__id"),
-        word_shingles(toks, shingle_n).alias("__sh"),
-    ).filter(F.size("__sh") > 0)
-    def _sig(i: int):
-        # one-parameter closure: a `lambda s, i=i` would be treated by
-        # pyspark as an (element, index) lambda and the index column
-        # would silently replace the salt
-        return F.array_min(
-            F.transform(F.col("__sh"), lambda s: salted_md5(s, i))
-        ).alias(f"__sig_{i}")
 
-    sigs = sh.select("__id", "__sh", *[_sig(i) for i in range(n_hashes)])
-    banded = sigs.select(
-        "__id",
-        "__sh",
-        F.posexplode(
-            F.array(
-                *[
-                    F.md5(
-                        F.concat_ws(
-                            "|",
-                            *[
-                                F.col(f"__sig_{b * rows + r}")
-                                for r in range(rows)
-                            ],
-                        )
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("__band_id", "__band_hash"),
+def _band_cols() -> list:
+    """band_j = md5(sig_{2j} || sig_{2j+1}) — 2 rows per band."""
+    return [
+        F.md5(F.concat(F.col(f"sig_{2 * j}"), F.col(f"sig_{2 * j + 1}"))).alias(
+            f"band_{j}"
+        )
+        for j in range(N_BANDS)
+    ]
+
+
+def _capped_candidate_pairs(sh: DataFrame) -> DataFrame:
+    """Given a (materialized) ``(doc_id, sh)`` shingle frame, return the
+    distinct ``(doc_a, doc_b)`` band candidates (doc_a < doc_b) that
+    survive BAND_CAP demotion: buckets holding more than BAND_CAP docs
+    are dropped BEFORE any pair materializes (a k-member bucket
+    contributes k² candidates, so one boilerplate band can dominate
+    the job — SCALE.md §12 measured a 30,150-doc bucket).  Demoted
+    content still pairs through its OTHER bands.  The LEAN melt
+    (doc_id, band_id, band_hash — no shingle payload) is checkpointed
+    once and feeds the cap count plus both self-join sides."""
+    sigs = sh.select("doc_id", *_signature_cols())
+    melted = sigs.select(
+        "doc_id", F.posexplode(F.array(*_band_cols())).alias("band_id", "band_hash")
+    ).localCheckpoint(eager=True)
+    keep = (
+        melted.groupBy("band_id", "band_hash")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .filter(F.col("n") <= BAND_CAP)
+        .select("band_id", "band_hash")
     )
-    a = banded.select(
-        F.col("__id").alias("id_a"),
-        F.col("__sh").alias("__sh_a"),
-        "__band_id",
-        "__band_hash",
+    capped = melted.join(keep, ["band_id", "band_hash"])
+    a = capped.select(F.col("doc_id").alias("doc_a"), "band_id", "band_hash")
+    b = capped.select(
+        F.col("doc_id").alias("doc_b"),
+        F.col("band_id").alias("band_id_b"),
+        F.col("band_hash").alias("band_hash_b"),
     )
-    b = banded.select(
-        F.col("__id").alias("id_b"),
-        F.col("__sh").alias("__sh_b"),
-        F.col("__band_id").alias("__band_id_b"),
-        F.col("__band_hash").alias("__band_hash_b"),
-    )
-    cand = (
+    return (
         a.join(
             b,
-            (F.col("__band_id") == F.col("__band_id_b"))
-            & (F.col("__band_hash") == F.col("__band_hash_b"))
-            & (F.col("id_a") < F.col("id_b")),
+            (F.col("band_id") == F.col("band_id_b"))
+            & (F.col("band_hash") == F.col("band_hash_b"))
+            & (F.col("doc_a") < F.col("doc_b")),
         )
-        .select("id_a", "id_b", "__sh_a", "__sh_b")
+        .select("doc_a", "doc_b")
         .distinct()
     )
-    jac = F.size(F.array_intersect("__sh_a", "__sh_b")).cast(
-        "double"
-    ) / F.size(F.array_union("__sh_a", "__sh_b"))
-    return (
-        cand.select("id_a", "id_b", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
+
+
+def minhash_pairs(
+    df: DataFrame, id_col: str, text_col: str, *, threshold: float = 0.5
+) -> DataFrame:
+    """Near-duplicate pairs (id_a, id_b, jaccard) via MinHash banding
+    over distinct SHINGLE_N-word shingles of the lowercased text
+    (N_MINHASH permutations, N_BANDS bands).
+
+    The capped banded self-join bounds the candidate space (never
+    all-pairs, and no hot bucket above BAND_CAP members); exact
+    Jaccard verifies candidates only.  A document below the shingle
+    width has no shingles and never pairs.  Two materializations: the
+    shingle frame (feeds the minhash AND the two verification joins)
+    and the lean band melt; shingles travel into the pair space only
+    for surviving candidates.
+    """
+    toks = tokens(F.col(text_col))
+    # The predicate is on TOKEN COUNT, before the shingle projection —
+    # filtering on size(sh) AFTER it lets Catalyst push the filter
+    # through the project and compute word_shingles twice.
+    # len(tokens) >= SHINGLE_N <=> len(sh) >= 1.
+    sh = (
+        df.filter(F.size(toks) >= SHINGLE_N)
+        .select(
+            F.col(id_col).alias("doc_id"),
+            word_shingles(toks, SHINGLE_N).alias("sh"),
+        )
+        .localCheckpoint(eager=True)
     )
+    verified = (
+        _capped_candidate_pairs(sh)
+        .join(
+            sh.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a")),
+            "doc_a",
+        )
+        .join(
+            sh.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b")),
+            "doc_b",
+        )
+    )
+    jac = F.size(F.array_intersect("sh_a", "sh_b")).cast("double") / F.size(
+        F.array_union("sh_a", "sh_b")
+    )
+    return verified.select(
+        F.col("doc_a").alias("id_a"), F.col("doc_b").alias("id_b"), jac.alias("jaccard")
+    ).filter(F.col("jaccard") >= threshold)
 
 
 def lsh_cosine_bucket(
@@ -388,8 +445,6 @@ def shard_assign(
     """Deterministic md5 shard id + dense position within the shard —
     a global random permutation with every shard's ordering computed
     in parallel (cf. ``curation.training_shard_assignment``)."""
-    from scache_spark.functions import hash64
-
     keyed = df.withColumn(
         "__k",
         hash64(F.concat(F.lit(f"{salt}:"), F.col(id_col).cast("string"))),
@@ -417,8 +472,6 @@ def train_val_test_split(
     ``group_col`` (e.g. a duplicate-cluster id) the WHOLE group moves
     as a unit — the leakage-safe posture (cf. ``leakage_safe_split``):
     near-duplicates can never straddle the train/eval boundary."""
-    from scache_spark.functions import hash64
-
     key = F.col(group_col) if group_col else F.col(id_col)
     pct = F.pmod(
         hash64(F.concat(F.lit(f"{salt}:"), key.cast("string"))), F.lit(100)
@@ -435,42 +488,61 @@ def bm25_score(
     df: DataFrame,
     text_col: str,
     id_col: str,
-    query_terms: list[str],
+    query_terms: list[str] | Callable[[DataFrame], DataFrame],
     k: int = 20,
-    k1: float = 1.2,
-    b: float = 0.75,
 ) -> DataFrame:
-    """BM25 top-k retrieval for one query over an arbitrary corpus.
+    """BM25 top-k retrieval for one query over an arbitrary corpus
+    (k1=BM25_K1, b=BM25_B, Lucene's +1 idf floor so weights stay
+    positive).
 
-    Returns ``(id_col, bm25)`` for the k best documents.  Plan shape:
-    text tokenizes map-side to (id, tok, tf); corpus stats (N, avgdl)
-    are a broadcast 1-row aggregate; the term join broadcasts the
-    literal query frame; top-k is TakeOrderedAndProject on the
-    ROUNDED score (total order, ties by id).
+    ``query_terms`` is a list of terms, or a function from the
+    corpus document-frequency frame ``(tok, df)`` to the query's rows
+    of it (a query that derives its terms from the corpus itself).
+    Returns ``(id_col, bm25)`` for the k best documents.
+
+    Plan shape: the corpus tokenizes exactly once into a FLAT
+    ``(id, tok, tf, dl)`` table, materialized once — dl attaches via
+    an id-partitioned window on the same exchange, so document length
+    needs no separate shuffle of the token stream, and no
+    large-vocabulary document can materialize an unbounded row.
+    Corpus N/avgdl are a broadcast 1-row aggregate; the query terms
+    are a broadcast frame that prunes tf map-side, so only query-term
+    hits reach the scoring aggregate and per-doc cost is bounded by
+    the query length.  Top-k is TakeOrderedAndProject on the ROUNDED
+    score (total order, ties by id).
     """
-    spark = df.sparkSession
+    toks = df.select(
+        F.col(id_col), F.explode(tokens(F.col(text_col))).alias("tok")
+    ).filter(F.col("tok") != "")
     tf = (
-        df.select(F.col(id_col), F.explode(F.split(F.lower(text_col), " ")).alias("tok"))
-        .filter(F.col("tok") != "")
-        .groupBy(id_col, "tok")
+        toks.groupBy(id_col, "tok")
         .agg(F.count(F.lit(1)).cast("double").alias("tf"))
+        .withColumn("dl", F.sum("tf").over(Window.partitionBy(id_col)))
+        .localCheckpoint(eager=True)
     )
-    dlen = tf.groupBy(id_col).agg(F.sum("tf").alias("dl"))
-    stats = dlen.agg(
-        F.count(F.lit(1)).cast("double").alias("n_docs"), F.avg("dl").alias("avgdl")
+    stats = (
+        tf.groupBy(id_col)
+        .agg(F.first("dl").alias("dl"))
+        .agg(
+            F.count(F.lit(1)).cast("double").alias("n_docs"),
+            F.avg("dl").alias("avgdl"),
+        )
     )
     dfreq = tf.groupBy("tok").agg(F.count(F.lit(1)).cast("double").alias("df"))
-    q = spark.createDataFrame([(t.lower(),) for t in query_terms], ["tok"]).join(
-        dfreq, "tok"
-    )
+    if callable(query_terms):
+        q = query_terms(dfreq)
+    else:
+        q = df.sparkSession.createDataFrame(
+            [(t.lower(),) for t in query_terms], "tok string"
+        ).join(dfreq, "tok")
+    hits = tf.join(F.broadcast(q), "tok")
     idf = F.log((F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0)
-    sat = (F.col("tf") * (k1 + 1.0)) / (
-        F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl"))
+    sat = (F.col("tf") * (BM25_K1 + 1.0)) / (
+        F.col("tf")
+        + BM25_K1 * (1.0 - BM25_B + BM25_B * F.col("dl") / F.col("avgdl"))
     )
     return (
-        tf.join(F.broadcast(q), "tok")
-        .join(dlen, id_col)
-        .crossJoin(F.broadcast(stats))
+        hits.crossJoin(F.broadcast(stats))
         .groupBy(id_col)
         .agg(F.round(F.sum(idf * sat), 6).alias("bm25"))
         .orderBy(F.desc("bm25"), F.asc(id_col))
@@ -487,23 +559,27 @@ def semantic_dedup(
 ) -> DataFrame:
     """SemDeDup-style near-duplicate detection blocked by nearest
     centroid (``centroids``: (cell, centroid) — e.g. k-means output).
+    Returns ``(dup_id, cell, canonical_id, max_cosine)``.
 
     Each duplicate maps to the MIN surviving id among its >=threshold
-    within-cell partners.  Assignment is a broadcast-K min-struct
-    aggregate (the corpus never shuffles for it); norms precompute
-    before the pair join so each pair costs one dot product.
+    within-cell partners.  Vectors without a defined cosine — NULL,
+    a NULL/NaN/infinite element, or zero norm — are excluded
+    (``functions.cosine_defined``).  Assignment is a broadcast-K
+    min-struct aggregate (the corpus never shuffles for it; distance
+    ties break by cell id).  The assigned frame feeds both sides of
+    the within-cell self-join, so it is materialized once with each
+    vector's norm, and each pair then costs one dot product —
+    dot/(na*nb) is the same IEEE operations as ``vec_cosine``.
     """
-    from scache_spark.functions import vec_dot, vec_norm
-
-    diffs = F.zip_with(
-        F.col(vec_col),
-        F.col("centroid"),
-        lambda x, y: (x.cast("double") - y.cast("double"))
-        * (x.cast("double") - y.cast("double")),
-    )
-    d2 = F.aggregate(diffs, F.lit(0.0), lambda acc, x: acc + x)
-    scored = df.crossJoin(F.broadcast(centroids)).select(
-        F.col(id_col), F.col(vec_col), F.col("cell"), d2.alias("d2")
+    scored = (
+        df.where(cosine_defined(F.col(vec_col)))
+        .crossJoin(F.broadcast(centroids))
+        .select(
+            F.col(id_col),
+            F.col(vec_col),
+            F.col("cell"),
+            vec_l2sq(F.col(vec_col), F.col("centroid")).alias("d2"),
+        )
     )
     assigned = (
         scored.groupBy(id_col, vec_col)
@@ -514,6 +590,7 @@ def semantic_dedup(
             F.col("best.cell").alias("cell"),
             vec_norm(F.col(vec_col)).alias("nrm"),
         )
+        .localCheckpoint(eager=True)
     )
     a = assigned.select(
         F.col("cell"),
@@ -544,18 +621,24 @@ def semantic_dedup(
     )
 
 
-def span_dedup_rewrite(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    *,
-    span_tokens: int = 5,
-    min_docs: int = 2,
-) -> DataFrame:
-    """C4-style corpus REWRITE: remove every ``span_tokens``-token
-    span that occurs in >= ``min_docs`` distinct documents from all
-    but the lowest-id occurrence, and return (id_col, text_col) with
-    the rewritten text (surviving spans rejoined in order).
+def _span_segments(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(id_col, seg_idx, seg): consecutive non-overlapping SEG_N-token
+    spans of the lowercased whitespace token stream (last span may be
+    shorter).  Built with sequence+transform+slice so it runs in
+    codegen; oracles mirror it with range()+list slicing."""
+    toks = tokens(F.col(text_col))
+    segs = F.transform(
+        F.sequence(F.lit(1), F.size(toks), F.lit(SEG_N)),
+        lambda s: F.concat_ws(" ", F.slice(toks, s, SEG_N)),
+    )
+    return df.select(id_col, F.posexplode(segs).alias("seg_idx", "seg"))
+
+
+def span_dedup_rewrite(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """C4-style corpus REWRITE: remove every SEG_N-token span that
+    occurs in >= 2 distinct documents from all but the lowest-id
+    occurrence, and return (id_col, text_col) with the rewritten
+    text (surviving spans rejoined in order).
 
     Scale shape (cf. the oracle-checked ``corpus.dedup_span_rewrite``,
     which reports the same pass as per-doc accounting): one explode,
@@ -563,27 +646,20 @@ def span_dedup_rewrite(
     pairs), one shuffle join back on span, one per-doc ordered
     reassembly — no pair space, no window over the corpus.
     """
-    toks = F.split(F.lower(F.col(text_col)), " ")
-    segs = F.transform(
-        F.sequence(F.lit(1), F.size(toks), F.lit(span_tokens)),
-        lambda s: F.concat_ws(" ", F.slice(toks, s, span_tokens)),
-    )
-    seg = df.select(
-        F.col(id_col), F.posexplode(segs).alias("__idx", "__seg")
-    )
-    freq = seg.groupBy("__seg").agg(
+    seg = _span_segments(df, id_col, text_col)
+    freq = seg.groupBy("seg").agg(
         F.countDistinct(id_col).alias("__nd"),
         F.min(id_col).alias("__keeper"),
     )
-    kept = seg.join(freq, "__seg").filter(
-        (F.col("__nd") < min_docs) | (F.col(id_col) == F.col("__keeper"))
+    kept = seg.join(freq, "seg").filter(
+        (F.col("__nd") < 2) | (F.col(id_col) == F.col("__keeper"))
     )
     rewritten = kept.groupBy(id_col).agg(
         F.concat_ws(
             " ",
             F.transform(
-                F.array_sort(F.collect_list(F.struct("__idx", "__seg"))),
-                lambda s: s["__seg"],
+                F.array_sort(F.collect_list(F.struct("seg_idx", "seg"))),
+                lambda s: s["seg"],
             ),
         ).alias(text_col)
     )
@@ -600,80 +676,83 @@ def span_dedup_rewrite(
 
 
 def dsir_score(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    is_target: Column,
-    *,
-    n_buckets: int = 256,
+    df: DataFrame, id_col: str, text_col: str, is_target: Column
 ) -> DataFrame:
     """DSIR importance weight (Xie et al. 2023) of every document
     against the target subset selected by ``is_target``: hashed-unigram
-    bucket counts, add-one smoothed, per-doc sum of ln(p_t/p_r).
-    Returns (id_col, log_weight); rank descending and keep the head to
-    importance-resample.  Model state is one ``n_buckets``-row
-    broadcast; everything else partial-aggregates (cf. the
-    oracle-checked ``corpus.dsir_importance_weights``)."""
-    from scache_spark.functions import hash64
+    bucket counts (DSIR_BUCKETS buckets), add-one smoothed, per-doc
+    sum over tokens of ln(p_t/p_r).  Returns (id_col, log_weight);
+    rank descending and keep the head to importance-resample.
 
+    A doc's score is sum over buckets of n_occurrences·logratio, so
+    the token stream collapses to per-(doc, bucket) counts FIRST and
+    that frame is materialized: the model counts roll up from it and
+    the scoring weights it, so the corpus tokenizes and md5-hashes
+    exactly once.  The materialized frame is bounded by docs ×
+    DSIR_BUCKETS rows — linear in doc count; if executor storage
+    pressures at scale, materialize only the bucket-count model.
+    Model state is one DSIR_BUCKETS-row broadcast; everything else
+    partial-aggregates.  Rounded to 6 decimals (ln differs by ~1 ulp
+    between libm and the JVM).
+    """
     feat = df.select(
         F.col(id_col),
         is_target.alias("__t"),
-        F.explode(F.split(F.lower(F.col(text_col)), " ")).alias("__w"),
-    ).select(id_col, "__t", (hash64("__w") % n_buckets).alias("__b"))
-    counts = feat.groupBy("__b").agg(
-        F.sum(F.when(F.col("__t"), 1).otherwise(0)).alias("__ct"),
-        F.count(F.lit(1)).alias("__cr"),
+        F.explode(tokens(F.col(text_col))).alias("__w"),
+    ).select(id_col, "__t", (hash64("__w") % DSIR_BUCKETS).alias("__b"))
+    db = (
+        feat.groupBy(id_col, "__t", "__b")
+        .agg(F.count(F.lit(1)).alias("__n"))
+        .localCheckpoint(eager=True)
+    )
+    counts = db.groupBy("__b").agg(
+        F.sum(F.when(F.col("__t"), F.col("__n")).otherwise(0)).alias("__ct"),
+        F.sum("__n").alias("__cr"),
     )
     totals = counts.agg(F.sum("__ct").alias("__nt"), F.sum("__cr").alias("__nr"))
     ratios = counts.crossJoin(F.broadcast(totals)).select(
         "__b",
         (
-            F.log((F.col("__ct") + 1.0) / (F.col("__nt") + n_buckets))
-            - F.log((F.col("__cr") + 1.0) / (F.col("__nr") + n_buckets))
+            F.log((F.col("__ct") + 1.0) / (F.col("__nt") + DSIR_BUCKETS))
+            - F.log((F.col("__cr") + 1.0) / (F.col("__nr") + DSIR_BUCKETS))
         ).alias("__lr"),
     )
     return (
-        feat.join(F.broadcast(ratios), "__b")
+        db.join(F.broadcast(ratios), "__b")
         .groupBy(id_col)
-        .agg(F.round(F.sum("__lr"), 6).alias("log_weight"))
+        .agg(F.round(F.sum(F.col("__n") * F.col("__lr")), 6).alias("log_weight"))
     )
 
 
-def perplexity_buckets(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    *,
-    fine_bins: int = 512,
-) -> DataFrame:
+def perplexity_buckets(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """CCNet-style quality bucketing (Wenzek et al. 2020): score each
     document's unigram-LM surprisal against the corpus itself and
     assign it to the 'head' / 'middle' / 'tail' third of the
-    distribution.  Returns (id_col, surprisal, bucket).
+    distribution.  Returns (id_col, <the other columns of df>,
+    surprisal, bucket): every column besides ``text_col`` passes
+    through, one value per id.
 
     The tertile boundaries need NO global sort: surprisals land in
-    ``fine_bins`` equal-width bins (broadcast min/max), the tiny
+    PPL_BINS equal-width bins (broadcast min/max), the tiny
     cumulative histogram maps bins to tertiles with integer
-    arithmetic, and docs join the bin->bucket map broadcast (cf. the
-    oracle-checked ``corpus.ccnet_perplexity_buckets``)."""
-    toks = df.select(
-        F.col(id_col), F.explode(F.split(F.lower(F.col(text_col)), " ")).alias("__w")
-    )
-    vocab = toks.groupBy("__w").agg(F.count(F.lit(1)).alias("__n"))
-    total = toks.agg(F.count(F.lit(1)).alias("__nt"))
+    arithmetic, and docs join the bin->bucket map broadcast.  The
+    per-doc surprisal frame and the histogram are each materialized
+    once: four downstream branches would otherwise recompute the
+    tokenize+vocab-join subtree."""
+    carry = [c for c in df.columns if c not in (id_col, text_col)]
+    toks = df.select(id_col, *carry, F.explode(tokens(F.col(text_col))).alias("__w"))
+    vocab = toks.groupBy("__w").agg(F.count(F.lit(1)).cast("long").alias("__nw"))
+    total = toks.agg(F.count(F.lit(1)).cast("long").alias("__nt"))
     perdoc = (
         toks.join(F.broadcast(vocab), "__w")
         .crossJoin(F.broadcast(total))
         .groupBy(id_col)
         .agg(
-            F.round(F.avg(-F.log(F.col("__n") * 1.0 / F.col("__nt"))), 6).alias(
-                "surprisal"
-            )
+            *[F.any_value(F.col(c)).alias(c) for c in carry],
+            F.round(
+                F.avg(-F.log(F.col("__nw") * 1.0 / F.col("__nt"))), 6
+            ).alias("surprisal"),
         )
-        # materialized once: four downstream branches would otherwise
-        # recompute the tokenize+vocab-join subtree (cf. the registry
-        # twin ccnet_perplexity_buckets)
         .localCheckpoint(eager=True)
     )
     rng = perdoc.agg(F.min("surprisal").alias("__mn"), F.max("surprisal").alias("__mx"))
@@ -682,23 +761,24 @@ def perplexity_buckets(
     # doc silently 'tail'); the epsilon floor keeps the arithmetic
     # finite, and the __deg flag short-circuits the single-value case
     # to 'head' (a corpus with one quality level IS its own head)
-    width = F.greatest(
-        (F.col("__mx") - F.col("__mn")), F.lit(1e-12)
-    ) / float(fine_bins)
+    width = F.greatest(F.col("__mx") - F.col("__mn"), F.lit(1e-12)) / float(PPL_BINS)
     binned = perdoc.crossJoin(F.broadcast(rng)).select(
         id_col,
+        *carry,
         "surprisal",
         F.least(
             F.floor((F.col("surprisal") - F.col("__mn")) / width),
-            F.lit(fine_bins - 1),
+            F.lit(PPL_BINS - 1),
         )
         .cast("int")
         .alias("__bin"),
         (F.col("__mx") == F.col("__mn")).alias("__deg"),
     )
-    hist = binned.groupBy("__bin").agg(F.count(F.lit(1)).alias("__c"))
-    from scache_spark.functions import bounded_window
-
+    hist = (
+        binned.groupBy("__bin")
+        .agg(F.count(F.lit(1)).alias("__c"))
+        .localCheckpoint(eager=True)
+    )
     cum = hist.select(
         "__bin",
         F.sum("__c")
@@ -709,8 +789,8 @@ def perplexity_buckets(
         )
         .alias("__cum"),
     )
-    tot = hist.agg(F.sum("__c").alias("__n"))
-    tert = F.expr("CAST((3 * __cum + __n - 1) div __n AS INT)")
+    tot = hist.agg(F.sum("__c").alias("__tot"))
+    tert = F.expr("CAST((3 * __cum + __tot - 1) div __tot AS INT)")
     bmap = cum.crossJoin(F.broadcast(tot)).select(
         "__bin",
         F.when(tert == 1, "head").when(tert == 2, "middle").otherwise("tail").alias(
@@ -719,63 +799,60 @@ def perplexity_buckets(
     )
     return binned.join(F.broadcast(bmap), "__bin").select(
         id_col,
+        *carry,
         "surprisal",
         F.when(F.col("__deg"), "head").otherwise(F.col("bucket")).alias("bucket"),
     )
 
 
-def _cms_cell(col: Column, row: int, width: int) -> Column:
-    """md5-derived counter index for one sketch row (the same hash
-    family the registry's ``heavy_hitters_cms`` oracle replicates)."""
+def _cms_cell(col: Column, row: int) -> Column:
+    """60-bit md5 hash of ``row:key`` reduced to a counter index of one
+    sketch row (the hash family the registry's oracles replicate)."""
     h = F.conv(
         F.substring(salted_md5(col.cast("string"), row), 1, 15), 16, 10
     ).cast("long")
-    return (h % width).cast("int")
+    return (h % CMS_WIDTH).cast("int")
 
 
-def cms_sketch(
-    df: DataFrame, key_col: str, rows: int = 3, width: int = 256
-) -> DataFrame:
+def cms_increments(key: Column) -> Column:
+    """The Count-Min build/probe fan-out as ONE expression: an explode
+    of the CMS_ROWS ``(r, cell)`` increment structs of a key column.
+    Every sketch site — ``cms_sketch``, ``cms_estimate`` and the
+    registry's batch and streaming sketches — uses it, so the
+    hash-parity-critical cell derivation lives in one place."""
+    return F.explode(
+        F.array(
+            *[
+                F.struct(F.lit(r).alias("r"), _cms_cell(key, r).alias("cell"))
+                for r in range(CMS_ROWS)
+            ]
+        )
+    )
+
+
+def cms_sketch(df: DataFrame, key_col: str) -> DataFrame:
     """Count-Min sketch of a key stream: ``(r, cell, cnt)``.
 
-    Scale shape: the ``rows`` increments per occurrence explode
+    Scale shape: the CMS_ROWS increments per occurrence explode
     in-map and the aggregate map-side-combines down to at most
-    ``rows * width`` partials per partition — the shuffle ships KB
-    regardless of stream size, and two sketches built with the same
-    (rows, width) MERGE by summing matching cells (so shards sign
-    independently, cf. ``minhash_merge_property``).  Worst-case
-    overcount is ~e/width of the stream length at confidence
-    1 - e^-rows (Cormode-Muthukrishnan 2005).
+    CMS_ROWS * CMS_WIDTH partials per partition — the shuffle ships
+    KB regardless of stream size, and two sketches MERGE by summing
+    matching cells (so shards sign independently, cf.
+    ``minhash_merge_property``).  Worst-case overcount is
+    ~e/CMS_WIDTH of the stream length at confidence 1 - e^-CMS_ROWS
+    (Cormode-Muthukrishnan 2005).
     """
-    incs = df.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(r).alias("r"),
-                        _cms_cell(F.col(key_col), r, width).alias("cell"),
-                    )
-                    for r in range(rows)
-                ]
-            )
-        ).alias("rc")
-    )
+    incs = df.select(cms_increments(F.col(key_col)).alias("rc"))
     return incs.groupBy(
         F.col("rc.r").alias("r"), F.col("rc.cell").alias("cell")
     ).agg(F.count(F.lit(1)).alias("cnt"))
 
 
-def cms_estimate(
-    sketch: DataFrame,
-    keys: DataFrame,
-    key_col: str,
-    rows: int = 3,
-    width: int = 256,
-) -> DataFrame:
+def cms_estimate(sketch: DataFrame, keys: DataFrame, key_col: str) -> DataFrame:
     """Frequency estimates (``est_cnt`` column appended to ``keys``)
-    from a ``cms_sketch`` built with the same (rows, width).
+    from a ``(r, cell, cnt)`` Count-Min sketch.
 
-    The sketch is at most ``rows * width`` cells → BROADCAST; the
+    The sketch is at most CMS_ROWS * CMS_WIDTH cells → BROADCAST; the
     probe is a map-side join + min-over-rows aggregate grouped by
     the key frame's columns.  Estimates are one-sided:
     est_cnt >= true count, always.  Keys absent from the stream may
@@ -788,18 +865,7 @@ def cms_estimate(
     """
     probe_cols = keys.columns
     probes = keys.select(
-        *probe_cols,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(r).alias("r"),
-                        _cms_cell(F.col(key_col), r, width).alias("cell"),
-                    )
-                    for r in range(rows)
-                ]
-            )
-        ).alias("__cms_rc"),
+        *probe_cols, cms_increments(F.col(key_col)).alias("__cms_rc")
     )
     sk = sketch.select(
         F.col("r").alias("__cms_r"),
@@ -818,10 +884,8 @@ def cms_estimate(
     )
 
 
-def edit_distance_pairs(
-    df: DataFrame, id_col: str, text_col: str, *, max_dist: int = 1
-) -> DataFrame:
-    """All pairs within ``max_dist`` Levenshtein edits, without a
+def edit_distance_pairs(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """All pairs within ONE Levenshtein edit, without a
     blocking key and without the O(n²) pair space (FastSS deletion
     neighborhoods; cf. registry ``fastss_edit1_pairs``).
 
@@ -830,10 +894,10 @@ def edit_distance_pairs(
     variant sets intersect, so candidates come from an equi-join on
     O(n·L) variant keys (codegen substr/transform — no UDF) and a
     levenshtein verify touches only survivors.  Verify cost scales
-    with true-near-match density, not corpus size².  Only
-    ``max_dist=1`` is supported: k-deletion neighborhoods grow
-    O(L^k) per string, a different cost regime the caller should opt
-    into via repeated application or LSH instead.
+    with true-near-match density, not corpus size².  Distances above
+    1 are out of scope: k-deletion neighborhoods grow O(L^k) per
+    string, a different cost regime (use ``minhash_pairs`` for looser
+    similarity).
 
     Edit distance is defined over UTF-8 BYTES (SCALE.md §16): the
     verify runs on a byte-faithful latin-1 decode of the UTF-8
@@ -847,12 +911,6 @@ def edit_distance_pairs(
     Returns (id_a, id_b, edit_dist) with id_a < id_b, duplicates
     collapsed.  NULL text never joins (variant key of NULL is NULL).
     """
-    if max_dist != 1:
-        raise ValueError(
-            f"edit_distance_pairs supports max_dist=1 only, got {max_dist}"
-            " — deletion neighborhoods grow O(L^k); use minhash_pairs"
-            " for looser similarity"
-        )
     s = F.col(text_col)
     dels = F.transform(
         F.sequence(F.lit(1), F.length(s)),
@@ -878,7 +936,7 @@ def edit_distance_pairs(
         .where(F.col("__k") < F.col("__k2"))
         .select("__k", "__k2", "__nm", "__nm2")
         .distinct()
-        .where(byte_dist <= max_dist)
+        .where(byte_dist <= 1)
         .select(
             F.col("__k").alias("id_a"),
             F.col("__k2").alias("id_b"),
@@ -933,18 +991,22 @@ def auc_rank(df: DataFrame, score_col: str, label_col: str) -> DataFrame:
 
     The frame folds map-side to one (score, n, n_pos) row per
     DISTINCT score; average ranks come from a DISTRIBUTED midrank
-    prefix sum (r9 — distinct-score cardinality is caller-controlled
-    and may be SF-proportional, so no global window): scores bucket
-    by a sign-aware log-scale key (monotone in the score because
-    ``java.lang.Math.log`` is semi-monotonic; ~1.57% relative width,
-    hard-capped at ~382k possible buckets independent of data),
-    cumsums run within each bucket in parallel, and a broadcast
-    bucket-total prefix table supplies cross-bucket offsets — the
-    same integers as a naive global cumulative, since the bucket
-    never splits a tie and never reorders the total order.  Ties get
-    the midrank and AUC = (R+ - np(np+1)/2) / (np*nn).  Single-class
-    input (np or nn zero) returns NULL auc/gini rather than dividing
-    by zero; rows with NULL score, NaN score, or NULL label are
+    prefix sum (distinct-score cardinality is caller-controlled and
+    may be SF-proportional, so no global window): scores bucket by a
+    sign-aware log-scale key (monotone in the score because
+    ``java.lang.Math.log`` is semi-monotonic; ~0.39% relative width,
+    at most ~745k possible buckets independent of data), and
+    cumsums run within each bucket in parallel.  The rank-sum
+    distributes over the bucket offset —
+    ``sum n_pos*(off_b + cum_in + (n+1)/2) = off_b*sum(n_pos) +
+    sum(n_pos*(cum_in + (n+1)/2))`` — so per-bucket PARTIALS fold in
+    the same pass as the within-bucket window, and only the
+    bucket-partial table crosses the bounded prefix window over
+    buckets.  Every addend is an exactly representable half-integer,
+    so the result equals a naive global cumulative's.  Ties get the
+    midrank and AUC = (R+ - np(np+1)/2) / (np*nn).  Single-class
+    or empty input (np or nn zero) returns NULL auc/gini rather than
+    dividing by zero; rows with NULL score, NaN score, or NULL label are
     excluded (rank is undefined on NULL, and NaN has no place on a
     score axis).
     """
@@ -954,15 +1016,9 @@ def auc_rank(df: DataFrame, score_col: str, label_col: str) -> DataFrame:
         & ~F.isnan(qc)
         & F.col(label_col).isNotNull()
     )
-    by_q = (
-        m.groupBy(qc.alias("__q"))
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("__n"),
-            F.sum(F.col(label_col).cast("long")).cast("long").alias("__np"),
-        )
-        # feeds two branches (within-bucket cumsums + bucket totals);
-        # truncate lineage so the caller's input plan runs once
-        .localCheckpoint(eager=False)
+    by_q = m.groupBy(qc.alias("__q")).agg(
+        F.count(F.lit(1)).cast("long").alias("__n"),
+        F.sum(F.col(label_col).cast("long")).cast("long").alias("__np"),
     )
     # Order-preserving bucket of an arbitrary double: floor(256*ln|q|)
     # per sign half, clamped so +/-Infinity land in the extreme normal
@@ -992,31 +1048,34 @@ def auc_rank(df: DataFrame, score_col: str, label_col: str) -> DataFrame:
         .orderBy("__q")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    within = b.withColumn(
-        "__cum_in", F.coalesce(F.sum("__n").over(w_in), F.lit(0)).cast("long")
+    pb = (
+        b.withColumn(
+            "__cum_in",
+            F.coalesce(F.sum("__n").over(w_in), F.lit(0)).cast("long"),
+        )
+        .groupBy("__bkt")
+        .agg(
+            F.sum(
+                F.col("__np").cast("double")
+                * (F.col("__cum_in") + (F.col("__n") + 1) / 2.0)
+            ).alias("__ra"),
+            F.sum("__np").cast("long").alias("__np_b"),
+            F.sum("__n").cast("long").alias("__n_b"),
+        )
     )
-    btot = b.groupBy("__bkt").agg(F.sum("__n").cast("long").alias("__btot"))
     w_off = bounded_window("__bkt", "__bkt").rowsBetween(
         Window.unboundedPreceding, -1
     )
-    offsets = btot.select(
-        "__bkt",
-        F.coalesce(F.sum("__btot").over(w_off), F.lit(0))
-        .cast("long")
-        .alias("__off"),
-    )
-    ranked = within.join(F.broadcast(offsets), "__bkt").select(
-        "__n",
-        "__np",
-        (F.col("__off") + F.col("__cum_in")).cast("long").alias("__cum"),
-    )
-    tot = ranked.agg(
+    tot = pb.withColumn(
+        "__off", F.coalesce(F.sum("__n_b").over(w_off), F.lit(0)).cast("long")
+    ).agg(
         F.sum(
-            F.col("__np").cast("double")
-            * (F.col("__cum") + (F.col("__n") + 1) / 2.0)
+            F.col("__ra") + F.col("__off").cast("double") * F.col("__np_b")
         ).alias("__rpos"),
-        F.sum("__np").cast("long").alias("np"),
-        (F.sum("__n") - F.sum("__np")).cast("long").alias("nn"),
+        F.coalesce(F.sum("__np_b"), F.lit(0)).cast("long").alias("np"),
+        F.coalesce(F.sum("__n_b") - F.sum("__np_b"), F.lit(0))
+        .cast("long")
+        .alias("nn"),
     )
     auc = F.when((F.col("np") == 0) | (F.col("nn") == 0), F.lit(None)).otherwise(
         (F.col("__rpos") - F.col("np").cast("double") * (F.col("np") + 1) / 2.0)

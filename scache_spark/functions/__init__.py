@@ -114,6 +114,16 @@ def vec_cosine(a: Column, b: Column) -> Column:
     return vec_dot(a, b) / (vec_norm(a) * vec_norm(b))
 
 
+def vec_l2sq(a: Column, b: Column) -> Column:
+    """Squared L2 distance of two float arrays, accumulated in double
+    in element order (the oracle's list-comprehension sum)."""
+    diffs = F.zip_with(
+        a, b, lambda x, y: (x.cast("double") - y.cast("double"))
+        * (x.cast("double") - y.cast("double"))
+    )
+    return F.aggregate(diffs, F.lit(0.0), lambda acc, x: acc + x)
+
+
 EMB_DIM = 64
 """Expected embedding dimensionality of the corpus encoder.
 
@@ -146,13 +156,21 @@ def vector_ready(df, col: str = "embedding"):
     predicate removes non-finite vectors before any norm comparison
     so the ordering asymmetry can never matter."""
     c = F.col(col)
-    bad_elem = F.exists(
+    return df.filter(c.isNotNull() & (F.size(c) == EMB_DIM) & ~_bad_elem(c))
+
+
+def _bad_elem(c: Column) -> Column:
+    """Some element is NULL, NaN or infinite."""
+    return F.exists(
         c,
         lambda x: x.isNull()
         | F.isnan(x.cast("double"))
         | (F.abs(x.cast("double")) == F.lit(float("inf"))),
     )
-    return df.filter(c.isNotNull() & (F.size(c) == EMB_DIM) & ~bad_elem)
+
+
+def _sq_norm_positive(c: Column) -> Column:
+    return F.aggregate(c, F.lit(0.0), lambda a, x: a + x.cast("double") * x) > 0
 
 
 SQL_VECTOR_READY = (
@@ -202,10 +220,14 @@ def cosine_ready(df, col: str = "embedding"):
     The norm comparison is safe ONLY because vector_ready has already
     removed NaN/Inf elements (see its docstring for the NaN-ordering
     divergence between the engines)."""
-    sq = F.aggregate(
-        F.col(col), F.lit(0.0), lambda a, x: a + x.cast("double") * x
-    )
-    return vector_ready(df, col).filter(sq > 0)
+    return vector_ready(df, col).filter(_sq_norm_positive(F.col(col)))
+
+
+def cosine_defined(c: Column) -> Column:
+    """``cosine_ready``'s predicate for vectors of ANY dimension (the
+    composable API's frames are not the fixture encoder's): non-NULL,
+    every element non-NULL and finite, non-zero norm."""
+    return c.isNotNull() & ~_bad_elem(c) & _sq_norm_positive(c)
 
 
 SQL_COSINE_READY = (

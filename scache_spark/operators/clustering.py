@@ -21,12 +21,18 @@ whole per-iteration cost at 100 TB.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from scache_spark import api
 from scache_spark.catalog import load_table, widen_scan
-from scache_spark.functions import SQL_COSINE_READY, SQL_VECTOR_READY, vector_ready
+from scache_spark.functions import (
+    SQL_COSINE_READY,
+    SQL_VECTOR_READY,
+    vec_l2sq,
+    vector_ready,
+)
 from scache_spark.registry import register
 
 K = 16  # IVF cells / k-means k
@@ -39,14 +45,6 @@ def _sql_l2sq(a: str, b: str) -> str:
         f"* (CAST({a}[i] AS DOUBLE) - CAST({b}[i] AS DOUBLE)) "
         f"for i in range(1, {DIM} + 1)], 'sum')"
     )
-
-
-def _l2sq(a: Column, b: Column) -> Column:
-    diffs = F.zip_with(
-        a, b, lambda x, y: (x.cast("double") - y.cast("double"))
-        * (x.cast("double") - y.cast("double"))
-    )
-    return F.aggregate(diffs, F.lit(0.0), lambda acc, x: acc + x)
 
 
 def _centroids(
@@ -85,7 +83,7 @@ def _assign(vectors: DataFrame, centroids: DataFrame) -> DataFrame:
         "vec_id",
         "embedding",
         "cell",
-        _l2sq(F.col("embedding"), F.col("centroid")).alias("d2"),
+        vec_l2sq(F.col("embedding"), F.col("centroid")).alias("d2"),
     )
     best = scored.groupBy("vec_id", "embedding").agg(
         F.min(F.struct("d2", "cell")).alias("best")
@@ -175,7 +173,7 @@ def ann_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("cell") == F.col("q_cell")) & (F.col("vec_id") != 42)
     )
     return (
-        cand.select("vec_id", F.sqrt(_l2sq(F.col("embedding"), F.col("qv"))).alias("dist"))
+        cand.select("vec_id", F.sqrt(vec_l2sq(F.col("embedding"), F.col("qv"))).alias("dist"))
         .orderBy(F.col("dist").asc(), F.col("vec_id").asc())
         .limit(5)
     )
@@ -307,9 +305,10 @@ def kmeans_two_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     "cell, and the canonical-min aggregate is map-side combinable.",
 )
 def dedup_semantic_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from scache_spark.functions import cosine_ready, vec_dot, vec_norm
+    from scache_spark.functions import cosine_ready
 
-    # cosine contract (r6): NULL / zero-norm vectors cannot pair
+    # cosine contract (r6): NULL / zero-norm / wrong-dimension vectors
+    # cannot pair
     e = cosine_ready(load_table(spark, sf_dir, "embeddings"))
     # Planted copies via explode-over-variant-array (the augmented_docs
     # shape): ONE corpus scan emits each vector plus its optional
@@ -332,52 +331,14 @@ def dedup_semantic_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("v.vec_id", "v.embedding")
         .repartition(spark.sparkContext.defaultParallelism, "vec_id")
     )
-    # Precompute each vector's norm ONCE before the self-join: the
-    # per-pair cosine then costs one dot product + one multiply
-    # instead of three dot products (3x less arithmetic on the O(pairs)
-    # hot path; measured 7.2s -> ~3s at sf0.1).  dot/(na*nb) is the
-    # SAME IEEE operations on the same inputs as vec_cosine, so the
-    # oracle still matches bit-for-bit.
-    # The assigned frame feeds BOTH sides of the within-cell self-join;
-    # eager checkpoint so assignment (and the corpus scan under it)
-    # runs once, not once per side (dedup_minhash_pairs precedent).
-    assigned = (
-        _assign(aug, _centroids(spark, sf_dir))
-        .select("vec_id", "embedding", "cell")
-        .withColumn("nrm", vec_norm(F.col("embedding")))
-        .localCheckpoint(eager=True)
+    dups = api.semantic_dedup(
+        aug, "embedding", "vec_id", _centroids(spark, sf_dir), threshold=0.95
     )
-    a = assigned.select(
+    return dups.select(
+        "dup_id",
         "cell",
-        F.col("vec_id").alias("keep_id"),
-        F.col("embedding").alias("emb_a"),
-        F.col("nrm").alias("nrm_a"),
-    )
-    b = assigned.select(
-        F.col("cell").alias("cell_b"),
-        F.col("vec_id").alias("dup_id"),
-        F.col("embedding").alias("emb_b"),
-        F.col("nrm").alias("nrm_b"),
-    )
-    pairs = (
-        a.join(
-            b,
-            (F.col("cell") == F.col("cell_b")) & (F.col("keep_id") < F.col("dup_id")),
-        )
-        .select(
-            "dup_id",
-            "cell",
-            "keep_id",
-            (
-                vec_dot(F.col("emb_a"), F.col("emb_b"))
-                / (F.col("nrm_a") * F.col("nrm_b"))
-            ).alias("cos"),
-        )
-        .filter(F.col("cos") >= 0.95)
-    )
-    return pairs.groupBy("dup_id", "cell").agg(
-        F.min("keep_id").cast("long").alias("canonical_id"),
-        F.round(F.max("cos"), 6).alias("max_cosine"),
+        F.col("canonical_id").cast("long").alias("canonical_id"),
+        "max_cosine",
     )
 
 
@@ -482,7 +443,7 @@ def ann_ivf_nprobe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             "q_id",
             "vec_id",
             "cell",
-            _l2sq(F.col("embedding"), F.col("q_emb")).alias("d2q"),
+            vec_l2sq(F.col("embedding"), F.col("q_emb")).alias("d2q"),
         )
     )
     # All three rank stages stack on ONE q_id exchange: hash(q_id)
@@ -514,7 +475,7 @@ def ann_ivf_nprobe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "q_id",
             "cell",
-            _l2sq(F.col("centroid"), F.col("q_emb")).alias("d2c"),
+            vec_l2sq(F.col("centroid"), F.col("q_emb")).alias("d2c"),
         )
         .withColumn(
             "rn",

@@ -23,28 +23,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from scache_spark import api
+from scache_spark.api import DSIR_BUCKETS, PPL_BINS, SEG_N, _span_segments
 from scache_spark.catalog import load_table
 from scache_spark.functions import sql_hash64, tokens
 from scache_spark.registry import register
-
-SEG_N = 5  # tokens per (non-overlapping) span
-N_BUCKETS = 256  # hashed-feature buckets for DSIR
-
-
-def _segments(df: DataFrame) -> DataFrame:
-    """(doc_id, seg_idx, seg): consecutive non-overlapping SEG_N-token
-    spans of the lowercased whitespace token stream (last span may be
-    shorter).  Built with sequence+transform+slice so it runs in
-    codegen; the oracle mirrors it with range()+list slicing."""
-    toks = tokens(F.col("text"))
-    segs = F.transform(
-        F.sequence(F.lit(1), F.size(toks), F.lit(SEG_N)),
-        lambda s: F.concat_ws(" ", F.slice(toks, s, SEG_N)),
-    )
-    return df.select(
-        "doc_id", F.posexplode(segs).alias("seg_idx", "seg")
-    )
-
 
 _SQL_SEGMENTS = f"""
     toks AS (SELECT doc_id, string_split(lower(text), ' ') AS t
@@ -104,7 +87,7 @@ def dedup_span_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # countDistinct+min aggregate, and re-exchanged for the join.
     # nd = count(*) over the pair level IS the distinct-doc count.
     per_sd = (
-        _segments(d)
+        _span_segments(d, "doc_id", "text")
         .repartition("seg")
         .groupBy("seg", "doc_id")
         .agg(F.count(F.lit(1)).alias("n_occ"))
@@ -149,7 +132,7 @@ def dedup_span_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     feat AS (
       SELECT doc_id, source,
-             {sql_hash64("w")} % {N_BUCKETS} AS bucket
+             {sql_hash64("w")} % {DSIR_BUCKETS} AS bucket
       FROM tok
     ),
     counts AS (
@@ -163,8 +146,8 @@ def dedup_span_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     ratios AS (
       SELECT bucket,
-             ln((c_t + 1.0) / (n_t + {N_BUCKETS}))
-             - ln((c_r + 1.0) / (n_r + {N_BUCKETS})) AS logratio
+             ln((c_t + 1.0) / (n_t + {DSIR_BUCKETS}))
+             - ln((c_r + 1.0) / (n_r + {DSIR_BUCKETS})) AS logratio
       FROM counts, totals
     )
     SELECT doc_id, round(sum(r.logratio), 6) AS log_weight
@@ -175,16 +158,16 @@ def dedup_span_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("B24", "B16"),
     doc="DSIR importance weights (Xie et al. 2023): hashed-unigram "
-    f"bucket counts ({N_BUCKETS} buckets) for the target domain "
+    f"bucket counts ({DSIR_BUCKETS} buckets) for the target domain "
     "(source='src0') vs the raw corpus, add-one smoothed; each doc "
     "scores sum over tokens of ln(p_target/p_raw), and the top 20 "
     "docs by weight are the importance-resampling shortlist.  At "
-    f"100 TB: the model state is ONE {N_BUCKETS}-row log-ratio table "
+    f"100 TB: the model state is ONE {DSIR_BUCKETS}-row log-ratio table "
     "(a broadcast join onto the token stream), bucket counts and the "
     "per-doc sum are both map-side combinable, and the final top-20 "
     "is a TakeOrdered — corpus never passes through a window or a "
     "driver loop.  The r9 single-tokenize shape materializes the "
-    f"per-(doc, bucket) count table (<= docs x {N_BUCKETS} rows, in "
+    f"per-(doc, bucket) count table (<= docs x {DSIR_BUCKETS} rows, in "
     "practice ~docs x distinct-buckets-per-doc) via localCheckpoint — "
     "a footprint LINEAR in corpus doc count, traded for halving the "
     "corpus tokenize passes; if executor storage memory pressures at "
@@ -194,13 +177,10 @@ def dedup_span_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    scored = dsir_weights(d, F.col("source") == "src0")
+    scored = api.dsir_score(d, "doc_id", "text", F.col("source") == "src0")
     return scored.orderBy(F.col("log_weight").desc(), F.col("doc_id").asc()).limit(
         20
     )
-
-
-_PPL_BINS = 512  # fine equal-width bins feeding the tertile map
 
 
 @register(
@@ -221,9 +201,10 @@ _PPL_BINS = 512  # fine equal-width bins feeding the tertile map
     ),
     rng AS (SELECT min(s) AS mn, max(s) AS mx FROM perdoc),
     binned AS (
-      SELECT doc_id, lang, s,
-             CAST(least(floor((s - mn) / ((mx - mn) / {_PPL_BINS}.0)),
-                        {_PPL_BINS - 1}) AS INT) AS bin
+      SELECT doc_id, lang, s, mx = mn AS deg,
+             CAST(least(floor((s - mn)
+                              / (greatest(mx - mn, 1e-12) / {PPL_BINS}.0)),
+                        {PPL_BINS - 1}) AS INT) AS bin
       FROM perdoc, rng
     ),
     hist AS (SELECT bin, count(*) AS c FROM binned GROUP BY bin),
@@ -238,11 +219,11 @@ _PPL_BINS = 512  # fine equal-width bins feeding the tertile map
                     ELSE 'tail' END AS bucket
       FROM cum
     )
-    SELECT b.bucket, d.lang,
+    SELECT CASE WHEN d.deg THEN 'head' ELSE b.bucket END AS bucket, d.lang,
            CAST(count(*) AS BIGINT) AS n_docs,
            round(avg(d.s), 6) AS mean_surprisal
     FROM binned d JOIN bmap b ON d.bin = b.bin
-    GROUP BY b.bucket, d.lang
+    GROUP BY 1, d.lang
     """,
     tags=("B24", "B20"),
     doc="CCNet-style perplexity bucketing (Wenzek et al. 2020): each "
@@ -251,124 +232,23 @@ _PPL_BINS = 512  # fine equal-width bins feeding the tertile map
     "language — the standard pre-filter that keeps 'head' for "
     "training and drops or downsamples 'tail'.  The tertile "
     "boundaries are computed WITHOUT a global sort: surprisals land "
-    f"in {_PPL_BINS} deterministic equal-width fine bins (broadcast "
+    f"in {PPL_BINS} deterministic equal-width fine bins (broadcast "
     "min/max), the <=64-row cumulative histogram maps fine bins to "
     "tertiles by integer arithmetic, and docs join the 64-row map "
     "broadcast — the same scan-assign shape as "
-    "equi_depth_hist_binning, exact in both engines.",
+    "equi_depth_hist_binning, exact in both engines.  A corpus with "
+    "ONE surprisal level (min = max) is all 'head' instead of a 0/0 "
+    "bin width.",
 )
 def ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
-    from scache_spark.functions import bounded_window
-
-    d = load_table(spark, sf_dir, "documents")
-    toks = d.select("doc_id", "lang", F.explode(tokens(F.col("text"))).alias("tok"))
-    vocab = toks.groupBy("tok").agg(F.count(F.lit(1)).cast("long").alias("n_tok"))
-    total = toks.agg(F.count(F.lit(1)).cast("long").alias("n_total"))
-    # One surprisal row per doc, MATERIALIZED once: four downstream
-    # branches (range, binning, histogram, final rollup) would each
-    # recompute the tokenize+vocab-join subtree otherwise (plan-lint
-    # counted 26 exchanges without this; ~7 with it).
-    perdoc = (
-        toks.join(F.broadcast(vocab), "tok")
-        .crossJoin(F.broadcast(total))
-        .groupBy("doc_id")
-        .agg(
-            F.any_value(F.col("lang")).alias("lang"),
-            F.round(
-                F.avg(-F.log(F.col("n_tok") * 1.0 / F.col("n_total"))), 6
-            ).alias("s"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    rng = perdoc.agg(F.min("s").alias("mn"), F.max("s").alias("mx"))
-    width = (F.col("mx") - F.col("mn")) / float(_PPL_BINS)
-    binned = perdoc.crossJoin(F.broadcast(rng)).select(
-        "doc_id",
-        "lang",
-        "s",
-        F.least(
-            F.floor((F.col("s") - F.col("mn")) / width), F.lit(_PPL_BINS - 1)
-        )
-        .cast("int")
-        .alias("bin"),
-    )
-    hist = binned.groupBy("bin").agg(F.count(F.lit(1)).alias("c")).localCheckpoint(
-        eager=True
-    )
-    cum = hist.select(
-        "bin",
-        F.sum("c")
-        .over(
-            bounded_window("bin", "bin").rowsBetween(
-                Window.unboundedPreceding, Window.currentRow
-            )
-        )
-        .alias("cum"),
-    )
-    tot = hist.agg(F.sum("c").alias("n"))
-    bmap = cum.crossJoin(F.broadcast(tot)).select(
-        "bin",
-        F.when(F.expr("CAST((3 * cum + n - 1) div n AS INT)") == 1, "head")
-        .when(F.expr("CAST((3 * cum + n - 1) div n AS INT)") == 2, "middle")
-        .otherwise("tail")
-        .alias("bucket"),
-    )
+    d = load_table(spark, sf_dir, "documents").select("doc_id", "lang", "text")
     return (
-        binned.join(F.broadcast(bmap), "bin")
+        api.perplexity_buckets(d, "doc_id", "text")
         .groupBy("bucket", "lang")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.round(F.avg("s"), 6).alias("mean_surprisal"),
+            F.round(F.avg("surprisal"), 6).alias("mean_surprisal"),
         )
-    )
-
-
-def dsir_weights(
-    docs: DataFrame, is_target: Column, n_buckets: int = N_BUCKETS
-) -> DataFrame:
-    """Reusable DSIR scorer: per-doc log importance weight of every
-    document in ``docs`` (columns doc_id, text) against the target
-    subset selected by ``is_target``.  Returns (doc_id, log_weight);
-    the registered query wraps it with the fixture's target predicate
-    and a TakeOrdered shortlist.  Plan shape as documented on
-    ``dsir_importance_weights``."""
-    from scache_spark.functions import hash64
-
-    feat = docs.select(
-        "doc_id",
-        is_target.alias("__t"),
-        F.explode(tokens(F.col("text"))).alias("w"),
-    ).select("doc_id", "__t", (hash64("w") % n_buckets).alias("bucket"))
-    # r9: a doc's score is sum over buckets of n_occurrences·logratio,
-    # so collapse the token stream to per-(doc, bucket) counts FIRST
-    # and checkpoint THAT — the model counts roll up from it and the
-    # scoring weights it, so the corpus tokenizes + md5-hashes exactly
-    # ONCE (the old shape ran the full pass twice: model and scoring).
-    # The materialized frame is bounded by docs × n_buckets, far
-    # smaller than the token stream it replaces.
-    db = (
-        feat.groupBy("doc_id", "__t", "bucket")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
-    )
-    counts = db.groupBy("bucket").agg(
-        F.sum(F.when(F.col("__t"), F.col("n")).otherwise(0)).alias("c_t"),
-        F.sum("n").alias("c_r"),
-    )
-    totals = counts.agg(F.sum("c_t").alias("n_t"), F.sum("c_r").alias("n_r"))
-    ratios = counts.crossJoin(F.broadcast(totals)).select(
-        "bucket",
-        (
-            F.log((F.col("c_t") + 1.0) / (F.col("n_t") + n_buckets))
-            - F.log((F.col("c_r") + 1.0) / (F.col("n_r") + n_buckets))
-        ).alias("logratio"),
-    )
-    return (
-        db.join(F.broadcast(ratios), "bucket")
-        .groupBy("doc_id")
-        .agg(F.round(F.sum(F.col("n") * F.col("logratio")), 6).alias("log_weight"))
     )
 
 

@@ -38,6 +38,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from scache_spark import api
+from scache_spark.api import (
+    BAND_CAP,
+    N_BANDS,
+    N_MINHASH,
+    SHINGLE_N,
+    _band_cols,
+    _capped_candidate_pairs,
+    _signature_cols,
+)
 from scache_spark.catalog import load_table, widen_scan
 from scache_spark.functions import (
     SQL_COSINE_READY,
@@ -46,10 +56,6 @@ from scache_spark.functions import (
     word_shingles,
 )
 from scache_spark.registry import register
-
-N_MINHASH = 8  # permutations
-N_BANDS = 4  # bands of 2 rows each
-SHINGLE_N = 3  # words per shingle
 
 # ---------------------------------------------------------------------------
 # augmented corpus (shared by the dedup family)
@@ -216,26 +222,6 @@ def shingled_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return aug.select(
         "doc_id", "source", word_shingles(F.split(F.col("text"), " "), SHINGLE_N).alias("sh")
     )
-
-
-def _signature_cols() -> list:
-    """minhash_i = min over shingles of md5('i:' || shingle)."""
-    return [
-        F.array_min(F.transform(F.col("sh"), lambda s: salted_md5(s, i))).alias(
-            f"sig_{i}"
-        )
-        for i in range(N_MINHASH)
-    ]
-
-
-def _band_cols() -> list:
-    """band_j = md5(sig_{2j} || sig_{2j+1}) — 2 rows per band."""
-    return [
-        F.md5(F.concat(F.col(f"sig_{2 * j}"), F.col(f"sig_{2 * j + 1}"))).alias(
-            f"band_{j}"
-        )
-        for j in range(N_BANDS)
-    ]
 
 
 _SIG_SQL = ", ".join(
@@ -1085,14 +1071,12 @@ def minhash_merge_property(spark: SparkSession, sf_dir: str) -> DataFrame:
 # hot-band capping: the skew guard for banded self-joins
 # ---------------------------------------------------------------------------
 
-BAND_CAP = 8  # max docs per (band_id, band_hash) bucket before demotion
-
-
 # Shared capped banded-LSH candidate stage (r7, ADVICE): signatures
 # melt to (doc_id, band_id, band_hash), hot buckets (> BAND_CAP
 # members) are demoted BEFORE any pair materializes, and surviving
 # buckets self-join into distinct (doc_a < doc_b) candidates.  One
-# definition per engine side — dedup_minhash_capped_pairs and
+# definition per engine side (the Spark one is
+# api._capped_candidate_pairs) — dedup_minhash_capped_pairs and
 # dedup_source_overlap_matrix consume BOTH, so the cap semantics
 # cannot drift between them.
 _CAPPED_CAND_SQL = f"""sigs AS (SELECT doc_id, {_SIG_SQL} FROM shingled),
@@ -1115,49 +1099,6 @@ _CAPPED_CAND_SQL = f"""sigs AS (SELECT doc_id, {_SIG_SQL} FROM shingled),
         ON a.band_id = b.band_id AND a.band_hash = b.band_hash
        AND a.doc_id < b.doc_id
     )"""
-
-
-def _capped_candidate_pairs(sh):
-    """Spark twin of ``_CAPPED_CAND_SQL``: given the checkpointed
-    shingle frame, return the distinct (doc_a, doc_b) candidates that
-    survive BAND_CAP demotion.  The LEAN melt (doc_id, band_id,
-    band_hash — no shingle payload) is checkpointed once and feeds
-    the cap count plus both self-join sides."""
-    sigs = sh.select("doc_id", *_signature_cols())
-    melted = sigs.select(
-        "doc_id",
-        F.posexplode(
-            F.array(
-                *[
-                    F.md5(F.concat(F.col(f"sig_{2 * j}"), F.col(f"sig_{2 * j + 1}")))
-                    for j in range(N_BANDS)
-                ]
-            )
-        ).alias("band_id", "band_hash"),
-    ).localCheckpoint(eager=True)
-    keep = (
-        melted.groupBy("band_id", "band_hash")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") <= BAND_CAP)
-        .select("band_id", "band_hash")
-    )
-    capped = melted.join(keep, ["band_id", "band_hash"])
-    a = capped.select(F.col("doc_id").alias("doc_a"), "band_id", "band_hash")
-    b = capped.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("band_id").alias("band_id_b"),
-        F.col("band_hash").alias("band_hash_b"),
-    )
-    return (
-        a.join(
-            b,
-            (F.col("band_id") == F.col("band_id_b"))
-            & (F.col("band_hash") == F.col("band_hash_b"))
-            & (F.col("doc_a") < F.col("doc_b")),
-        )
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
 
 
 @register(
@@ -1186,29 +1127,9 @@ def _capped_candidate_pairs(sh):
     "runs before any pair materializes.",
 )
 def dedup_minhash_capped_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Two materializations, mirroring dedup_minhash_pairs: the shingle
-    # frame (feeds the minhash AND the two verification joins) and the
-    # LEAN band melt (doc_id, band_id, band_hash — no shingle payload),
-    # which feeds the cap count plus both self-join sides.  Shingles
-    # travel into the pair space only for surviving candidates.
-    sh = (
-        shingled_docs(spark, sf_dir)
-        .select("doc_id", "sh")
-        .localCheckpoint(eager=True)
-    )
-    cand = _capped_candidate_pairs(sh)
-    verified = cand.join(
-        sh.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a")),
-        "doc_a",
-    ).join(
-        sh.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b")),
-        "doc_b",
-    )
-    jac = F.size(F.array_intersect("sh_a", "sh_b")).cast("double") / F.size(
-        F.array_union("sh_a", "sh_b")
-    )
-    return verified.select("doc_a", "doc_b", jac.alias("jaccard")).filter(
-        F.col("jaccard") >= 0.5
+    pairs = api.minhash_pairs(augmented_docs(spark, sf_dir), "doc_id", "text")
+    return pairs.select(
+        F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"), "jaccard"
     )
 
 

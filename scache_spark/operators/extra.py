@@ -9,6 +9,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from scache_spark import api
+from scache_spark.api import CMS_ROWS, CMS_WIDTH
 from scache_spark.catalog import load_table
 from scache_spark.functions import SQL_PROPS_K_INT, SQL_VECTOR_READY, bounded_window
 from scache_spark.functions import kll_fold_double, vector_ready
@@ -1744,61 +1746,23 @@ def skew_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Count-Min sketch heavy hitters (the frequency member of the sketch trio)
 # ---------------------------------------------------------------------------
 
-# 3 md5-derived hash rows x 256 counters = 768 cells total, independent
-# of corpus size.  Depth 3 / width 256 gives eps ~ e/256 ~ 1% of the
-# stream length as the worst-case overcount at delta ~ e^-3.
-_CMS_ROWS = 3
-_CMS_W = 256
-
-
-def _cms_cell(col: F.Column, row: int) -> F.Column:
-    """60-bit md5 hash of ``row:token`` reduced to a counter index."""
-    h = F.conv(
-        F.substring(F.md5(F.concat(F.lit(f"{row}:"), col)), 1, 15), 16, 10
-    ).cast("long")
-    return (h % _CMS_W).cast("int")
-
 
 def _cms_cell_sql(col: str, row: int) -> str:
+    """DuckDB twin of api._cms_cell."""
     return (
         f"CAST(('0x' || substr(md5('{row}:' || {col}), 1, 15))::BIGINT"
-        f" % {_CMS_W} AS INT)"
-    )
-
-
-_CMS_PROBE_SQL = ", ".join(
-    f"({_cms_cell_sql('tok', r)}, {r})" for r in range(_CMS_ROWS)
-)
-
-
-def cms_increments(col: F.Column) -> F.Column:
-    """The CMS build/probe fan-out as ONE shared expression: explode of
-    the _CMS_ROWS (r, cell) increment structs for a key column.  Every
-    sketch site (batch heavy hitters, the streaming sketch) uses this
-    helper so the hash-parity-critical cell derivation lives in
-    exactly one place beside _cms_cell."""
-    return F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(r).alias("r"),
-                    _cms_cell(col, r).alias("cell"),
-                )
-                for r in range(_CMS_ROWS)
-            ]
-        )
+        f" % {CMS_WIDTH} AS INT)"
     )
 
 
 def cms_cell_case_sql(col: str) -> str:
-    """DuckDB twin of cms_increments' cell arm: the CASE over the row
+    """DuckDB twin of api.cms_increments' cell arm: the CASE over the row
     index r.r (requires a joined (VALUES (0),(1),(2)) r(r) row source,
     the unnest-side of the explode)."""
     whens = " ".join(
-        f"WHEN {r} THEN {_cms_cell_sql(col, r)}" for r in range(_CMS_ROWS - 1)
+        f"WHEN {r} THEN {_cms_cell_sql(col, r)}" for r in range(CMS_ROWS - 1)
     )
-    return f"CASE r.r {whens} ELSE {_cms_cell_sql(col, _CMS_ROWS - 1)} END"
-
+    return f"CASE r.r {whens} ELSE {_cms_cell_sql(col, CMS_ROWS - 1)} END"
 
 
 @register(
@@ -1834,7 +1798,7 @@ def cms_cell_case_sql(col: str) -> str:
     """,
     tags=("B7", "B16", "B24"),
     doc="Count-Min-sketch heavy hitters over the document token "
-    f"stream: {_CMS_ROWS} md5 hash rows x {_CMS_W} counters "
+    f"stream: {CMS_ROWS} md5 hash rows x {CMS_WIDTH} counters "
     "(768 cells TOTAL, corpus-size-independent — the frequency "
     "member of the sketch trio beside bloom_bitmap_membership and "
     "hll_sketch_union_bound; heavy_hitters_cms_bound states the "
@@ -1860,14 +1824,15 @@ def heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     # smallest frame in the query): the corpus tokenizes once, the
     # md5 cell hashing runs per DISTINCT token instead of per
     # occurrence, and the sketch aggregate shrinks from O(occurrences)
-    # to O(vocab) input rows.
+    # to O(vocab) input rows — the same (r, cell, cnt) sketch
+    # api.cms_sketch builds from the raw stream.
     tok_counts = (
         toks.groupBy("tok")
         .agg(F.count(F.lit(1)).alias("true_cnt"))
         .localCheckpoint(eager=True)
     )
     incs = tok_counts.select(
-        cms_increments(F.col("tok")).alias("rc"), "true_cnt"
+        api.cms_increments(F.col("tok")).alias("rc"), "true_cnt"
     )
     sketch = incs.groupBy(
         F.col("rc.r").alias("r"), F.col("rc.cell").alias("cell")
@@ -1875,18 +1840,8 @@ def heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = tok_counts.orderBy(
         F.col("true_cnt").desc(), F.col("tok").asc()
     ).limit(10)
-    probes = cand.select(
-        "tok",
-        "true_cnt",
-        cms_increments(F.col("tok")).alias("rc"),
-    )
     return (
-        probes.join(
-            F.broadcast(sketch),
-            (F.col("rc.r") == F.col("r")) & (F.col("rc.cell") == F.col("cell")),
-        )
-        .groupBy("tok", "true_cnt")
-        .agg(F.min("cnt").alias("est_cnt"))
+        api.cms_estimate(sketch, cand, "tok")
         .select(
             "tok",
             F.col("true_cnt").cast("long").alias("true_cnt"),

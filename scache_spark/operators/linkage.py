@@ -9,8 +9,9 @@ Scale rules (SCALE.md): every candidate-generation operator here
 bounds its pair space BEFORE any join materializes — deletion
 neighborhoods give O(n·L) equi-join keys instead of O(n²) pairs,
 sorted-neighborhood compares only w in-block neighbors after one
-sort, and the skyline needs two window passes over DISTINCT metric
-pairs, never a self-join.  No Python UDFs anywhere: all codegen.
+sort, and the skyline needs one window pass over one row per
+distinct metric value, never a self-join.  No Python UDFs anywhere:
+all codegen.
 """
 
 from __future__ import annotations
@@ -19,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from scache_spark import api
 from scache_spark.catalog import load_table
 from scache_spark.registry import register
 
@@ -72,39 +74,8 @@ from scache_spark.registry import register
 )
 def fastss_edit1_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = load_table(spark, sf_dir, "supplier")
-    name = F.col("s_name")
-    dels = F.transform(
-        F.sequence(F.lit(1), F.length(name)),
-        lambda i: F.concat(
-            name.substr(F.lit(1), i - F.lit(1)),
-            name.substr(i + F.lit(1), F.length(name)),
-        ),
-    )
-    variants = s.select(
-        F.col("s_suppkey").alias("k"),
-        name.alias("nm"),
-        F.explode(F.array_distinct(F.array_append(dels, name))).alias("v"),
-    )
-    b = variants.select(
-        F.col("k").alias("k2"), F.col("nm").alias("nm2"), F.col("v")
-    )
-    # byte-faithful levenshtein: latin-1 decode of the UTF-8 bytes
-    # turns Spark's code-point distance into DuckDB's byte distance
-    def _bytestr(c):
-        return F.decode(F.encode(c, "UTF-8"), "ISO-8859-1")
-
-    byte_dist = F.levenshtein(_bytestr(F.col("nm")), _bytestr(F.col("nm2")))
-    return (
-        variants.join(b, "v")
-        .where(F.col("k") < F.col("k2"))
-        .select("k", "k2", "nm", "nm2")
-        .distinct()
-        .where(byte_dist <= 1)
-        .select(
-            F.col("k").alias("supp_a"),
-            F.col("k2").alias("supp_b"),
-            byte_dist.cast("int").alias("edit_dist"),
-        )
+    return api.edit_distance_pairs(s, "s_suppkey", "s_name").select(
+        F.col("id_a").alias("supp_a"), F.col("id_b").alias("supp_b"), "edit_dist"
     )
 
 
@@ -388,16 +359,16 @@ def transpose_segment_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Pareto-frontier (skyline) curation filter: documents not "
     "strictly dominated on (token count, lexical-diversity ratio) — "
     "the length-vs-diversity tradeoff curve a data-mixing pass "
-    "samples from.  Spark side is the O(n log n) two-window "
-    "formulation over DISTINCT metric pairs (max ratio over "
-    "strictly-longer rows via a RANGE frame ending at -1, plus the "
-    "within-length max), never a self-join; the oracle is the "
+    "samples from.  Spark side is api.skyline_2d's O(n log n) "
+    "formulation: one (n_tok, max ratio) row per distinct length, "
+    "then one ROWS window for the best ratio among strictly longer "
+    "lengths, never a self-join; the oracle is the "
     "independent brute-force NOT-EXISTS dominance definition, so "
     "the window algebra is verified against the textbook semantics "
     "rather than against itself.  Ties share the frontier (non-"
     "strict dominance keeps all equal-metric docs).  Null/blank "
     "text is excluded by the dirty-corpus contract filter "
-    "(SCALE.md §13).  The distinct-pair frame is metric-resolution-"
+    "(SCALE.md §13).  The per-length frame is metric-resolution-"
     "bounded, far below corpus size at 100 TB; the bounded single-"
     "partition window is the documented bounded_window choice.",
 )
@@ -412,24 +383,7 @@ def pareto_frontier_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             "ratio"
         ),
     )
-    pairs = m.select("n_tok", "ratio").distinct()
-    w_gt = (
-        Window.partitionBy(F.pmod(F.hash("n_tok"), F.lit(1)))
-        .orderBy(F.col("n_tok").desc())
-        .rangeBetween(Window.unboundedPreceding, -1)
-    )
-    w_eq = Window.partitionBy("n_tok")
-    flagged = pairs.select(
-        "n_tok",
-        "ratio",
-        F.max("ratio").over(w_gt).alias("best_longer"),
-        F.max("ratio").over(w_eq).alias("best_same"),
-    )
-    frontier = flagged.where(
-        (F.col("best_longer").isNull() | (F.col("best_longer") < F.col("ratio")))
-        & (F.col("best_same") == F.col("ratio"))
-    ).select("n_tok", "ratio")
-    return m.join(frontier, ["n_tok", "ratio"]).select(
+    return api.skyline_2d(m, "n_tok", "ratio").select(
         "doc_id", "n_tok", F.round("ratio", 6).alias("ratio")
     )
 

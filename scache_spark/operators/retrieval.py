@@ -491,7 +491,7 @@ def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     assigned = _assign(e, cents_ivf)
     # query's IVF_PROBE nearest cells: rescore the query against all
     # K centroids (K rows) and keep the best IVF_PROBE
-    from scache_spark.operators.clustering import _l2sq
+    from scache_spark.functions import vec_l2sq
 
     qv = e.filter(F.col("vec_id") == 0).select(
         F.col("embedding").alias("qemb")
@@ -499,7 +499,7 @@ def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     qcells = (
         cents_ivf.crossJoin(F.broadcast(qv))
         .select(
-            "cell", _l2sq(F.col("centroid"), F.col("qemb")).alias("qd2")
+            "cell", vec_l2sq(F.col("centroid"), F.col("qemb")).alias("qd2")
         )
         .orderBy(F.col("qd2").asc(), F.col("cell").asc())
         .limit(IVF_PROBE)

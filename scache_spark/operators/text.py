@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from scache_spark import api
 from scache_spark.catalog import load_table
 from scache_spark.registry import register
 
@@ -412,7 +413,8 @@ def quality_calibration_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(q, n, n_pos) distinct-score frame, average ranks come from one "
     "cumulative window over that frame (ties get the midrank, the "
     "textbook correction), and AUC = (R+ - np(np+1)/2) / (np*nn).  "
-    "Per decile cutoff the suffix-cumulative counts give TPR / FPR / "
+    "Per decile cutoff the suffix counts (docs at or above it, one "
+    "aggregate over <= 10 in-map increments per doc) give TPR / FPR / "
     "precision; AUC and Gini broadcast onto every row.  Degenerate "
     "corpora guard: single-class input yields NULL AUC, empty "
     "shortlists yield NULL precision — no division by zero in either "
@@ -420,130 +422,46 @@ def quality_calibration_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
     "score frame, but that frame is NOT hard-bounded (the score is a "
     "continuous double over unbounded integer-ratio features — "
     "distinct-q grows with distinct feature tuples), so the midrank "
-    "cumulative is a DISTRIBUTED prefix sum (r9): the score buckets "
-    "into 4096 fixed [0,1) ranges (bucket is monotone in q, so the "
-    "total order is unchanged), cumsums run WITHIN each bucket in "
-    "parallel, and a broadcast 4096-row bucket-total prefix table "
-    "supplies the cross-bucket offsets — same integers as the naive "
-    "global window the oracle uses, but no unpartitioned window over "
-    "an SF-proportional frame anywhere in the plan.  The 10-row "
-    "decile window stays global by contract (bounded frame).",
+    "cumulative is api.auc_rank's DISTRIBUTED prefix sum: the score "
+    "buckets by a monotone log-scale key, cumsums and rank-sum "
+    "partials fold WITHIN each bucket in parallel, and only the "
+    "bucket-partial table crosses the offset window — same integers "
+    "as the naive global window the oracle uses, but no "
+    "unpartitioned window over an SF-proportional frame anywhere in "
+    "the plan.",
 )
 def classifier_auc_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
-    from scache_spark.functions import bounded_window
-
     feats = _quality_feats(
         load_table(spark, sf_dir, "documents").select("text")
     )
+    # (q, label) per doc, materialized once: both the rank-sum AUC and
+    # the decile ROC derive from it, and the corpus scan + feature
+    # derivation under it would otherwise run once per consumer
     scored = feats.select(
         _quality_expr().alias("q"),
         F.when((F.col("n_tok") >= 60) & (F.col("n_len") > 0), 1)
         .otherwise(0)
         .alias("label"),
-    )
-    # distinct-score frame: the only pass over the corpus; both the
-    # rank-sum AUC and the decile ROC derive from this frame (it is
-    # far smaller than the corpus but still grows with distinct
-    # feature tuples — treat it as SF-proportional below).  The
-    # bucket id is computed once, inside the checkpoint (r10 plan
-    # shrink: it previously re-derived per consumer).
-    by_q = (
-        scored.groupBy("q")
+    ).localCheckpoint(eager=True)
+    auc = api.auc_rank(scored, "q", "label")
+    # decile ROC: each doc counts toward every cutoff at or below its
+    # own decile (<= 10 increments exploded in-map), so the suffix
+    # counts are ONE map-side-combined aggregate; a cutoff is reported
+    # only when its own decile holds a doc
+    own = F.least(F.floor(F.col("q") * 10).cast("int"), F.lit(9))
+    roc = (
+        scored.select(
+            own.alias("own"),
+            "label",
+            F.explode(F.sequence(F.lit(0), own)).alias("bucket"),
+        )
+        .groupBy("bucket")
         .agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum("label").cast("long").alias("n_pos"),
+            F.count(F.lit(1)).cast("long").alias("n_ge"),
+            F.sum("label").cast("long").alias("pos_ge"),
+            F.max(F.col("own") == F.col("bucket")).alias("present"),
         )
-        .withColumn(
-            "bkt",
-            F.least(F.floor(F.col("q") * 4096).cast("int"), F.lit(4095)),
-        )
-        .localCheckpoint(eager=True)
-    )
-    # Distributed midrank prefix sum: q is contractually in [0, 1]
-    # (weighted sum of capped ratios), so 4096 fixed-width buckets
-    # are monotone in q and same-q rows share a bucket; the
-    # per-bucket window runs in parallel and only the 4096-row
-    # bucket-partial table crosses a bounded single-partition window.
-    # r10 plan shrink (§1.2 step 2 / r9-verdict item 5: 78% of this
-    # query's local cost was driver plan construction): the rank-sum
-    # distributes over the bucket offset —
-    #   sum n_pos*(offset_b + cum_in + (n+1)/2)
-    #     = offset_b * sum(n_pos) + sum(n_pos*(cum_in + (n+1)/2))
-    # so the per-bucket PARTIALS (ra, np_b, n_b) fold map-side in the
-    # same pass as the within-bucket window, and the cross-bucket
-    # offset attaches to the 4096-row partial table instead of
-    # broadcast-joining back onto the full distinct-score frame.  One
-    # branch (btot), one join (offsets->ranked) and two projections
-    # drop out of the plan; every addend is an exactly-representable
-    # half-integer at any fixture SF, so the reassociation is
-    # bit-exact against the oracle's row-level sum.
-    w_in = (
-        Window.partitionBy("bkt")
-        .orderBy("q")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    pb = (
-        by_q.withColumn(
-            "cum_in", F.coalesce(F.sum("n").over(w_in), F.lit(0)).cast("long")
-        )
-        .groupBy("bkt")
-        .agg(
-            F.sum(
-                F.col("n_pos").cast("double")
-                * (F.col("cum_in") + (F.col("n") + 1) / 2.0)
-            ).alias("ra"),
-            F.sum("n_pos").cast("long").alias("np_b"),
-            F.sum("n").cast("long").alias("n_b"),
-        )
-    )
-    w_off = bounded_window("bkt", "bkt").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    tot = pb.withColumn(
-        "offset",
-        F.coalesce(F.sum("n_b").over(w_off), F.lit(0)).cast("long"),
-    ).agg(
-        F.sum(
-            F.col("ra") + F.col("offset").cast("double") * F.col("np_b")
-        ).alias("r_pos"),
-        F.sum("np_b").cast("long").alias("np"),
-        (F.sum("n_b") - F.sum("np_b")).cast("long").alias("nn"),
-    )
-    auc = tot.select(
-        F.when(
-            (F.col("np") == 0) | (F.col("nn") == 0), F.lit(None)
-        )
-        .otherwise(
-            (
-                F.col("r_pos")
-                - F.col("np").cast("double") * (F.col("np") + 1) / 2.0
-            )
-            / (F.col("np").cast("double") * F.col("nn"))
-        )
-        .alias("auc_raw"),
-        "np",
-        "nn",
-    )
-    dec = (
-        by_q.groupBy(
-            F.least(F.floor(F.col("q") * 10).cast("int"), F.lit(9)).alias(
-                "bucket"
-            )
-        )
-        .agg(
-            F.sum("n").cast("long").alias("n"),
-            F.sum("n_pos").cast("long").alias("n_pos"),
-        )
-    )
-    w_ge = bounded_window("bucket", F.col("bucket").desc()).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    roc = dec.select(
-        "bucket",
-        F.sum("n").over(w_ge).cast("long").alias("n_ge"),
-        F.sum("n_pos").over(w_ge).cast("long").alias("pos_ge"),
+        .where("present")
     )
     return roc.crossJoin(F.broadcast(auc)).select(
         "bucket",
@@ -564,8 +482,8 @@ def classifier_auc_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("n_ge") == 0, F.lit(None))
         .otherwise(F.round(F.col("pos_ge").cast("double") / F.col("n_ge"), 6))
         .alias("prec"),
-        F.round("auc_raw", 6).alias("auc"),
-        F.round(2.0 * F.col("auc_raw") - 1.0, 6).alias("gini"),
+        F.round("auc", 6).alias("auc"),
+        F.round("gini", 6).alias("gini"),
     )
 
 
@@ -1173,10 +1091,6 @@ def source_lang_chisq(spark: SparkSession, sf_dir: str) -> DataFrame:
 # BM25 ranked retrieval (full-text search scoring over the corpus)
 # ---------------------------------------------------------------------------
 
-_BM25_K1 = 1.2
-_BM25_B = 0.75
-
-
 @register(
     "text_bm25_topk",
     oracle="""
@@ -1236,77 +1150,30 @@ _BM25_B = 0.75
     "cross-engine deterministic (ties broken by doc_id).",
 )
 def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
     from scache_spark.catalog import widen_scan
 
     d = load_table(spark, sf_dir, "documents")
-    # r10 restructure (ADVICE r9, §2.3/§5): the r9 shape checkpointed
-    # per-doc POSTINGS ARRAYS (collect_list over every distinct token
-    # of the doc) and scored by scanning each doc's whole array — one
-    # large-vocabulary document materialized an unbounded single row,
-    # and scoring cost grew with doc vocabulary, not query size.  Now
-    # the checkpoint is the FLAT (doc_id, tok, tf, dl) table (dl
-    # attached via a doc-partitioned window on the same exchange, so
-    # document length still needs no separate shuffle of the token
-    # stream), and scoring prunes tf with the <=5-row broadcast qterms
-    # BEFORE any further shuffle — per-doc cost is bounded by the
-    # query term count and every post-checkpoint exchange carries
-    # metadata-weight rows (vocab partials / query-term hits), never
-    # raw tokens.  widen_scan keys the tokenize on doc_id (§2.5 local
+    # widen_scan keys the tokenize on doc_id (§2.5 local
     # no-op-at-scale fan-out), and hash(doc_id) satisfies both the
     # (doc_id, tok) grouping and the dl window by the subset rule, so
-    # the whole checkpoint materializes off ONE exchange.
-    toks = widen_scan(d.select("doc_id", "text"), "doc_id").select(
-        "doc_id", F.explode(F.split(F.lower("text"), " ")).alias("tok")
-    ).filter(F.col("tok") != "")
-    wdl = Window.partitionBy("doc_id")
-    tf = (
-        toks.groupBy("doc_id", "tok")
-        .agg(F.count(F.lit(1)).cast("double").alias("tf"))
-        .withColumn("dl", F.sum("tf").over(wdl))
-        .localCheckpoint(eager=True)
-    )
-    stats = (
-        tf.groupBy("doc_id")
-        .agg(F.first("dl").alias("dl"))
-        .agg(
-            F.count(F.lit(1)).cast("double").alias("n_docs"),
-            F.avg("dl").alias("avgdl"),
-        )
-    )
-    dfreq = tf.groupBy("tok").agg(
-        F.count(F.lit(1)).cast("double").alias("df")
-    )
-    # limit(7) is TakeOrdered over the vocab; the rank-window then runs
-    # on 7 rows only (never the full vocabulary).
+    # the whole postings checkpoint materializes off ONE exchange.
+    docs = widen_scan(d.select("doc_id", "text"), "doc_id")
+    return api.bm25_score(docs, "text", "doc_id", _bm25_qterms, k=20)
+
+
+def _bm25_qterms(dfreq: DataFrame) -> DataFrame:
+    """The fixture query's terms: df-ranks 3-7 of the corpus
+    vocabulary.  limit(7) is TakeOrdered over the vocab; the rank
+    window then runs on 7 rows only (never the full vocabulary)."""
     from scache_spark.functions import bounded_window
 
     top7 = dfreq.orderBy(F.desc("df"), F.asc("tok")).limit(7)
-    qterms = (
+    return (
         top7.withColumn(
             "rk", F.row_number().over(bounded_window("tok", F.desc("df"), F.asc("tok")))
         )
         .filter((F.col("rk") >= 3) & (F.col("rk") <= 7))
         .select("tok", "df")
-    )
-    # Broadcast the <=5 query terms and drop every non-matching tf row
-    # map-side: only query-term hits (<=5 rows per doc, dl attached)
-    # reach the scoring aggregate — the documented production shape.
-    hits = tf.join(F.broadcast(qterms), "tok")
-    idf = F.log(
-        (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0
-    )
-    sat = (F.col("tf") * (_BM25_K1 + 1.0)) / (
-        F.col("tf")
-        + _BM25_K1 * (1.0 - _BM25_B + _BM25_B * F.col("dl") / F.col("avgdl"))
-    )
-    return (
-        hits.crossJoin(F.broadcast(stats))
-        .groupBy("doc_id")
-        .agg(F.round(F.sum(idf * sat), 6).alias("bm25"))
-        .orderBy(F.desc("bm25"), F.asc("doc_id"))
-        .limit(20)
     )
 
 

@@ -1169,7 +1169,7 @@ def _stream_cms_oracle() -> str:
     "cell-for-cell by the oracle.  All-integer outputs.",
 )
 def stream_cms_heavy_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from scache_spark.operators.extra import cms_increments
+    from scache_spark.api import cms_increments
 
     def rc_explode(key_col: F.Column) -> F.Column:
         return cms_increments(key_col).alias("rc")

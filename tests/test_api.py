@@ -158,6 +158,52 @@ def test_api_functions_handle_empty_frames(spark):
         api.dsir_score(empty_docs, "id", "text", F.lit(False)).count() == 0
     )
     assert api.perplexity_buckets(empty_docs, "id", "text").count() == 0
+    assert api.bm25_score(empty_docs, "text", "id", ["x"]).count() == 0
+    assert api.edit_distance_pairs(empty_docs, "id", "text").count() == 0
+    sketch = api.cms_sketch(empty_docs, "text")
+    assert sketch.count() == 0
+    est = api.cms_estimate(sketch, empty_docs.select("text"), "text")
+    assert est.count() == 0
+
+    empty_xy = spark.createDataFrame([], "id long, x double, y double")
+    assert api.skyline_2d(empty_xy, "x", "y").count() == 0
+    auc = api.auc_rank(empty_xy, "x", "id").collect()
+    assert [(r.auc, r.gini, r.np, r.nn) for r in auc] == [(None, None, 0, 0)]
+
+    empty_vecs = spark.createDataFrame([], "id long, vec array<double>")
+    cents = spark.createDataFrame([(0, [1.0, 0.0])], "cell int, centroid array<double>")
+    assert api.semantic_dedup(empty_vecs, "vec", "id", cents).count() == 0
+
+
+def test_minhash_pairs_demotes_hot_band_buckets(spark):
+    # BAND_CAP (8) + 1 identical documents put every band bucket over
+    # the cap: all of them are demoted before the self-join, so no
+    # pair materializes (an uncapped join would list all C(9, 2) = 36)
+    text = "the quick brown fox jumps over the lazy dog"
+    df = spark.createDataFrame([(i, text) for i in range(9)], ["id", "text"])
+    assert api.minhash_pairs(df, "id", "text").count() == 0
+    # at the cap itself the buckets survive and every pair verifies
+    at_cap = df.filter(df.id < 8)
+    assert api.minhash_pairs(at_cap, "id", "text").count() == 8 * 7 // 2
+
+
+def test_semantic_dedup_excludes_null_and_zero_norm_vectors(spark):
+    # cosine_ready contract: a NULL vector and a zero-norm vector have
+    # no cosine direction — both rows are excluded instead of pairing
+    # with NULL/NaN cosines
+    rows = [
+        (0, [1.0, 0.0, 0.0]),
+        (1, [1.0, 0.0, 0.0]),
+        (2, None),
+        (3, [0.0, 0.0, 0.0]),
+        (4, [1.0, float("nan"), 0.0]),
+    ]
+    df = spark.createDataFrame(rows, "id long, vec array<double>")
+    cents = spark.createDataFrame(
+        [(0, [1.0, 0.0, 0.0])], "cell int, centroid array<double>"
+    )
+    out = api.semantic_dedup(df, "vec", "id", cents, threshold=-1.0).collect()
+    assert [(r.dup_id, r.canonical_id, r.max_cosine) for r in out] == [(1, 0, 1.0)]
 
 
 def test_shard_assign_positions_are_dense_per_shard(spark):
@@ -455,14 +501,6 @@ def test_edit_distance_pairs_exact_and_complete(spark):
         if lev(sa, sb) <= 1
     }
     assert got == want
-
-
-def test_edit_distance_pairs_rejects_k_above_one(spark):
-    import pytest
-
-    df = spark.createDataFrame([(1, "a")], ["id", "s"])
-    with pytest.raises(ValueError, match="max_dist=1"):
-        api.edit_distance_pairs(df, "id", "s", max_dist=2)
 
 
 def test_skyline_2d_float_metrics_and_ties(spark):

@@ -406,7 +406,7 @@ def test_dsir_weights_enrich_planted_domain(spark):
     sample, and require the top-20 by weight to be science-heavy."""
     import pyspark.sql.functions as F
 
-    from scache_spark.operators.corpus import dsir_weights
+    from scache_spark.api import dsir_score
 
     sci = "atom laser quark photon tensor orbit plasma neutron"
     spo = "goal match pitch score team league keeper striker"
@@ -420,7 +420,7 @@ def test_dsir_weights_enrich_planted_domain(spark):
         rows, "doc_id long, text string, is_target boolean"
     )
     top = (
-        dsir_weights(docs, F.col("is_target"))
+        dsir_score(docs, "doc_id", "text", F.col("is_target"))
         .orderBy(F.col("log_weight").desc(), F.col("doc_id").asc())
         .limit(20)
         .collect()

@@ -406,7 +406,7 @@ def test_stream_cms_bounded_state_and_guarantee(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from scache_spark.catalog import load_table
-    from scache_spark.operators.extra import _CMS_ROWS, _CMS_W, cms_increments
+    from scache_spark.api import CMS_ROWS, CMS_WIDTH, cms_increments
     from scache_spark.streaming.windows import stream_cms_heavy_users
 
     pdf = stream_cms_heavy_users(spark, sf_dir).toPandas()
@@ -428,7 +428,7 @@ def test_stream_cms_bounded_state_and_guarantee(spark, sf_dir):
         .toPandas()
     )
     assert len(sketch_rows) == n_windows
-    assert (sketch_rows["count"] <= _CMS_ROWS * _CMS_W).all()
+    assert (sketch_rows["count"] <= CMS_ROWS * CMS_WIDTH).all()
 
 
 def test_cdc_serving_table_rmw_versions(spark, sf_dir):
