@@ -221,6 +221,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.schema(SCHEMAS[name]).parquet(table_path(sf_dir, name))
 
 
+# widen_scan's byte-size cap: scans at least this large keep their own
+# split count.
+WIDEN_MAX_BYTES = 1 << 30
+
+
 def widen_scan(df: DataFrame, *keys: str) -> DataFrame:
     """Give a narrow scan cluster-wide parallelism before CPU-heavy
     map work (optimization guide §2.5: unsplittable input).
@@ -246,12 +251,11 @@ def widen_scan(df: DataFrame, *keys: str) -> DataFrame:
     # splits (e.g. 10 GB in 20 files on a 400-slot cluster), paying a
     # full extra exchange of real data for parallelism the post-scan
     # map work may not need.  Widening is cheap insurance only while
-    # the table is byte-light; above the cap (default 1 GiB,
-    # env-overridable) the scan's own split count is trusted.  The sf
-    # fixtures are tens of MB, so the cap never binds locally, and at
-    # production scale the partition-count guard already no-ops.
-    cap = int(os.environ.get("SPARK_GRAFT_WIDEN_MAX_BYTES", str(1 << 30)))
-    if _scan_size_bytes(df) >= cap:
+    # the table is byte-light; above WIDEN_MAX_BYTES the scan's own
+    # split count is trusted.  The sf fixtures are tens of MB, so the
+    # cap never binds locally, and at production scale the
+    # partition-count guard already no-ops.
+    if _scan_size_bytes(df) >= WIDEN_MAX_BYTES:
         return df
     from pyspark.sql import functions as F
 
@@ -302,8 +306,3 @@ def _scan_size_bytes(df: DataFrame) -> int:
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: load_table(spark, sf_dir, name) for name in TABLES}
 
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every fixture table as a temp view for spark.sql()."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

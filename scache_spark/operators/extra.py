@@ -296,7 +296,10 @@ def fuzzy_match_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
 # non-parquet source coverage: CSV and ORC round trips (B1 long tail)
 # ---------------------------------------------------------------------------
 
+import errno as _errno
 import os as _os
+import shutil as _shutil
+import uuid as _uuid
 
 _SRC_ROOT = _os.path.join(
     _os.path.dirname(_os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))),
@@ -304,10 +307,37 @@ _SRC_ROOT = _os.path.join(
 )
 
 
+def _stage_once(out: str, write) -> str:
+    """Publish a staged directory whole: ``write(tmp)`` fills a unique
+    sibling of ``out``, which is then renamed into place.  Concurrent
+    stagers of one ``out`` each write their own copy; the first rename
+    wins and the losers delete theirs, so no reader sees a directory
+    half-written or overwritten in place.  An ``out`` without
+    ``_SUCCESS`` (an interrupted in-place write) is replaced."""
+    marker = _os.path.join(out, "_SUCCESS")
+    if _os.path.exists(marker):
+        return out
+    tmp = f"{out}.tmp-{_uuid.uuid4().hex}"
+    try:
+        write(tmp)
+        for _ in range(2):
+            try:
+                _os.rename(tmp, out)
+                return out
+            except OSError as exc:
+                if exc.errno not in (_errno.ENOTEMPTY, _errno.EEXIST):
+                    raise
+            if _os.path.exists(marker):
+                return out  # a concurrent stager published first
+            _shutil.rmtree(out, ignore_errors=True)
+        raise OSError(_errno.EEXIST, "staged directory not published", out)
+    finally:
+        _shutil.rmtree(tmp, ignore_errors=True)
+
+
 def _staged_alt(spark: SparkSession, sf_dir: str, fmt: str, table: str) -> str:
     """Stage a fixture table once per (sf, format) as CSV/ORC so the
     non-parquet readers are exercised against oracle-checkable data.
-    Single overwrite write → _SUCCESS implies completeness.
 
     The directory name carries a format-version token so that a change
     to the writer options (e.g. the CSV \\N NULL-sentinel contract)
@@ -316,24 +346,27 @@ def _staged_alt(spark: SparkSession, sf_dir: str, fmt: str, table: str) -> str:
     _FMT_VERSION = {"csv": "v2"}  # bump when writer options change
     key = sf_dir.strip("/").replace("/", "_")
     ver = _FMT_VERSION.get(fmt, "v1")
-    out = _os.path.join(_SRC_ROOT, f"{key}_{table}_{fmt}_{ver}")
-    if not _os.path.exists(_os.path.join(out, "_SUCCESS")):
-        df = load_table(spark, sf_dir, table)
-        w = df.repartition(2).write.mode("overwrite")
+
+    def write(path: str) -> None:
+        w = load_table(spark, sf_dir, table).repartition(2).write
         if fmt == "csv":
             # NULL sentinel contract (sources.read_csv): \N for NULL,
             # quoted empty for '' — lossless text round trip
             w.option("header", "true").option("nullValue", "\\N").option(
                 "emptyValue", '""'
-            ).csv(out)
+            ).csv(path)
         elif fmt == "avro":
             from scache_spark.sources.avro_ocf import register_avro_ocf
 
             register_avro_ocf(spark)
-            w.format("avro_ocf").option("path", out).save()
+            # a Python data source takes only append or overwrite
+            w.mode("append").format("avro_ocf").option("path", path).save()
         else:
-            w.orc(out)
-    return out
+            w.orc(path)
+
+    return _stage_once(
+        _os.path.join(_SRC_ROOT, f"{key}_{table}_{fmt}_{ver}"), write
+    )
 
 
 @register(
@@ -739,19 +772,16 @@ def multi_format_federation(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _staged_partitioned_events(spark: SparkSession, sf_dir: str) -> str:
     """Stage events ONCE per sf as hive-partitioned parquet
     (event_type directories) so partition pruning is exercisable as a
-    registered query.  Single overwrite write → _SUCCESS implies
-    completeness."""
+    registered query."""
     from scache_spark.sources import write_parquet
 
     key = sf_dir.strip("/").replace("/", "_")
-    out = _os.path.join(_SRC_ROOT, f"{key}_events_parts")
-    if not _os.path.exists(_os.path.join(out, "_SUCCESS")):
-        write_parquet(
-            load_table(spark, sf_dir, "events"),
-            out,
-            partition_by=["event_type"],
-        )
-    return out
+    return _stage_once(
+        _os.path.join(_SRC_ROOT, f"{key}_events_parts"),
+        lambda path: write_parquet(
+            load_table(spark, sf_dir, "events"), path, partition_by=["event_type"]
+        ),
+    )
 
 
 @register(

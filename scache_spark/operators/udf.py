@@ -236,10 +236,10 @@ def udtf_chunk_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
                 idx += 1
 
     spark.udtf.register("chunk_spans", ChunkSpans)
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView("_udtf_docs")
     return spark.sql(
         "SELECT d.doc_id, c.chunk_idx, c.n_tokens, c.first_token "
-        "FROM _udtf_docs d, LATERAL chunk_spans(d.text) c"
+        "FROM {docs} d, LATERAL chunk_spans(d.text) c",
+        docs=load_table(spark, sf_dir, "documents"),
     )
 
 

@@ -10,32 +10,18 @@ codegen properties on it.
 
 from __future__ import annotations
 
-import contextlib
-import io
 import re
 
 from pyspark.sql import DataFrame
 
 
 def formatted_plan(df: DataFrame) -> str:
-    """The formatted physical plan as a string.
-
-    Taken from the JVM directly (the same call DataFrame.explain
-    prints) rather than capturing stdout: redirect_stdout is
-    process-GLOBAL, so concurrent explains interleave their output
-    into whichever buffer is active — the threaded plan sweep in
-    tests/conftest.py produced shuffled shape counts that way.
-    """
-    try:
-        jvm = df.sparkSession._jvm
-        return jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
-    except Exception:
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
-        return buf.getvalue()
+    """The formatted physical plan as a string, taken from the JVM
+    directly (the call DataFrame.explain prints) — never by capturing
+    stdout, which is process-global and interleaves concurrent
+    explains."""
+    jvm = df.sparkSession._jvm
+    return jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
 
 
 def pushed_filters(df: DataFrame) -> str:
@@ -142,6 +128,11 @@ def codegen_stage_count(df: DataFrame) -> int:
 # (or side-effect) a stream run.
 SHAPE_SKIP_PREFIXES = ("stream_", "statestore_")
 
+# Swept queries whose builder runs a stream to completion: run_stream
+# sets spark.sql.shuffle.partitions for the run, so the sweep builds
+# them before its threads start and no concurrent explain sees it.
+BUILDS_RUN_STREAM = ("blocktrace_stream_waves",)
+
 
 def shape_counts(df: DataFrame) -> dict[str, int]:
     """The plan-shape numbers the regression ratchet records and
@@ -180,90 +171,23 @@ def sweep_plan_reports(
     generator, so both measure identically and both get the threaded
     speedup (~165 s serial -> tens of seconds).
 
-    DataFrame CONSTRUCTION is serialized under a lock: some builders
-    register fixed-name temp views or flip session confs, and
-    concurrent builds cross-contaminate (observed as shuffled shape
-    counts).  Only the explain/analysis threads — that work is JVM-
-    side behind py4j with the GIL released.  A builder that raises is
-    recorded as the exception; consumers decide how to report it.
-
-    Session state is RESTORED after each build (still under the
-    lock): explicitly-set SQL confs are snapshotted via ``SET`` and
-    any conf a builder changed is reset (or unset if it was unset
-    before), and temp views a builder registered are dropped.  Safe
-    because analysis is eager — a DataFrame built from a temp view
-    holds the resolved relation, so explaining it later does not need
-    the view.  Build-to-build contamination is therefore closed: a
-    leaked conf or fixed-name view cannot change a LATER BUILDER's
-    analyzed plan.
-
-    Explain-time scope (r9 advice): physical planning reads live
-    session confs, so a builder that SETS confs gets its plan_report
-    taken inside the lock, BEFORE the restore — its own plan reflects
-    its own confs and never a concurrent explain's.  Conf-UNTOUCHED
-    builders explain outside the lock for the thread speedup; the
-    residual race — such an explain overlapping another build's brief
-    set→restore window — remains possible by design (closing it would
-    serialize every explain behind every build).  Confs are only ever
-    non-baseline under the lock, so the exposure is that window, and
-    the CI shape ratchet re-running the sweep is the detector for a
-    shape flake from this source.
+    Builds run concurrently: batch builders bind their input frames
+    instead of registering fixed-name temp views and set no session
+    conf beyond the values ``get_session`` already pins, so one build
+    cannot change another's plan.  The BUILDS_RUN_STREAM queries are
+    built first, one at a time.  A builder that raises is recorded as
+    the exception; consumers decide how to report it.
     """
-    import threading
     from concurrent.futures import ThreadPoolExecutor
 
     from scache_spark.registry import REGISTRY, _ensure_loaded
 
     _ensure_loaded()
-    build_lock = threading.Lock()
-
-    def _set_confs() -> dict[str, str]:
-        # Only confs explicitly set in this session — small and cheap.
-        return {r["key"]: r["value"] for r in spark.sql("SET").collect()}
-
-    def _temp_views() -> set[str]:
-        return {v.name for v in spark.catalog.listTables() if v.isTemporary}
-
-    # Baselines taken ONCE: each build restores to the sweep-start
-    # state (equivalent to restoring the pre-build state as long as
-    # every restore succeeds) — one SET + one listTables py4j round
-    # trip per build instead of two of each, which matters 300+ times
-    # under the serial lock.
-    confs_base = _set_confs()
-    views_base = _temp_views()
 
     def one(item):
         name, spec = item
         try:
-            report = None
-            confs_now = None
-            with build_lock:
-                try:
-                    df = spec.fn(spark, sf)
-                    confs_now = _set_confs()
-                    if any(
-                        confs_base.get(k) != v for k, v in confs_now.items()
-                    ):
-                        # this builder set confs: physical-plan it NOW,
-                        # under the lock and before the restore, so its
-                        # plan reflects its own confs (r9 advice)
-                        report = plan_report(df)
-                finally:
-                    # a failed build may still have set confs before
-                    # raising — re-read in that case only
-                    if confs_now is None:
-                        confs_now = _set_confs()
-                    for k, v in confs_now.items():
-                        if confs_base.get(k) != v:
-                            if k in confs_base:
-                                spark.conf.set(k, confs_base[k])
-                            else:
-                                spark.conf.unset(k)
-                    for v in _temp_views() - views_base:
-                        spark.catalog.dropTempView(v)
-            if report is None:
-                report = plan_report(df)
-            return name, report
+            return name, plan_report(spec.fn(spark, sf))
         except Exception as exc:
             return name, exc
 
@@ -272,6 +196,8 @@ def sweep_plan_reports(
         for n, s in REGISTRY.items()
         if not n.startswith(SHAPE_SKIP_PREFIXES)
     ]
+    streamed = [t for t in todo if t[0] in BUILDS_RUN_STREAM]
+    batch = [t for t in todo if t[0] not in BUILDS_RUN_STREAM]
     # Explain-only sweep, so eager localCheckpoints are forced LAZY for
     # its duration (r10, pytest-wall item): materializing a local
     # checkpoint runs the builder's whole upstream job, and this sweep
@@ -282,8 +208,7 @@ def sweep_plan_reports(
     # has materialized — verified report-for-report against the
     # committed baseline), and generator and checker share this
     # function, so both keep measuring the same thing.  The patch is
-    # scoped and restored even on failure; conf-setting builders still
-    # explain under the lock exactly as before.
+    # scoped and restored even on failure.
     from pyspark.sql import DataFrame as _DF
 
     _orig_ckpt = _DF.localCheckpoint
@@ -293,7 +218,9 @@ def sweep_plan_reports(
 
     _DF.localCheckpoint = _lazy_ckpt
     try:
+        reports = dict(map(one, streamed))
         with ThreadPoolExecutor(max_workers=max_workers) as pool:
-            return dict(pool.map(one, todo))
+            reports.update(pool.map(one, batch))
+        return reports
     finally:
         _DF.localCheckpoint = _orig_ckpt

@@ -78,10 +78,7 @@ def get_session(
         # single core).  64 KB keeps such stages at defaultParallelism
         # without changing anything once real data volumes arrive —
         # the scale-adaptive direction §2.2 asks for.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_MIN_PARTITION_SIZE", "64k"),
-        )
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.adaptive.localShuffleReader.enabled", "true")
         # runtime row-level bloom filters: prune fact rows before the
@@ -111,10 +108,7 @@ def get_session(
         # map writer is what runs anyway — forcing it locally makes
         # the local shuffle machinery MATCH the at-scale one instead
         # of exercising a small-R-only code path.
-        .config(
-            "spark.shuffle.sort.bypassMergeThreshold",
-            os.environ.get("SPARK_GRAFT_BYPASS_MERGE", "1"),
-        )
+        .config("spark.shuffle.sort.bypassMergeThreshold", "1")
         # --- codecs: lz4 everywhere, matching the reference default ---
         .config("spark.io.compression.codec", "lz4")
         .config("spark.sql.parquet.compression.codec", "snappy")

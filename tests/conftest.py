@@ -135,13 +135,29 @@ def assert_frames_match(spark_pdf: pd.DataFrame, oracle_pdf: pd.DataFrame, name:
                 assert _cell_equal(a, b), f"{name}.{col}[{i}]: {a!r} != {b!r}"
 
 
+def session_state(spark) -> tuple[set[str], dict[str, str]]:
+    """What a batch query builder must leave as it found it: the
+    session's temp view names and its explicitly set SQL confs."""
+    views = {t.name for t in spark.catalog.listTables() if t.isTemporary}
+    confs = {r["key"]: r["value"] for r in spark.sql("SET").collect()}
+    return views, confs
+
+
 @pytest.fixture(scope="session")
-def plan_reports(spark):
+def plan_sweep(spark):
     """ONE plan sweep shared by the shape ratchet and the lint (r7):
     each batch query's DataFrame is built once and explained once —
     previously both tests independently re-built and re-explained all
     ~290 plans (~2 min of duplicated Catalyst work, plus re-executing
-    every eager localCheckpoint builder twice)."""
+    every eager localCheckpoint builder twice).  Returns the reports
+    with the session state recorded just before and just after."""
     from scache_spark.plans import sweep_plan_reports
 
-    return sweep_plan_reports(spark)
+    before = session_state(spark)
+    reports = sweep_plan_reports(spark)
+    return reports, before, session_state(spark)
+
+
+@pytest.fixture(scope="session")
+def plan_reports(plan_sweep):
+    return plan_sweep[0]

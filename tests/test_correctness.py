@@ -7,14 +7,16 @@ Execution model (r8, VERDICT item 7 — hold the suite under the
 submits one future per SELECTED test (it reads the post-filter
 collection, so a targeted ``pytest -k one_query`` run computes only
 that query instead of paying the full-suite cost) — DataFrame
-CONSTRUCTION serialized under a lock (some builders register
-fixed-name temp views; analysis is eager, so a built plan is immune
-to later view churn — the same discipline as
-plans.sweep_plan_reports), while collection (py4j, GIL released) and
-the DuckDB oracle (own connection per task, GIL released) overlap
-across queries.  Each parametrized test blocks only on its own
-future and pops it once consumed, so pandas pairs are freed as tests
-drain instead of living for the whole session.
+CONSTRUCTION serialized under a lock (stream runners set
+``spark.sql.shuffle.partitions`` for their run and register
+memory-sink views; batch builders need no lock, so
+plans.sweep_plan_reports has none: it skips stream_* and builds its
+BUILDS_RUN_STREAM queries before its threads start), while
+collection (py4j, GIL released) and the DuckDB oracle (own
+connection per task, GIL released) overlap across queries.  Each
+parametrized test blocks only on its own future and pops it once
+consumed, so pandas pairs are freed as tests drain instead of living
+for the whole session.
 """
 
 from __future__ import annotations
