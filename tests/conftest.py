@@ -1,11 +1,13 @@
 """Shared pytest fixtures: one SparkSession per run, a DuckDB oracle
-connection with fixture views registered, and the order-insensitive
-result comparator mirroring the driver's check."""
+connection with fixture views registered, the order-insensitive
+result comparator, and the one run-and-compare loop every tool and
+test checks queries with."""
 
 from __future__ import annotations
 
 import math
 import os
+import time
 
 import duckdb
 import numpy as np
@@ -29,13 +31,21 @@ def sf_dir() -> str:
     return SF_DIR
 
 
-@pytest.fixture(scope="session")
-def oracle_con():
+def oracle_con(sf_dir: str, tables=TABLES) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per table over the parquet
+    files in ``sf_dir`` -- where every oracle runs, so the comparison
+    stays engine-vs-engine on identical inputs."""
     con = duckdb.connect()
-    for name in TABLES:
+    for name in tables:
         con.execute(
-            f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{table_path(SF_DIR, name)}')"
+            f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{table_path(sf_dir, name)}')"
         )
+    return con
+
+
+@pytest.fixture(scope="session", name="oracle_con")
+def _oracle_con_fixture():
+    con = oracle_con(SF_DIR)
     yield con
     con.close()
 
@@ -135,6 +145,41 @@ def assert_frames_match(spark_pdf: pd.DataFrame, oracle_pdf: pd.DataFrame, name:
                 assert _cell_equal(a, b), f"{name}.{col}[{i}]: {a!r} != {b!r}"
 
 
+def check_queries(spark, sf_dir: str, names, oracles=None, queries=None) -> dict:
+    """Run each named query on ``sf_dir`` and compare it with its DuckDB
+    oracle over the same files; returns ``{name: {status, sec, rows,
+    err}}`` with status MATCH or FAIL (a query without an oracle is a
+    FAIL) and prints one line per query.  ``queries`` (name -> builder)
+    and ``oracles`` (name -> SQL) default to the registry's."""
+    from scache_spark.registry import all_oracles, all_queries
+
+    queries = queries or all_queries()
+    oracles = oracles or all_oracles()
+    con = oracle_con(sf_dir)
+    results: dict[str, dict] = {}
+    for name in names:
+        t0 = time.time()
+        try:
+            if name not in oracles:
+                raise LookupError(f"{name}: no oracle")
+            spdf = queries[name](spark, sf_dir).toPandas()
+            odf = con.execute(oracles[name]).df()
+            assert_frames_match(spdf, odf, name)
+            status, err = "MATCH", None
+        except Exception as ex:  # noqa: BLE001 - recorded per query
+            status, err = "FAIL", str(ex)[:300]
+        dt = round(time.time() - t0, 1)
+        results[name] = {
+            "status": status,
+            "sec": dt,
+            "rows": None if err else len(spdf),
+            "err": err,
+        }
+        print(f"  {name:32s} {status}  {dt}s  {err or ''}", flush=True)
+    con.close()
+    return results
+
+
 def session_state(spark) -> tuple[set[str], dict[str, str]]:
     """What a batch query builder must leave as it found it: the
     session's temp view names and its explicitly set SQL confs."""
@@ -161,3 +206,4 @@ def plan_sweep(spark):
 @pytest.fixture(scope="session")
 def plan_reports(plan_sweep):
     return plan_sweep[0]
+

@@ -24,12 +24,10 @@ from __future__ import annotations
 import threading
 from concurrent.futures import ThreadPoolExecutor
 
-import duckdb
 import pytest
 
-from scache_spark.catalog import TABLES, table_path
 from scache_spark.registry import REGISTRY, _ensure_loaded
-from tests.conftest import assert_frames_match
+from tests.conftest import assert_frames_match, oracle_con
 
 _ensure_loaded()
 
@@ -46,13 +44,8 @@ def correctness_results(request, spark, sf_dir):
         with build_lock:
             df = spec.fn(spark, sf_dir)
         spark_pdf = df.toPandas()
-        con = duckdb.connect()
+        con = oracle_con(sf_dir)
         try:
-            for t in TABLES:
-                con.execute(
-                    f"CREATE VIEW {t} AS SELECT * FROM "
-                    f"read_parquet('{table_path(sf_dir, t)}')"
-                )
             oracle_pdf = con.execute(spec.oracle).df()
         finally:
             con.close()

@@ -183,15 +183,11 @@ def _stage(tmp, docs=None, vecs=None, events=None) -> str:
 def _check(spark, sf_dir: str, names: list[str], tables: list[str]) -> None:
     from __spark_entry__ import oracle_sql
     from scache_spark.registry import REGISTRY, _ensure_loaded
-    from tests.conftest import assert_frames_match
+    from tests.conftest import assert_frames_match, oracle_con
 
     _ensure_loaded()
     oracles = oracle_sql()
-    con = duckdb.connect()
-    for t in tables:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    con = oracle_con(sf_dir, tables)
     for name in names:
         spdf = REGISTRY[name].fn(spark, sf_dir).toPandas()
         odf = con.execute(oracles[name]).df()

@@ -2,16 +2,29 @@
 the staging transform must stay correct or the x10 artifacts stop
 being reproducible.  Stages a tiny x2 replica from sf0.001 and checks
 the structural invariants the full run relies on, plus one real
-query-vs-oracle compare on the replica."""
+query-vs-oracle compare on the replica; then the boilerplate replica
+and every dirty axis (one AXES entry each) against their oracles."""
 
 from __future__ import annotations
 
+import re
 import shutil
 
 import duckdb
 import pytest
 
-from tools.scale_stress import DEFAULT_QUERIES, TABLES, stage
+from scache_spark.catalog import TABLES
+from tests.conftest import SF_DIR, check_queries
+from tools import scale_stress
+from tools.scale_stress import (
+    AXES,
+    DEFAULT_QUERIES,
+    DIRTY_BINARY_QUERIES,
+    DIRTY_TRACE_QUERIES,
+    axis_pool,
+    stage,
+    stage_axis,
+)
 
 
 @pytest.fixture(scope="module")
@@ -58,21 +71,10 @@ def test_default_queries_resolve():
 def test_one_query_matches_oracle_on_replica(spark, x2_dir):
     """End-to-end: the engine and DuckDB agree on the staged replica
     (the same compare the full x10 run performs, one cheap query)."""
-    from __spark_entry__ import oracle_sql
-    from scache_spark.registry import REGISTRY, _ensure_loaded
-    from tests.conftest import assert_frames_match
-
-    _ensure_loaded()
     name = "flagship_revenue_by_region"
-    spdf = REGISTRY[name].fn(spark, x2_dir).toPandas()
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{x2_dir}/{t}.parquet')"
-        )
-    odf = con.execute(oracle_sql()[name]).df()
-    assert_frames_match(spdf, odf, name)
-    assert len(spdf) > 0
+    got = check_queries(spark, x2_dir, [name])[name]
+    assert got["status"] == "MATCH", got["err"]
+    assert got["rows"] > 0
 
 
 # ---------------------------------------------------------------------------
@@ -105,33 +107,32 @@ def test_capped_dedup_matches_oracle_under_boilerplate(spark, bp_dir):
     """The guarded operator must return the oracle answer on the
     hot-shingle corpus — demotion happens identically in both engines,
     so parity here proves the cap semantics, not just survival."""
-    from __spark_entry__ import oracle_sql
-    from scache_spark.registry import REGISTRY, _ensure_loaded
-    from tests.conftest import assert_frames_match
-
-    _ensure_loaded()
     name = "dedup_minhash_capped_pairs"
-    spdf = REGISTRY[name].fn(spark, bp_dir).toPandas()
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{bp_dir}/documents.parquet')"
-    )
-    odf = con.execute(oracle_sql()[name]).df()
-    assert_frames_match(spdf, odf, name)
+    got = check_queries(spark, bp_dir, [name])[name]
+    assert got["status"] == "MATCH", got["err"]
 
 
 # ---------------------------------------------------------------------------
-# dirty-corpus contract (r6): the planted pathological document rows
+# dirty axes: each AXES replica staged once per module, its regression
+# list checked against the oracles (the full pools run in the
+# SCALE_STRESS_dirty*.json artifacts at sf0.1)
 # ---------------------------------------------------------------------------
 
 
 @pytest.fixture(scope="module")
-def dirty_dir():
-    from tools.scale_stress import stage_dirty
+def axis_dir():
+    """``axis_dir(name)``: axis ``name``'s sf0.001 replica, staged on
+    first use and removed after the module."""
+    dirs: dict[str, str] = {}
 
-    out = stage_dirty("/root/testdata/sf0.001")
-    yield out
-    shutil.rmtree(out, ignore_errors=True)
+    def get(name: str) -> str:
+        if name not in dirs:
+            dirs[name] = stage_axis(SF_DIR, name)
+        return dirs[name]
+
+    yield get
+    for d in dirs.values():
+        shutil.rmtree(d, ignore_errors=True)
 
 
 # The 16 queries the dirty stress originally broke (ANSI div-by-zero,
@@ -174,69 +175,113 @@ _DIRTY_REGRESSIONS = [
 ]
 
 
-def test_dirty_corpus_contracts_hold(spark, dirty_dir):
-    """Every formerly-broken query must match its oracle on the
-    pathological corpus — the regression guard for the r6 dirty-input
-    contracts (SCALE_STRESS_dirty.json).  stream_neardup_suppress is
-    covered by the full --dirty artifact, not here (streaming in the
-    shared-session test suite is slow)."""
-    from __spark_entry__ import oracle_sql
-    from scache_spark.registry import REGISTRY, _ensure_loaded
-    from tests.conftest import assert_frames_match
-
-    _ensure_loaded()
-    oracles = oracle_sql()
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{dirty_dir}/{t}.parquet')"
-        )
-    for name in _DIRTY_REGRESSIONS:
-        spdf = REGISTRY[name].fn(spark, dirty_dir).toPandas()
-        odf = con.execute(oracles[name]).df()
-        assert_frames_match(spdf, odf, name)
+# The 5 queries the dirty-catalog stress originally broke (NULL name
+# NULLing downstream array set ops, len(NULL)!=0 dropping the
+# explode_outer null row, CSV destroying the NULL-vs-'' distinction,
+# byte-vs-codepoint levenshtein, transpose minting data-dependent
+# columns) — each now carries an explicit dirty-catalog contract
+# (SCALE.md §16); fuzzy_match_levenshtein joins as the latent
+# byte-distance case the artifact proved only accidentally green.
+_DIRTY_CATALOG_REGRESSIONS = [
+    "array_set_ops",
+    "csv_source_agg",
+    "explode_outer_nulls",
+    "fastss_edit1_pairs",
+    "transpose_segment_stats",
+    "fuzzy_match_levenshtein",
+    "snm_neighbor_pairs",
+    "collated_group_dedup",
+]
 
 
-# ---------------------------------------------------------------------------
-# dirty-binary contract (r9): pathological payloads vs the decode budget
-# ---------------------------------------------------------------------------
+# The 20 queries the dirty-orders stress originally broke (NULL window
+# keys under divergent engine NULL-ordering defaults, ln/sqrt domain
+# errors, ANSI overflow/div-by-zero vs DuckDB promotion/inf, Benford's
+# '-' digit, out-of-bounds split access, inner-join shard merges
+# dropping one-sided and NULL groups, Python UDF None crashes, a
+# presence-masked timestamp-vs-date cast) — each now an explicit
+# engine+oracle contract (SCALE.md §17).  stream_scd2_pit_enrich is
+# covered by the full --dirty-orders artifact, not here (streaming in
+# the shared-session suite is slow); the two latent binning twins
+# (ks_drift_binned, equi_depth_hist_binning) joined the domain-guard
+# contract preemptively and are guarded too.
+_DIRTY_ORDERS_REGRESSIONS = [
+    "autocorrelation_daily",
+    "avro_source_roundtrip",
+    "benford_digit_audit",
+    "cusum_changepoint",
+    "equi_depth_binning",
+    "equi_depth_hist_binning",
+    "kll_sketch_ks_drift",
+    "ks_drift_binned",
+    "ks_drift_statistic",
+    "math_funcs",
+    "pit_dimension_join",
+    "psi_drift_bins",
+    "scd2_status_history",
+    "string_split_parse",
+    "tpch_q2_min_cost_supplier",
+    "try_arithmetic_battery",
+    "udf_arrow_scalar",
+    "variance_partial_merge",
+    "window_analytics",
+    "window_distribution",
+    "woe_iv_binning",
+]
 
 
-@pytest.fixture(scope="module")
-def dirty_binary_dir():
-    from tools.scale_stress import stage_dirty_binary
-
-    out = stage_dirty_binary("/root/testdata/sf0.001")
-    yield out
-    shutil.rmtree(out, ignore_errors=True)
-
-
-def test_dirty_binary_contracts_hold(spark, dirty_binary_dir):
-    """The multimodal family must match its oracles on the planted
-    binary payloads (NULL / empty / bad-magic / truncated / oversize /
-    valid-framed) — the in-suite guard for the --dirty-binary axis
-    (SCALE_STRESS_dirty_binary.json)."""
-    from __spark_entry__ import oracle_sql
-
-    from scache_spark.registry import REGISTRY, _ensure_loaded
-    from tests.conftest import assert_frames_match
-    from tools.scale_stress import DIRTY_BINARY_QUERIES
-
-    _ensure_loaded()
-    oracles = oracle_sql()
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{dirty_binary_dir}/{t}.parquet')"
-        )
-    for name in DIRTY_BINARY_QUERIES:
-        spdf = REGISTRY[name].fn(spark, dirty_binary_dir).toPandas()
-        odf = con.execute(oracles[name]).df()
-        assert_frames_match(spdf, odf, name)
+# The per-axis regression lists: --dirty-binary and --dirty-trace
+# guard their whole pools; --dirty-embeddings a representative slice
+# of the vector family (its full 31-query pool runs at sf0.1);
+# stream_neardup_suppress (--dirty) is covered by the full artifact,
+# not here (streaming in the shared-session suite is slow);
+# --dirty-events has no in-suite list (tests/test_dirty_properties.py
+# fuzzes its event contracts).
+_REGRESSIONS = {
+    "dirty": _DIRTY_REGRESSIONS,
+    "dirty_catalog": _DIRTY_CATALOG_REGRESSIONS,
+    "dirty_orders": _DIRTY_ORDERS_REGRESSIONS,
+    "dirty_trace": DIRTY_TRACE_QUERIES,
+    "dirty_binary": DIRTY_BINARY_QUERIES,
+    "dirty_embeddings": [
+        "embedding_ingest_audit",
+        "knn_brute_cosine",
+        "ann_lsh_buckets",
+        "embedding_int8_quantize",
+        "embedding_dim_stats",
+        "array_explode_agg",
+        "kmeans_two_rounds",
+        "posexplode_embedding_head",
+    ],
+}
 
 
-def test_dirty_binary_plant_statuses_pinned(spark, dirty_binary_dir):
+def test_axes_table_is_complete():
+    """No Spark: every AXES pool is non-empty and registered, holds its
+    regression list, and the derived --dirty* flags are exactly the
+    ones the module docstring documents."""
+    from scache_spark.registry import REGISTRY
+
+    for name in AXES:
+        pool = axis_pool(name)
+        assert pool and set(pool) <= set(REGISTRY), name
+        assert set(_REGRESSIONS.get(name, [])) <= set(pool), name
+    assert set(_REGRESSIONS) <= set(AXES)
+    documented = set(re.findall(r"^  (--dirty[\w-]*)", scale_stress.__doc__, re.M))
+    assert documented == {a.flag for a in AXES.values()}
+
+
+@pytest.mark.parametrize("axis", [n for n in AXES if n in _REGRESSIONS])
+def test_dirty_axis_contracts_hold(spark, axis_dir, axis):
+    """Every query on the axis's regression list must match its oracle
+    on the planted rows — the in-suite guard for the axis's
+    SCALE_STRESS_<axis>.json contracts."""
+    results = check_queries(spark, axis_dir(axis), _REGRESSIONS[axis])
+    bad = {n: r["err"] for n, r in results.items() if r["status"] != "MATCH"}
+    assert bad == {}
+
+
+def test_dirty_binary_plant_statuses_pinned(spark, axis_dir):
     """Each planted payload must land on its EXACT decode status (the
     _safe_decode precedence contract), the valid framed plants must
     decode their BODY bytes (4 video frames from a 256-byte payload,
@@ -245,6 +290,7 @@ def test_dirty_binary_plant_statuses_pinned(spark, dirty_binary_dir):
     from scache_spark.registry import REGISTRY, _ensure_loaded
 
     _ensure_loaded()
+    dirty_binary_dir = axis_dir("dirty_binary")
     feats = (
         REGISTRY["multimodal_features"]
         .fn(spark, dirty_binary_dir)
@@ -296,181 +342,7 @@ def test_dirty_binary_plant_statuses_pinned(spark, dirty_binary_dir):
     assert len(wins) == 4
 
 
-# ---------------------------------------------------------------------------
-# dirty-catalog contract (r7): pathological part/supplier/customer rows
-# ---------------------------------------------------------------------------
-
-
-@pytest.fixture(scope="module")
-def dirty_catalog_dir():
-    from tools.scale_stress import stage_dirty_catalog
-
-    out = stage_dirty_catalog("/root/testdata/sf0.001")
-    yield out
-    shutil.rmtree(out, ignore_errors=True)
-
-
-# The 5 queries the dirty-catalog stress originally broke (NULL name
-# NULLing downstream array set ops, len(NULL)!=0 dropping the
-# explode_outer null row, CSV destroying the NULL-vs-'' distinction,
-# byte-vs-codepoint levenshtein, transpose minting data-dependent
-# columns) — each now carries an explicit dirty-catalog contract
-# (SCALE.md §16); fuzzy_match_levenshtein joins as the latent
-# byte-distance case the artifact proved only accidentally green.
-_DIRTY_CATALOG_REGRESSIONS = [
-    "array_set_ops",
-    "csv_source_agg",
-    "explode_outer_nulls",
-    "fastss_edit1_pairs",
-    "transpose_segment_stats",
-    "fuzzy_match_levenshtein",
-    "snm_neighbor_pairs",
-    "collated_group_dedup",
-]
-
-
-def test_dirty_catalog_contracts_hold(spark, dirty_catalog_dir):
-    """Every formerly-broken query must match its oracle on the
-    pathological catalog — the regression guard for the r7
-    dirty-catalog contracts (SCALE_STRESS_dirty_catalog.json)."""
-    from __spark_entry__ import oracle_sql
-    from scache_spark.registry import REGISTRY, _ensure_loaded
-    from tests.conftest import assert_frames_match
-
-    _ensure_loaded()
-    oracles = oracle_sql()
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{dirty_catalog_dir}/{t}.parquet')"
-        )
-    for name in _DIRTY_CATALOG_REGRESSIONS:
-        spdf = REGISTRY[name].fn(spark, dirty_catalog_dir).toPandas()
-        odf = con.execute(oracles[name]).df()
-        assert_frames_match(spdf, odf, name)
-
-
-# ---------------------------------------------------------------------------
-# dirty-orders contract (r7): pathological fact-table dates & numerics
-# ---------------------------------------------------------------------------
-
-
-@pytest.fixture(scope="module")
-def dirty_orders_dir():
-    from tools.scale_stress import stage_dirty_orders
-
-    out = stage_dirty_orders("/root/testdata/sf0.001")
-    yield out
-    shutil.rmtree(out, ignore_errors=True)
-
-
-# The 20 queries the dirty-orders stress originally broke (NULL window
-# keys under divergent engine NULL-ordering defaults, ln/sqrt domain
-# errors, ANSI overflow/div-by-zero vs DuckDB promotion/inf, Benford's
-# '-' digit, out-of-bounds split access, inner-join shard merges
-# dropping one-sided and NULL groups, Python UDF None crashes, a
-# presence-masked timestamp-vs-date cast) — each now an explicit
-# engine+oracle contract (SCALE.md §17).  stream_scd2_pit_enrich is
-# covered by the full --dirty-orders artifact, not here (streaming in
-# the shared-session suite is slow); the two latent binning twins
-# (ks_drift_binned, equi_depth_hist_binning) joined the domain-guard
-# contract preemptively and are guarded too.
-_DIRTY_ORDERS_REGRESSIONS = [
-    "autocorrelation_daily",
-    "avro_source_roundtrip",
-    "benford_digit_audit",
-    "cusum_changepoint",
-    "equi_depth_binning",
-    "equi_depth_hist_binning",
-    "kll_sketch_ks_drift",
-    "ks_drift_binned",
-    "ks_drift_statistic",
-    "math_funcs",
-    "pit_dimension_join",
-    "psi_drift_bins",
-    "scd2_status_history",
-    "string_split_parse",
-    "tpch_q2_min_cost_supplier",
-    "try_arithmetic_battery",
-    "udf_arrow_scalar",
-    "variance_partial_merge",
-    "window_analytics",
-    "window_distribution",
-    "woe_iv_binning",
-]
-
-
-def test_dirty_orders_contracts_hold(spark, dirty_orders_dir):
-    """Every formerly-broken query must match its oracle on the
-    pathological fact tables — the regression guard for the r7
-    dirty-orders contracts (SCALE_STRESS_dirty_orders.json)."""
-    from __spark_entry__ import oracle_sql
-    from scache_spark.registry import REGISTRY, _ensure_loaded
-    from tests.conftest import assert_frames_match
-
-    _ensure_loaded()
-    oracles = oracle_sql()
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{dirty_orders_dir}/{t}.parquet')"
-        )
-    for name in _DIRTY_ORDERS_REGRESSIONS:
-        spdf = REGISTRY[name].fn(spark, dirty_orders_dir).toPandas()
-        odf = con.execute(oracles[name]).df()
-        assert_frames_match(spdf, odf, name)
-
-
-# ---------------------------------------------------------------------------
-# dirty-embeddings contract (r9): the vector_ready ingest classes
-# ---------------------------------------------------------------------------
-
-
-@pytest.fixture(scope="module")
-def dirty_embeddings_dir():
-    from tools.scale_stress import stage_dirty_embeddings
-
-    out = stage_dirty_embeddings("/root/testdata/sf0.001")
-    yield out
-    shutil.rmtree(out, ignore_errors=True)
-
-
-def test_dirty_embeddings_contracts_hold(spark, dirty_embeddings_dir):
-    """A representative slice of the vector family must match its
-    oracles on the planted corruption classes — the in-suite guard for
-    the --dirty-embeddings axis (SCALE_STRESS_dirty_embeddings.json;
-    the full 31-query pool runs there at sf0.1)."""
-    from __spark_entry__ import oracle_sql
-
-    from scache_spark.registry import REGISTRY, _ensure_loaded
-    from tests.conftest import assert_frames_match
-
-    _ensure_loaded()
-    oracles = oracle_sql()
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{dirty_embeddings_dir}/{t}.parquet')"
-        )
-    for name in [
-        "embedding_ingest_audit",
-        "knn_brute_cosine",
-        "ann_lsh_buckets",
-        "embedding_int8_quantize",
-        "embedding_dim_stats",
-        "array_explode_agg",
-        "kmeans_two_rounds",
-        "posexplode_embedding_head",
-    ]:
-        spdf = REGISTRY[name].fn(spark, dirty_embeddings_dir).toPandas()
-        odf = con.execute(oracles[name]).df()
-        assert_frames_match(spdf, odf, name)
-
-
-def test_dirty_embeddings_plant_classes_pinned(spark, dirty_embeddings_dir):
+def test_dirty_embeddings_plant_classes_pinned(spark, axis_dir):
     """Each planted vector must land on its EXACT audit class (the
     census precedence contract), the negative-id healthy plant must
     NOT hijack a k-means/IVF seed, and the magnitude outlier must be
@@ -481,6 +353,7 @@ def test_dirty_embeddings_plant_classes_pinned(spark, dirty_embeddings_dir):
     from scache_spark.registry import REGISTRY, _ensure_loaded
 
     _ensure_loaded()
+    dirty_embeddings_dir = axis_dir("dirty_embeddings")
     e = load_table(spark, dirty_embeddings_dir, "embeddings")
     plant_ids = {95001, 95002, 95003, 95004, 95005, 95006, 95007, 95008,
                  95009, 95010, -95011}

@@ -1,16 +1,15 @@
 """Drive __spark_entry__ exactly as the driver does: entry() smoke at
 sf0.001, then every queries() entry at sf0.01 vs oracle_sql() in DuckDB,
-order-insensitive compare."""
-import sys, time
+order-insensitive compare (tests.conftest.check_queries)."""
+import os
+import sys
+import time
 
-sys.path.insert(0, "/root/repo")
-import duckdb
-import numpy as np
-import pandas as pd
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as E
 from scache_spark.session import get_session
-from tests.conftest import assert_frames_match  # same comparator semantics
+from tests.conftest import check_queries  # same comparator semantics
 
 SF = __import__("os").environ.get("DRIVE_SF_DIR", "/root/testdata/sf0.01")
 spark = get_session("driver-sim")
@@ -23,29 +22,10 @@ print(f"entry(): {len(rows)} rows, schema={[f.name for f in df.schema.fields]}, 
 qs, os_ = E.queries(), E.oracle_sql()
 # optional scope: substrings on argv — `python tools/drive_entry.py kll theta`
 # runs only queries whose name contains any argument (full sweep otherwise).
-if sys.argv[1:]:
-    qs = {n: f for n, f in qs.items() if any(s in n for s in sys.argv[1:])}
-print(f"{len(qs)} queries, {len(os_)} oracles")
+names = sorted(n for n in qs if not sys.argv[1:] or any(s in n for s in sys.argv[1:]))
+print(f"{len(names)} queries, {len(os_)} oracles")
 
-con = duckdb.connect()
-for name in ["region","nation","customer","supplier","part","orders","lineitem","events","documents","embeddings"]:
-    con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{SF}/{name}.parquet')")
-
-fails = []
-for name, fn in sorted(qs.items()):
-    t = time.time()
-    try:
-        spdf = fn(spark, SF).toPandas()
-        if name in os_:
-            odf = con.execute(os_[name]).df()
-            assert_frames_match(spdf, odf, name)
-            status = f"MATCH  ({len(spdf)} rows)"
-        else:
-            status = f"ROWS-ONLY ({len(spdf)} rows)"
-    except Exception as ex:
-        status = f"FAIL: {str(ex)[:140]}"
-        fails.append(name)
-    print(f"  {name:32s} {status}  {time.time()-t:.1f}s")
-
+results = check_queries(spark, SF, names, oracles=os_, queries=qs)
+fails = [n for n, r in results.items() if r["status"] == "FAIL"]
 print(f"\n{'ALL OK' if not fails else 'FAILURES: ' + str(fails)}")
 sys.exit(1 if fails else 0)

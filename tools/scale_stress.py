@@ -1,7 +1,8 @@
 """Scale-stress harness (r4 verdict item 2): exercise the engine's
 scale CONSTANTS — broadcast admission, capped hot bands, checkpoint
 sizes, histogram bins, skew splits — at a scale factor the shipped
-fixtures don't reach.
+fixtures don't reach, and its input contracts on planted
+pathological rows.
 
 The box carries no sf1 fixture, so this stages a ×F replica derived
 from sf0.1 by KEY-SHIFTED replication: fact tables are unioned F
@@ -21,24 +22,36 @@ Run:  python tools/scale_stress.py [--factor 10] [--base /root/testdata/sf0.1]
                                    [name-substr ...]
 Writes SCALE_STRESS_x{F}.json at the repo root.
 
-Other protocols (each its own flag, mutually exclusive; all accept
-name-substring scoping and write their own artifact):
+Every protocol has one shape: stage a replica (``_stage_replica``
+with a per-table SELECT), run a query pool through
+``tests.conftest.check_queries`` (each query against its DuckDB oracle
+on the same staged files), and write one artifact
+(``write_artifact``).  Name substrings scope every protocol's pool
+(``select_names``); a scoped run writes a suffixed artifact and leaves
+the full one untouched.
+
+Other protocols (each its own flag, mutually exclusive):
   --timed           TIMED x10 bench (r9 verdict item 2): per-query
                     seconds on the uniform xF replica for the
                     structurally-optimized paths + the streaming four,
                     bench.py's estimator (untimed warm pass, then
-                    interleaved reps, per-query MIN), honoring
-                    $SPARK_GRAFT_CPUS — the sf0.1 box cannot show
-                    parallelism (fixed driver cost dominates sub-2s
-                    queries), so this is where plan-shape claims get
-                    timed at a scale where they bind.  No oracle
-                    compare (the x10 MATCH sweeps are separate);
-                    writes SCALE_STRESS_timed_x{F}_c{cpus}.json.
+                    TIMED_REPS interleaved reps, per-query MIN),
+                    honoring $SPARK_GRAFT_CPUS — the sf0.1 box cannot
+                    show parallelism (fixed driver cost dominates
+                    sub-2s queries), so this is where plan-shape
+                    claims get timed at a scale where they bind.  No
+                    oracle compare (the x10 MATCH sweeps are
+                    separate); writes SCALE_STRESS_timed_x{F}_c{cpus}.json.
   --rest            the x10 pool complement (everything not in
                     DEFAULT_QUERIES, minus disclosed REST_EXCLUDE)
   --skew N          hot-key replica (one user holds N copies)
   --boilerplate     hot-SHINGLE skew (shared preamble; BAND_CAP proof)
-  --checksum        SF-proportional-output queries via XOR checksums
+  --checksum        SF-proportional-output queries via XOR checksums,
+                    merged into SCALE_STRESS_x{F}_rest.json
+
+The dirty axes are one AXES entry each (planted rows per table, query
+pool, mode text); an axis's flag is its name with dashes, its artifact
+SCALE_STRESS_<name>.json:
   --dirty           pathological DOCUMENT + EMBEDDING rows (SCALE.md §13)
   --dirty-events    pathological EVENT rows (§14)
   --dirty-catalog   pathological part/supplier/customer strings (§16)
@@ -54,20 +67,22 @@ name-substring scoping and write their own artifact):
 
 from __future__ import annotations
 
+import glob
 import json
 import os
+import shutil
 import sys
 import time
+from collections.abc import Callable
+from dataclasses import dataclass
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 import duckdb
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+from scache_spark.catalog import TABLES
+
 
 # (table, key columns to shift). orders/lineitem share the orderkey
 # shift so the FK survives; dims are copied verbatim.
@@ -214,50 +229,117 @@ BOILERPLATE_PCT_GUARDED = 60
 BOILERPLATE_PCT_UNGUARDED = 1
 
 
-def stage_boilerplate(base: str, factor: int, pct: int) -> str:
-    """Stage a xF replica where ``pct`` percent of documents carry a
-    shared BOILERPLATE preamble appended to their text; every other
-    table is staged exactly as :func:`stage`.  Both engines read the
-    same staged parquet, so the compare stays engine-vs-engine."""
+def _stage_replica(base: str, name: str, select, marker: dict) -> str:
+    """The one stager: write ``<repo>/.scale_stress/<base key>_<name>``
+    with one parquet file per table, each the DuckDB query
+    ``select(con, table, src)`` over the table's source scan ``src``,
+    then a ``_STAGED`` marker holding ``base`` and ``marker``.  A dir
+    that has its marker is reused as it is.  Staging afresh first
+    drops every cache DERIVED from the dir (the avro/csv/orc alt-format
+    stagings, the streaming source copies) — they key on the dir path,
+    not its contents."""
     key = base.strip("/").replace("/", "_")
-    out = os.path.join(REPO, ".scale_stress", f"{key}_x{factor}_bp{pct}")
-    marker = os.path.join(out, "_STAGED")
-    if os.path.exists(marker):
+    out = os.path.join(REPO, ".scale_stress", f"{key}_{name}")
+    marker_path = os.path.join(out, "_STAGED")
+    if os.path.exists(marker_path):
         return out
+    derived_key = out.strip("/").replace("/", "_")
+    for root in (".alt_src", ".stream_src"):
+        for d in glob.glob(os.path.join(REPO, root, f"*{derived_key}*")):
+            shutil.rmtree(d, ignore_errors=True)
     os.makedirs(out, exist_ok=True)
     con = duckdb.connect()
     for t in TABLES:
-        src = f"read_parquet('{base}/{t}.parquet')"
-        shifts = _SHIFTED.get(t)
-        if not shifts:
-            sel = f"SELECT * FROM {src}"
-        else:
-            shift_src = (
-                f"read_parquet('{base}/orders.parquet')" if t == "lineitem" else src
-            )
-            shift_col = "o_orderkey" if t == "lineitem" else shifts[0]
-            (span,) = con.execute(
-                f"SELECT max({shift_col}) + 1 FROM {shift_src}"
-            ).fetchone()
-            repl = ", ".join(f"s.{c} + t.i * {span} AS {c}" for c in shifts)
-            sel = (
-                f"SELECT s.* REPLACE ({repl}) FROM {src} s "
-                f"CROSS JOIN range({factor}) t(i)"
-            )
-        if t == "documents":
-            sel = (
-                f"SELECT * REPLACE (CASE WHEN doc_id % 100 < {pct} "
-                f"THEN text || ' {BOILERPLATE}' ELSE text END AS text) "
-                f"FROM ({sel})"
-            )
+        sel = select(con, t, f"read_parquet('{base}/{t}.parquet')")
         con.execute(
             f"COPY ({sel}) TO '{out}/{t}.parquet' "
             f"(FORMAT PARQUET, ROW_GROUP_SIZE 262144)"
         )
         print(f"  staged {t}", flush=True)
-    with open(marker, "w") as f:
-        f.write(json.dumps({"base": base, "factor": factor, "boilerplate_pct": pct}))
+    with open(marker_path, "w") as f:
+        f.write(json.dumps({"base": base, **marker}))
     return out
+
+
+def _shifted(con, base: str, t: str, src: str, factor: int) -> str:
+    """``src`` unioned ``factor`` times with its key columns shifted
+    per copy; dims verbatim."""
+    shifts = _SHIFTED.get(t)
+    if not shifts:
+        return f"SELECT * FROM {src}"
+    # one shift constant per base table family; orders and lineitem
+    # both shift by the ORDERS key range
+    shift_src = f"read_parquet('{base}/orders.parquet')" if t == "lineitem" else src
+    shift_col = "o_orderkey" if t == "lineitem" else shifts[0]
+    (span,) = con.execute(f"SELECT max({shift_col}) + 1 FROM {shift_src}").fetchone()
+    repl = ", ".join(f"s.{c} + t.i * {span} AS {c}" for c in shifts)
+    return f"SELECT s.* REPLACE ({repl}) FROM {src} s CROSS JOIN range({factor}) t(i)"
+
+
+def stage(base: str, factor: int) -> str:
+    """Stage the uniform xF key-shifted replica of ``base``."""
+    return _stage_replica(
+        base,
+        f"x{factor}",
+        lambda con, t, src: _shifted(con, base, t, src, factor),
+        {"factor": factor},
+    )
+
+
+def stage_skew(base: str, hot_copies: int) -> str:
+    """Stage a skewed replica: the smallest user_id's events and the
+    smallest o_custkey's orders (+their lineitems) are replicated
+    ``hot_copies`` extra times with shifted event/order keys, values
+    untouched — one key ends up owning most of its table, which is
+    what a viral user / hot SKU looks like at 100 TB."""
+    orders = f"read_parquet('{base}/orders.parquet')"
+
+    def select(con, t, src):
+        one = lambda q: con.execute(q).fetchone()[0]  # noqa: E731
+        if t == "events":
+            key, span = "event_id", one(f"SELECT max(event_id) + 1 FROM {src}")
+            hot = f"s.user_id = {one(f'SELECT min(user_id) FROM {src}')}"
+        elif t in ("orders", "lineitem"):
+            span = one(f"SELECT max(o_orderkey) + 1 FROM {orders}")
+            hotc = one(f"SELECT min(o_custkey) FROM {orders}")
+            if t == "orders":
+                key, hot = "o_orderkey", f"s.o_custkey = {hotc}"
+            else:
+                key = "l_orderkey"
+                hot = (
+                    f"s.l_orderkey IN (SELECT o_orderkey FROM {orders} "
+                    f"WHERE o_custkey = {hotc})"
+                )
+        else:
+            return f"SELECT * FROM {src}"
+        return (
+            f"SELECT * FROM {src} UNION ALL "
+            f"SELECT s.* REPLACE (s.{key} + (t.i + 1) * {span} AS {key}) "
+            f"FROM {src} s CROSS JOIN range({hot_copies}) t(i) WHERE {hot}"
+        )
+
+    return _stage_replica(base, f"skew{hot_copies}", select, {"hot_copies": hot_copies})
+
+
+def stage_boilerplate(base: str, factor: int, pct: int) -> str:
+    """Stage a xF replica where ``pct`` percent of documents carry a
+    shared BOILERPLATE preamble appended to their text; every other
+    table is staged exactly as :func:`stage`.  Both engines read the
+    same staged parquet, so the compare stays engine-vs-engine."""
+
+    def select(con, t, src):
+        sel = _shifted(con, base, t, src, factor)
+        if t != "documents":
+            return sel
+        return (
+            f"SELECT * REPLACE (CASE WHEN doc_id % 100 < {pct} "
+            f"THEN text || ' {BOILERPLATE}' ELSE text END AS text) "
+            f"FROM ({sel})"
+        )
+
+    return _stage_replica(
+        base, f"x{factor}_bp{pct}", select, {"factor": factor, "boilerplate_pct": pct}
+    )
 
 
 # --dirty (r6): DIRTY-CORPUS stress — the pathological document rows a
@@ -314,127 +396,6 @@ _DIRTY_ROWS_SQL = """
 """
 
 
-def _stage_dirty_replica(
-    base: str, suffix: str, plants: dict, n_rows: int
-) -> str:
-    """Shared dirty-replica stager (r9 consolidation — the seven axes
-    previously each re-pasted this skeleton, so a fix to the shared
-    mechanics had to be replicated by hand into every copy).  Appends
-    each table's planted rows (``plants``: table -> SQL producing them;
-    the SQL may reference the source scan via the literal ``{src}``)
-    and copies every other table verbatim; ``n_rows`` lands in the
-    staging marker for provenance."""
-    key = base.strip("/").replace("/", "_")
-    out = os.path.join(REPO, ".scale_stress", f"{key}_{suffix}")
-    marker = os.path.join(out, "_STAGED")
-    if os.path.exists(marker):
-        return out
-    # re-staging invalidates every cache DERIVED from this dir (the
-    # avro/csv/orc alt-format stagings, the streaming source copies) —
-    # they key on the dir path, not its contents
-    import glob as _glob
-    import shutil as _shutil
-
-    derived_key = out.strip("/").replace("/", "_")
-    for root in (".alt_src", ".stream_src"):
-        for d in _glob.glob(os.path.join(REPO, root, f"*{derived_key}*")):
-            _shutil.rmtree(d, ignore_errors=True)
-    os.makedirs(out, exist_ok=True)
-    con = duckdb.connect()
-    for t in TABLES:
-        src = f"read_parquet('{base}/{t}.parquet')"
-        sel = f"SELECT * FROM {src}"
-        if t in plants:
-            # .replace, not .format: plant SQL legitimately contains
-            # literal braces (JSON props, struct literals)
-            sel += " UNION ALL " + plants[t].replace("{src}", src)
-        con.execute(
-            f"COPY ({sel}) TO '{out}/{t}.parquet' "
-            f"(FORMAT PARQUET, ROW_GROUP_SIZE 262144)"
-        )
-        print(f"  staged {t}", flush=True)
-    with open(marker, "w") as f:
-        f.write(json.dumps({"base": base, "dirty_rows": n_rows}))
-    return out
-
-
-def _run_dirty_protocol(
-    base: str,
-    subs: list,
-    *,
-    axis: str,
-    stage_fn,
-    mode: str,
-    pool_fn=None,
-    pool_list=None,
-) -> None:
-    """Shared dirty-protocol runner (r9 consolidation): stage the
-    axis replica, run its query pool against the DuckDB oracles, and
-    write SCALE_STRESS_<axis>[_<subs>].json.  The pool is either a
-    fixed curated list (``pool_list``, asserted registered) or dynamic
-    — every registered query whose oracle satisfies ``pool_fn``."""
-    from scache_spark.registry import REGISTRY, _ensure_loaded
-    from scache_spark.session import get_session
-
-    _ensure_loaded()
-    from __spark_entry__ import oracle_sql
-
-    oracles = oracle_sql()
-    if pool_list is not None:
-        missing = [n for n in pool_list if n not in REGISTRY]
-        assert not missing, f"{axis} pool names not registered: {missing}"
-        pool = list(pool_list)
-    else:
-        pool = sorted(
-            n
-            for n, s in REGISTRY.items()
-            if s.oracle is not None and pool_fn(s.oracle)
-        )
-    names = [n for n in pool if not subs or any(x in n for x in subs)]
-    tag = axis.replace("_", "-")
-    print(f"staging {tag} replica from {base} ...", flush=True)
-    sf_dir = stage_fn(base)
-    spark = get_session(f"scale-stress-{tag}")
-    results = run_queries(spark, sf_dir, names, oracles)
-    n_fail = sum(1 for r in results.values() if r["status"] == "FAIL")
-    out = {
-        "base": base,
-        "mode": mode,
-        "n_queries": len(results),
-        "n_fail": n_fail,
-        "total_sec": round(sum(r["sec"] for r in results.values()), 1),
-        "queries": results,
-    }
-    suffix = "" if not subs else "_" + "_".join(subs)[:40]
-    path = os.path.join(REPO, f"SCALE_STRESS_{axis}{suffix}.json")
-    with open(path, "w") as f:
-        json.dump(out, f, indent=1)
-    print(f"\n{'ALL MATCH' if n_fail == 0 else f'{n_fail} FAILURES'} — wrote {path}")
-    sys.exit(1 if n_fail else 0)
-
-
-def stage_dirty(base: str) -> str:
-    """Dirty-corpus replica: 13 pathological document rows + 4
-    pathological embedding rows (SCALE.md §13)."""
-    return _stage_dirty_replica(
-        base,
-        "dirty",
-        {"documents": _DIRTY_ROWS_SQL, "embeddings": _DIRTY_VECS_SQL},
-        13,
-    )
-
-
-def run_dirty(base: str, subs: list[str]) -> None:
-    _run_dirty_protocol(
-        base,
-        subs,
-        axis="dirty",
-        stage_fn=stage_dirty,
-        pool_fn=lambda o: "documents" in o or "embeddings" in o,
-        mode="dirty-corpus (13 planted pathological document rows)",
-    )
-
-
 # --dirty-events (r7): DIRTY-EVENTS stress — the pathological event
 # rows a real firehose certainly carries and the clean fixture never
 # exercises: NULL event time, NULL/empty grouping keys, malformed /
@@ -475,32 +436,6 @@ _DIRTY_EVENTS_SQL = """
                 '{"k": 3.7}')
     ) t(event_id, ts, user_id, event_type, value, props)
 """
-
-
-def stage_dirty_events(base: str) -> str:
-    """Dirty-events replica: 12 pathological event rows + 1 full-row
-    duplicate of event_id 42 (SCALE.md §14)."""
-    return _stage_dirty_replica(
-        base,
-        "dirty_events",
-        {
-            "events": _DIRTY_EVENTS_SQL
-            + " UNION ALL SELECT * FROM {src} WHERE event_id = 42"
-        },
-        13,
-    )
-
-
-def run_dirty_events(base: str, subs: list[str]) -> None:
-    _run_dirty_protocol(
-        base,
-        subs,
-        axis="dirty_events",
-        stage_fn=stage_dirty_events,
-        pool_fn=lambda o: "events" in o,
-        mode="dirty-events (12 planted pathological event rows "
-        "+ 1 full-row duplicate of event_id 42)",
-    )
 
 
 # --dirty-catalog (r7): DIRTY-CATALOG stress — pathological rows in the
@@ -625,58 +560,6 @@ _DIRTY_ORDERS_COLS = (
 )
 
 
-def stage_dirty_orders(base: str) -> str:
-    """Dirty-orders replica: pathological fact dates and numerics on
-    orders and lineitem (SCALE.md §17)."""
-    return _stage_dirty_replica(
-        base,
-        "dirty_orders",
-        {"orders": _DIRTY_ORDERS_SQL, "lineitem": _DIRTY_LINEITEM_SQL},
-        5 + 5,
-    )
-
-
-def run_dirty_orders(base: str, subs: list[str]) -> None:
-    _run_dirty_protocol(
-        base,
-        subs,
-        axis="dirty_orders",
-        stage_fn=stage_dirty_orders,
-        pool_fn=lambda o: any(c in o for c in _DIRTY_ORDERS_COLS),
-        mode="dirty-orders (10 planted pathological orders/lineitem "
-        "rows: NULL/epoch/future dates, zero/negative/1e12 money, "
-        "100%/negative discounts, NULL/empty statuses)",
-    )
-
-
-def stage_dirty_catalog(base: str) -> str:
-    """Dirty-catalog replica: pathological part/supplier/customer
-    string rows (SCALE.md §16)."""
-    return _stage_dirty_replica(
-        base,
-        "dirty_catalog",
-        {
-            "part": _DIRTY_PART_SQL,
-            "supplier": _DIRTY_SUPPLIER_SQL,
-            "customer": _DIRTY_CUSTOMER_SQL,
-        },
-        9 + 6 + 5,
-    )
-
-
-def run_dirty_catalog(base: str, subs: list[str]) -> None:
-    _run_dirty_protocol(
-        base,
-        subs,
-        axis="dirty_catalog",
-        stage_fn=stage_dirty_catalog,
-        pool_fn=lambda o: any(c in o for c in _DIRTY_CATALOG_COLS),
-        mode="dirty-catalog (20 planted pathological part/supplier/"
-        "customer rows: NULL/empty/dup/case/unicode names, NULL "
-        "balances, NULL/empty/lowercase/padded segments)",
-    )
-
-
 # --dirty-trace (r8): DIRTY-TRACE stress — the trace/eventlog parse
 # family renders its log lines FROM lineitem (sampled
 # l_orderkey % 50 = 0) and its monitor samples from events
@@ -782,36 +665,6 @@ DIRTY_TRACE_QUERIES = [
 ]
 
 
-def stage_dirty_trace(base: str) -> str:
-    """Dirty-trace replica: pathological trace-sample lineitem rows and
-    monitor events (SCALE.md §18)."""
-    return _stage_dirty_replica(
-        base,
-        "dirty_trace",
-        {
-            "lineitem": _DIRTY_TRACE_LINEITEM_SQL,
-            "events": _DIRTY_TRACE_EVENTS_SQL,
-        },
-        13 + 4,
-    )
-
-
-def run_dirty_trace(base: str, subs: list[str]) -> None:
-    _run_dirty_protocol(
-        base,
-        subs,
-        axis="dirty_trace",
-        stage_fn=stage_dirty_trace,
-        pool_list=DIRTY_TRACE_QUERIES,
-        mode="dirty-trace (13 planted lineitem rows hitting the "
-        "l_orderkey%50 trace sample + 4 monitor events: 'null' "
-        "tokens in time/size/host/id fields, negative and 1e13-second "
-        "durations, out-of-order spans, fin==start 0/0 fractions, "
-        "unparseable host ordinals, duplicate attempt ids with "
-        "conflicting metrics)",
-    )
-
-
 # --dirty-binary (r9, VERDICT item 3): DIRTY-BINARY stress — the binary
 # twin of the trace axis.  The multimodal family decodes opaque binary
 # payloads in mapInPandas; one hostile blob that crashes the decode UDF
@@ -870,32 +723,6 @@ DIRTY_BINARY_QUERIES = [
 ]
 
 
-def stage_dirty_binary(base: str) -> str:
-    """Dirty-binary replica: planted binary-payload document rows
-    (SCALE.md §19)."""
-    return _stage_dirty_replica(
-        base, "dirty_binary", {"documents": _DIRTY_BINARY_ROWS_SQL}, 12
-    )
-
-
-def run_dirty_binary(base: str, subs: list[str]) -> None:
-    _run_dirty_protocol(
-        base,
-        subs,
-        axis="dirty_binary",
-        stage_fn=stage_dirty_binary,
-        pool_list=DIRTY_BINARY_QUERIES,
-        mode="dirty-binary (12 planted binary-payload rows: NULL / "
-        "zero-byte / framed-zero-length assets, bad-magic and "
-        "bare-magic frames, a truncated frame, oversize declared and "
-        "oversize raw payloads past the 1 MB decode budget, valid "
-        "framed audio/video assets proving body-byte decode, and a "
-        "MULTIBYTE framed audio asset whose declared length and "
-        "window count are UTF-8-byte-derived — the r9 char-vs-byte "
-        "audio-oracle regression plant)",
-    )
-
-
 # --dirty-embeddings (r9, this session): the vector-column corruption
 # classes the r6 --dirty axis did NOT plant — wrong dimension
 # (truncated/concatenated encoder write), NULL element (columnar
@@ -947,27 +774,158 @@ _DIRTY_EMB_ROWS_SQL = """
 # (the r6 --dirty axis already plants zero_norm as vec 990001)
 
 
-def stage_dirty_embeddings(base: str) -> str:
-    """Dirty-embeddings replica: planted vector corruption rows
-    (SCALE.md §20)."""
-    return _stage_dirty_replica(
-        base, "dirty_embeddings", {"embeddings": _DIRTY_EMB_ROWS_SQL}, 11
-    )
+@dataclass(frozen=True)
+class Axis:
+    """One dirty axis.  ``plants`` maps a table to the SQL of the rows
+    planted into it (it may name the table's source scan as the
+    literal ``{src}``); ``n_rows`` is the planted-row count the staging
+    marker records; ``pool`` is a fixed query list or a predicate over
+    oracle SQL (every registered query whose oracle satisfies it);
+    ``mode`` describes the axis in its artifact.  The axis stages to
+    ``<base key>_<name>``, runs under ``flag`` and writes
+    SCALE_STRESS_<name>.json."""
+
+    name: str
+    plants: dict[str, str]
+    n_rows: int
+    pool: list[str] | Callable[[str], bool]
+    mode: str
+
+    @property
+    def flag(self) -> str:
+        return "--" + self.name.replace("_", "-")
 
 
-def run_dirty_embeddings(base: str, subs: list[str]) -> None:
-    _run_dirty_protocol(
-        base,
-        subs,
-        axis="dirty_embeddings",
-        stage_fn=stage_dirty_embeddings,
-        pool_fn=lambda o: "embeddings" in o,
-        mode="dirty-embeddings (11 planted vector rows: NULL / empty / "
-        "short-32 / long-128 vectors, NULL / NaN / +Inf / -Inf "
-        "elements, a 1e20 float32-edge magnitude vector, a healthy "
-        "NULL-label vector, and a healthy vector under a negative id "
-        "probing the seed-id-range rule)",
+AXES = {
+    a.name: a
+    for a in (
+        Axis(
+            "dirty",
+            {"documents": _DIRTY_ROWS_SQL, "embeddings": _DIRTY_VECS_SQL},
+            13,
+            lambda o: "documents" in o or "embeddings" in o,
+            "dirty-corpus (13 planted pathological document rows)",
+        ),
+        Axis(
+            "dirty_events",
+            {
+                "events": _DIRTY_EVENTS_SQL
+                + " UNION ALL SELECT * FROM {src} WHERE event_id = 42"
+            },
+            13,
+            lambda o: "events" in o,
+            "dirty-events (12 planted pathological event rows "
+            "+ 1 full-row duplicate of event_id 42)",
+        ),
+        Axis(
+            "dirty_catalog",
+            {
+                "part": _DIRTY_PART_SQL,
+                "supplier": _DIRTY_SUPPLIER_SQL,
+                "customer": _DIRTY_CUSTOMER_SQL,
+            },
+            9 + 6 + 5,
+            lambda o: any(c in o for c in _DIRTY_CATALOG_COLS),
+            "dirty-catalog (20 planted pathological part/supplier/"
+            "customer rows: NULL/empty/dup/case/unicode names, NULL "
+            "balances, NULL/empty/lowercase/padded segments)",
+        ),
+        Axis(
+            "dirty_orders",
+            {"orders": _DIRTY_ORDERS_SQL, "lineitem": _DIRTY_LINEITEM_SQL},
+            5 + 5,
+            lambda o: any(c in o for c in _DIRTY_ORDERS_COLS),
+            "dirty-orders (10 planted pathological orders/lineitem "
+            "rows: NULL/epoch/future dates, zero/negative/1e12 money, "
+            "100%/negative discounts, NULL/empty statuses)",
+        ),
+        Axis(
+            "dirty_trace",
+            {"lineitem": _DIRTY_TRACE_LINEITEM_SQL, "events": _DIRTY_TRACE_EVENTS_SQL},
+            13 + 4,
+            DIRTY_TRACE_QUERIES,
+            "dirty-trace (13 planted lineitem rows hitting the "
+            "l_orderkey%50 trace sample + 4 monitor events: 'null' "
+            "tokens in time/size/host/id fields, negative and 1e13-second "
+            "durations, out-of-order spans, fin==start 0/0 fractions, "
+            "unparseable host ordinals, duplicate attempt ids with "
+            "conflicting metrics)",
+        ),
+        Axis(
+            "dirty_binary",
+            {"documents": _DIRTY_BINARY_ROWS_SQL},
+            12,
+            DIRTY_BINARY_QUERIES,
+            "dirty-binary (12 planted binary-payload rows: NULL / "
+            "zero-byte / framed-zero-length assets, bad-magic and "
+            "bare-magic frames, a truncated frame, oversize declared and "
+            "oversize raw payloads past the 1 MB decode budget, valid "
+            "framed audio/video assets proving body-byte decode, and a "
+            "MULTIBYTE framed audio asset whose declared length and "
+            "window count are UTF-8-byte-derived — the r9 char-vs-byte "
+            "audio-oracle regression plant)",
+        ),
+        Axis(
+            "dirty_embeddings",
+            {"embeddings": _DIRTY_EMB_ROWS_SQL},
+            11,
+            lambda o: "embeddings" in o,
+            "dirty-embeddings (11 planted vector rows: NULL / empty / "
+            "short-32 / long-128 vectors, NULL / NaN / +Inf / -Inf "
+            "elements, a 1e20 float32-edge magnitude vector, a healthy "
+            "NULL-label vector, and a healthy vector under a negative id "
+            "probing the seed-id-range rule)",
+        ),
     )
+}
+
+
+def stage_axis(base: str, name: str) -> str:
+    """Stage ``base`` with axis ``name``'s rows appended to their
+    tables; every other table is copied verbatim."""
+    axis = AXES[name]
+
+    def select(con, t, src):
+        sel = f"SELECT * FROM {src}"
+        if t in axis.plants:
+            # .replace, not .format: plant SQL legitimately contains
+            # literal braces (JSON props, struct literals)
+            sel += " UNION ALL " + axis.plants[t].replace("{src}", src)
+        return sel
+
+    return _stage_replica(base, name, select, {"dirty_rows": axis.n_rows})
+
+
+def axis_pool(name: str) -> list[str]:
+    """Axis ``name``'s query pool: its fixed list (asserted
+    registered) or, sorted, every registered query whose oracle
+    satisfies its predicate."""
+    from scache_spark.registry import REGISTRY, _ensure_loaded
+
+    _ensure_loaded()
+    pool = AXES[name].pool
+    if callable(pool):
+        return sorted(
+            n for n, s in REGISTRY.items() if s.oracle is not None and pool(s.oracle)
+        )
+    missing = [n for n in pool if n not in REGISTRY]
+    assert not missing, f"{name} pool names not registered: {missing}"
+    return list(pool)
+
+
+def run_axis(base: str, name: str, subs: list[str]) -> None:
+    """Stage axis ``name``, check its (scoped) pool against the DuckDB
+    oracles on the staged files and write its artifact."""
+    from scache_spark.session import get_session
+    from tests.conftest import check_queries
+
+    names = select_names(axis_pool(name), subs)
+    tag = name.replace("_", "-")
+    print(f"staging {tag} replica from {base} ...", flush=True)
+    sf_dir = stage_axis(base, name)
+    spark = get_session(f"scale-stress-{tag}")
+    results = check_queries(spark, sf_dir, names)
+    write_artifact(name, subs, {"base": base, "mode": AXES[name].mode, **_summary(results)})
 
 
 def hot_band_stats(sf_dir: str) -> dict:
@@ -985,10 +943,9 @@ def hot_band_stats(sf_dir: str) -> dict:
         N_BANDS,
     )
 
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{sf_dir}/documents.parquet')"
-    )
+    from tests.conftest import oracle_con
+
+    con = oracle_con(sf_dir, ["documents"])
     melted = " UNION ALL ".join(
         f"SELECT doc_id, {j} AS band_id, band_{j} AS band_hash FROM bands"
         for j in range(N_BANDS)
@@ -1047,6 +1004,10 @@ TIMED_QUERIES = [
 ]
 
 
+# --timed interleaved reps per query (after the untimed warm pass)
+TIMED_REPS = 3
+
+
 def run_timed(base: str, factor: int, subs: list[str]) -> None:
     """Timed x10 bench over TIMED_QUERIES: bench.py's sum-of-min
     estimator on the uniform replica.  Intentionally mirrors bench.py
@@ -1059,9 +1020,8 @@ def run_timed(base: str, factor: int, subs: list[str]) -> None:
     _ensure_loaded()
     missing = [n for n in TIMED_QUERIES if n not in REGISTRY]
     assert not missing, f"timed pool names not registered: {missing}"
-    names = [n for n in TIMED_QUERIES if not subs or any(s in n for s in subs)]
+    names = select_names(TIMED_QUERIES, subs)
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    reps = max(1, int(os.environ.get("SPARK_GRAFT_TIMED_REPS", "3")))
     print(f"staging x{factor} from {base} ...", flush=True)
     sf_dir = stage(base, factor)
     spark = get_session(f"scale-stress-timed-c{cpus}")
@@ -1076,7 +1036,7 @@ def run_timed(base: str, factor: int, subs: list[str]) -> None:
         _staged_documents_dir(spark, sf_dir)
     samples: dict[str, list[float]] = {n: [] for n in names}
     rows: dict[str, int] = {}
-    for rep in range(reps + 1):  # rep 0 = untimed warm
+    for rep in range(TIMED_REPS + 1):  # rep 0 = untimed warm
         for name in names:
             t0 = time.time()
             rows[name] = REGISTRY[name].fn(spark, sf_dir).count()
@@ -1084,7 +1044,7 @@ def run_timed(base: str, factor: int, subs: list[str]) -> None:
             if rep > 0:
                 samples[name].append(dt)
             print(
-                f"  pass {rep}/{reps} {name:32s} {dt:6.1f}s "
+                f"  pass {rep}/{TIMED_REPS} {name:32s} {dt:6.1f}s "
                 f"({rows[name]} rows)",
                 flush=True,
             )
@@ -1095,17 +1055,14 @@ def run_timed(base: str, factor: int, subs: list[str]) -> None:
         "metric": "per_query_min_sec",
         "factor": factor,
         "cpus": int(cpus),
-        "reps": reps,
+        "reps": TIMED_REPS,
         "total_sec": round(sum(timings.values()), 3),
         "queries": timings,
         "samples": {n: [round(x, 3) for x in ts] for n, ts in samples.items()},
         "rows": rows,
     }
-    suffix = "" if not subs else "_" + "_".join(subs)[:40]
-    path = os.path.join(REPO, f"SCALE_STRESS_timed_x{factor}_c{cpus}{suffix}.json")
-    with open(path, "w") as f:
-        json.dump(out, f, indent=1)
-    print(f"\nwrote {path} (total {out['total_sec']}s over {len(timings)} queries)")
+    print(f"\ntotal {out['total_sec']}s over {len(timings)} queries")
+    write_artifact(f"timed_x{factor}_c{cpus}", subs, out)
 
 
 # Excluded from the --rest sweep, each for a stated reason — never
@@ -1186,151 +1143,53 @@ def _duckdb_checksum(con, oracle: str) -> tuple[int, int]:
     return int(row[0]), int(row[1] or 0)
 
 
-def stage_skew(base: str, hot_copies: int) -> str:
-    """Stage a skewed replica: the smallest user_id's events and the
-    smallest o_custkey's orders (+their lineitems) are replicated
-    ``hot_copies`` extra times with shifted event/order keys, values
-    untouched — one key ends up owning most of its table, which is
-    what a viral user / hot SKU looks like at 100 TB."""
-    key = base.strip("/").replace("/", "_")
-    out = os.path.join(REPO, ".scale_stress", f"{key}_skew{hot_copies}")
-    marker = os.path.join(out, "_STAGED")
-    if os.path.exists(marker):
-        return out
-    os.makedirs(out, exist_ok=True)
-    con = duckdb.connect()
-    for t in TABLES:
-        src = f"read_parquet('{base}/{t}.parquet')"
-        if t == "events":
-            (hot,) = con.execute(f"SELECT min(user_id) FROM {src}").fetchone()
-            (span,) = con.execute(f"SELECT max(event_id) + 1 FROM {src}").fetchone()
-            sel = (
-                f"SELECT * FROM {src} UNION ALL "
-                f"SELECT s.* REPLACE (s.event_id + (t.i + 1) * {span} AS event_id) "
-                f"FROM {src} s CROSS JOIN range({hot_copies}) t(i) "
-                f"WHERE s.user_id = {hot}"
-            )
-        elif t == "orders":
-            (hotc,) = con.execute(f"SELECT min(o_custkey) FROM {src}").fetchone()
-            (span,) = con.execute(f"SELECT max(o_orderkey) + 1 FROM {src}").fetchone()
-            sel = (
-                f"SELECT * FROM {src} UNION ALL "
-                f"SELECT s.* REPLACE (s.o_orderkey + (t.i + 1) * {span} AS o_orderkey) "
-                f"FROM {src} s CROSS JOIN range({hot_copies}) t(i) "
-                f"WHERE s.o_custkey = {hotc}"
-            )
-        elif t == "lineitem":
-            osrc = f"read_parquet('{base}/orders.parquet')"
-            (hotc,) = con.execute(f"SELECT min(o_custkey) FROM {osrc}").fetchone()
-            (span,) = con.execute(f"SELECT max(o_orderkey) + 1 FROM {osrc}").fetchone()
-            sel = (
-                f"SELECT * FROM {src} UNION ALL "
-                f"SELECT s.* REPLACE (s.l_orderkey + (t.i + 1) * {span} AS l_orderkey) "
-                f"FROM {src} s CROSS JOIN range({hot_copies}) t(i) "
-                f"WHERE s.l_orderkey IN (SELECT o_orderkey FROM {osrc} WHERE o_custkey = {hotc})"
-            )
-        else:
-            sel = f"SELECT * FROM {src}"
-        con.execute(
-            f"COPY ({sel}) TO '{out}/{t}.parquet' "
-            f"(FORMAT PARQUET, ROW_GROUP_SIZE 262144)"
-        )
-        print(f"  staged {t}", flush=True)
-    with open(marker, "w") as f:
-        f.write(json.dumps({"base": base, "hot_copies": hot_copies}))
-    return out
+def select_names(pool: list[str], subs: list[str]) -> list[str]:
+    """The names in ``pool`` containing any of the substrings ``subs``
+    (the whole pool when there are none)."""
+    return [n for n in pool if not subs or any(s in n for s in subs)]
 
 
-def stage(base: str, factor: int) -> str:
-    key = base.strip("/").replace("/", "_")
-    out = os.path.join(REPO, ".scale_stress", f"{key}_x{factor}")
-    marker = os.path.join(out, "_STAGED")
-    if os.path.exists(marker):
-        return out
-    os.makedirs(out, exist_ok=True)
-    con = duckdb.connect()
-    for t in TABLES:
-        src = f"read_parquet('{base}/{t}.parquet')"
-        shifts = _SHIFTED.get(t)
-        if not shifts:
-            sel = f"SELECT * FROM {src}"
-        else:
-            # one shift constant per base table family; orders and
-            # lineitem both shift by the ORDERS key range
-            shift_src = (
-                f"read_parquet('{base}/orders.parquet')"
-                if t == "lineitem"
-                else src
-            )
-            shift_col = "o_orderkey" if t == "lineitem" else shifts[0]
-            (span,) = con.execute(
-                f"SELECT max({shift_col}) + 1 FROM {shift_src}"
-            ).fetchone()
-            repl = ", ".join(
-                f"s.{c} + t.i * {span} AS {c}" for c in shifts
-            )
-            sel = (
-                f"SELECT s.* REPLACE ({repl}) FROM {src} s "
-                f"CROSS JOIN range({factor}) t(i)"
-            )
-        con.execute(
-            f"COPY ({sel}) TO '{out}/{t}.parquet' "
-            f"(FORMAT PARQUET, ROW_GROUP_SIZE 262144)"
-        )
-        print(f"  staged {t}", flush=True)
-    with open(marker, "w") as f:
-        f.write(json.dumps({"base": base, "factor": factor}))
-    return out
+def _summary(results: dict) -> dict:
+    return {
+        "n_queries": len(results),
+        "n_fail": sum(r["status"] == "FAIL" for r in results.values()),
+        "total_sec": round(sum(r.get("sec") or 0 for r in results.values()), 1),
+        "queries": results,
+    }
 
 
-def run_queries(spark, sf_dir: str, names: list[str], oracles: dict) -> dict:
-    """Run each query on the staged dir and compare against its DuckDB
-    oracle evaluated on the SAME dir; returns the per-query results."""
-    from scache_spark.registry import REGISTRY
-    from tests.conftest import assert_frames_match
-
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
-    results: dict[str, dict] = {}
-    for name in names:
-        t0 = time.time()
-        try:
-            spdf = REGISTRY[name].fn(spark, sf_dir).toPandas()
-            odf = con.execute(oracles[name]).df()
-            assert_frames_match(spdf, odf, name)
-            status = "MATCH"
-            err = None
-        except Exception as ex:  # noqa: BLE001 - triage artifact
-            status = "FAIL"
-            err = str(ex)[:300]
-        dt = round(time.time() - t0, 1)
-        results[name] = {
-            "status": status,
-            "sec": dt,
-            "rows": None if err else len(spdf),
-            "err": err,
-        }
-        print(f"  {name:32s} {status}  {dt}s", flush=True)
-    return results
+def write_artifact(
+    stem: str, subs: list[str], out: dict, *, ok: bool = True, merge: bool = False
+) -> None:
+    """Write ``out`` to SCALE_STRESS_<stem>.json at the repo root — a
+    run scoped by name substrings ``subs`` writes a suffixed file, so
+    it never clobbers the full artifact.  With ``merge`` the run's
+    queries join those already in that file.  A protocol that checks
+    queries (``out`` has ``n_fail``) then reports and exits 1 on a
+    failure of this run or when not ``ok``."""
+    suffix = "" if not subs else "_" + "_".join(subs)[:40]
+    path = os.path.join(REPO, f"SCALE_STRESS_{stem}{suffix}.json")
+    n_fail = out.get("n_fail")
+    if merge and os.path.exists(path):
+        with open(path) as f:
+            old = json.load(f)
+        out = {**old, **_summary({**old["queries"], **out["queries"]})}
+    with open(path, "w") as f:
+        json.dump(out, f, indent=1)
+    if n_fail is None:
+        print(f"wrote {path}")
+        return
+    print(f"\n{'ALL MATCH' if n_fail == 0 else f'{n_fail} FAILURES'} — wrote {path}")
+    sys.exit(1 if n_fail or not ok else 0)
 
 
-def run_boilerplate(base: str, factor: int, subs: list[str] | None = None) -> None:
+def run_boilerplate(base: str, factor: int, subs: list[str]) -> None:
     """The hot-shingle protocol: guarded operators at full severity,
     unguarded banded self-joins at the mild severity (rationale at the
-    BOILERPLATE constants above), one disclosed artifact.  Name
-    substrings (``subs``) scope the pools like every other protocol —
-    a scoped run writes a suffixed artifact and leaves the canonical
-    SCALE_STRESS_boilerplate.json untouched."""
-    from scache_spark.registry import _ensure_loaded
+    BOILERPLATE constants above), one disclosed artifact."""
     from scache_spark.session import get_session
+    from tests.conftest import check_queries
 
-    _ensure_loaded()
-    from __spark_entry__ import oracle_sql
-
-    oracles = oracle_sql()
     spark = get_session("scale-stress-boilerplate")
     out: dict = {"base": base, "factor": factor, "pools": {}}
     n_fail = 0
@@ -1338,7 +1197,7 @@ def run_boilerplate(base: str, factor: int, subs: list[str] | None = None) -> No
         ("guarded", BOILERPLATE_PCT_GUARDED, BOILERPLATE_GUARDED),
         ("unguarded", BOILERPLATE_PCT_UNGUARDED, BOILERPLATE_UNGUARDED),
     ):
-        pool = [n for n in full_pool if not subs or any(x in n for x in subs)]
+        pool = select_names(full_pool, subs)
         if not pool:
             continue
         print(f"staging x{factor} bp{pct} from {base} ...", flush=True)
@@ -1346,8 +1205,8 @@ def run_boilerplate(base: str, factor: int, subs: list[str] | None = None) -> No
         print("  computing hot-band stats ...", flush=True)
         stats = hot_band_stats(sf_dir)
         print(f"  {stats}", flush=True)
-        results = run_queries(spark, sf_dir, pool, oracles)
-        n_fail += sum(1 for r in results.values() if r["status"] == "FAIL")
+        results = check_queries(spark, sf_dir, pool)
+        n_fail += sum(r["status"] == "FAIL" for r in results.values())
         out["pools"][label] = {
             "boilerplate_pct": pct,
             "boilerplate_words": BOILERPLATE_WORDS,
@@ -1358,20 +1217,16 @@ def run_boilerplate(base: str, factor: int, subs: list[str] | None = None) -> No
     # the stress is only meaningful if the cap actually triggered
     out["cap_triggered"] = bool(g and g["buckets_over_cap"] > 0)
     out["n_fail"] = n_fail
-    suffix = "" if not subs else "_" + "_".join(subs)[:40]
-    path = os.path.join(REPO, f"SCALE_STRESS_boilerplate{suffix}.json")
-    with open(path, "w") as f:
-        json.dump(out, f, indent=1)
-    print(f"\n{'ALL MATCH' if n_fail == 0 else f'{n_fail} FAILURES'} — wrote {path}")
-    sys.exit(1 if n_fail or not out["cap_triggered"] else 0)
+    write_artifact("boilerplate", subs, out, ok=out["cap_triggered"])
 
 
-def run_checksum(base: str, factor: int) -> None:
+def run_checksum(base: str, factor: int, subs: list[str]) -> None:
     """x10-verify the SF-proportional-output queries by checksum and
     MERGE the rows into SCALE_STRESS_x{F}_rest.json so the rest-sweep
     artifact carries every query (the r5 exclusion note pointed here)."""
     from scache_spark.registry import REGISTRY, _ensure_loaded
     from scache_spark.session import get_session
+    from tests.conftest import oracle_con
 
     _ensure_loaded()
     from __spark_entry__ import oracle_sql
@@ -1380,14 +1235,9 @@ def run_checksum(base: str, factor: int) -> None:
     print(f"staging x{factor} from {base} ...", flush=True)
     sf_dir = stage(base, factor)
     spark = get_session("scale-stress-checksum")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    con = oracle_con(sf_dir)
     results: dict[str, dict] = {}
-    n_fail = 0
-    for name in CHECKSUM_QUERIES:
+    for name in select_names(CHECKSUM_QUERIES, subs):
         t0 = time.time()
         try:
             sn, sx = _spark_checksum(REGISTRY[name].fn(spark, sf_dir))
@@ -1396,7 +1246,6 @@ def run_checksum(base: str, factor: int) -> None:
             err = None if ok else f"spark=({sn},{sx}) oracle=({on},{ox})"
         except Exception as ex:  # noqa: BLE001 - triage artifact
             ok, err, sn = False, str(ex)[:300], None
-        n_fail += 0 if ok else 1
         results[name] = {
             "status": "MATCH" if ok else "FAIL",
             "sec": round(time.time() - t0, 1),
@@ -1406,23 +1255,8 @@ def run_checksum(base: str, factor: int) -> None:
         }
         print(f"  {name:32s} {results[name]['status']}  {results[name]['sec']}s "
               f"({sn} rows)", flush=True)
-    path = os.path.join(REPO, f"SCALE_STRESS_x{factor}_rest.json")
-    try:
-        with open(path) as f:
-            out = json.load(f)
-    except OSError:
-        out = {"base": base, "mode": f"uniform x{factor}", "factor": factor,
-               "queries": {}}
-    out["queries"].update(results)
-    out["n_queries"] = len(out["queries"])
-    out["n_fail"] = sum(1 for r in out["queries"].values() if r["status"] == "FAIL")
-    out["total_sec"] = round(
-        sum(r.get("sec") or 0 for r in out["queries"].values()), 1
-    )
-    with open(path, "w") as f:
-        json.dump(out, f, indent=1)
-    print(f"\n{'ALL MATCH' if n_fail == 0 else f'{n_fail} FAILURES'} — merged into {path}")
-    sys.exit(1 if n_fail else 0)
+    out = {"base": base, "mode": f"uniform x{factor}", "factor": factor}
+    write_artifact(f"x{factor}_rest", subs, {**out, **_summary(results)}, merge=True)
 
 
 def main() -> None:
@@ -1447,14 +1281,8 @@ def main() -> None:
     protocols = {
         "--timed": lambda: run_timed(base, factor, subs),
         "--boilerplate": lambda: run_boilerplate(base, factor, subs),
-        "--checksum": lambda: run_checksum(base, factor),
-        "--dirty": lambda: run_dirty(base, subs),
-        "--dirty-events": lambda: run_dirty_events(base, subs),
-        "--dirty-catalog": lambda: run_dirty_catalog(base, subs),
-        "--dirty-orders": lambda: run_dirty_orders(base, subs),
-        "--dirty-trace": lambda: run_dirty_trace(base, subs),
-        "--dirty-binary": lambda: run_dirty_binary(base, subs),
-        "--dirty-embeddings": lambda: run_dirty_embeddings(base, subs),
+        "--checksum": lambda: run_checksum(base, factor, subs),
+        **{a.flag: (lambda n=n: run_axis(base, n, subs)) for n, a in AXES.items()},
     }
     chosen = [f for f in protocols if f in args]
     for f in chosen:
@@ -1481,7 +1309,7 @@ def main() -> None:
 
     from scache_spark.registry import REGISTRY, _ensure_loaded
     from scache_spark.session import get_session
-    from tests.conftest import assert_frames_match
+    from tests.conftest import check_queries
 
     _ensure_loaded()
     if rest:
@@ -1498,7 +1326,7 @@ def main() -> None:
         pool = SKEW_QUERIES
     else:
         pool = DEFAULT_QUERIES
-    names = [n for n in pool if not subs or any(s in n for s in subs)]
+    names = select_names(pool, subs)
     missing = [n for n in names if n not in REGISTRY]
     assert not missing, f"unknown queries: {missing}"
 
@@ -1510,30 +1338,15 @@ def main() -> None:
         sf_dir = stage(base, factor)
 
     spark = get_session("scale-stress")
-    from __spark_entry__ import oracle_sql
-
-    oracles = oracle_sql()
-    results = run_queries(spark, sf_dir, names, oracles)
-    n_fail = sum(1 for r in results.values() if r["status"] == "FAIL")
+    results = check_queries(spark, sf_dir, names)
+    tag = f"skew{skew}" if skew else f"x{factor}"
     out = {
         "base": base,
         "mode": f"skew hot_copies={skew}" if skew else f"uniform x{factor}",
         "factor": factor,
-        "n_queries": len(results),
-        "n_fail": n_fail,
-        "total_sec": round(sum(r["sec"] for r in results.values()), 1),
-        "queries": results,
+        **_summary(results),
     }
-    # scoped runs must not clobber the full-artifact file
-    suffix = "" if not subs else "_" + "_".join(subs)[:40]
-    if rest:
-        suffix = "_rest" + suffix
-    tag = f"skew{skew}" if skew else f"x{factor}"
-    path = os.path.join(REPO, f"SCALE_STRESS_{tag}{suffix}.json")
-    with open(path, "w") as f:
-        json.dump(out, f, indent=1)
-    print(f"\n{'ALL MATCH' if n_fail == 0 else f'{n_fail} FAILURES'} — wrote {path}")
-    sys.exit(1 if n_fail else 0)
+    write_artifact(f"{tag}_rest" if rest else tag, subs, out)
 
 
 if __name__ == "__main__":

@@ -14,14 +14,16 @@ their consumers in.  A changed module reached by NO query module
 (session, catalog) falls back to the scale_stress DEFAULT_QUERIES
 pool, disclosed in the artifact.  Writes CHANGED_AUDIT_x10.json.
 """
+import os
 import sys
-sys.path.insert(0, "/root/repo")
-import duckdb
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 import numpy as np
 
 from scache_spark.registry import REGISTRY, _ensure_loaded
 from scache_spark.session import get_session
-from tests.conftest import canonicalize
+from tests.conftest import canonicalize, oracle_con
 
 _ensure_loaded()
 
@@ -40,9 +42,8 @@ def _module_import_graph() -> dict[str, set[str]]:
     module-body and function-local alike — consumers lazily import
     dedup helpers inside query fns)."""
     import ast
-    import os
 
-    root = "/root/repo"
+    root = REPO
     pkg = "scache_spark"
     graph: dict[str, set[str]] = {}
     for dirpath, _dirs, fnames in os.walk(os.path.join(root, pkg)):
@@ -94,15 +95,14 @@ def _transitive_imports(mod: str, graph: dict[str, set[str]]) -> set[str]:
 
 def _changed_mode(ref: str) -> None:
     import json
-    import os
     import subprocess
 
-    from __spark_entry__ import oracle_sql
-    from tools.scale_stress import DEFAULT_QUERIES, REST_EXCLUDE, run_queries, stage
+    from tests.conftest import check_queries
+    from tools.scale_stress import DEFAULT_QUERIES, REST_EXCLUDE, stage
 
     files = subprocess.run(
         ["git", "diff", "--name-only", ref],
-        capture_output=True, text=True, cwd="/root/repo", check=True,
+        capture_output=True, text=True, cwd=REPO, check=True,
     ).stdout.split()
     graph = _module_import_graph()
     # query name -> every scache_spark module its defining module
@@ -156,13 +156,13 @@ def _changed_mode(ref: str) -> None:
         print(f"{len(names)} affected queries; staging x10 ...", flush=True)
         sf_dir = stage("/root/testdata/sf0.1", 10)
         spark = get_session("changed-audit")
-        results = run_queries(spark, sf_dir, names, oracle_sql())
+        results = check_queries(spark, sf_dir, names)
         out.update({
             "n_queries": len(results),
             "n_fail": sum(1 for r in results.values() if r["status"] == "FAIL"),
             "queries": results,
         })
-    path = os.path.join("/root/repo", "CHANGED_AUDIT_x10.json")
+    path = os.path.join(REPO, "CHANGED_AUDIT_x10.json")
     with open(path, "w") as f:
         json.dump(out, f, indent=1)
     print(f"wrote {path}")
@@ -175,9 +175,7 @@ if "--changed" in sys.argv:
 
 SF = "/root/testdata/sf0.01"
 spark = get_session("strict-audit")
-con = duckdb.connect()
-for name in ["region","nation","customer","supplier","part","orders","lineitem","events","documents","embeddings"]:
-    con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{SF}/{name}.parquet')")
+con = oracle_con(SF)
 
 # optional scoping: `python tools/strict_audit.py [substring ...]` audits
 # only queries whose name contains any given substring (a full sweep

@@ -5,7 +5,7 @@ CORRECTNESS_sf0.1.json (the canonical beyond-grading-scale artifact).
 
 defaults: /root/testdata/sf0.1 -> CORRECTNESS_sf0.1.json.  Every
 registered query runs through Spark at SF_DIR and is compared
-order-insensitively (tests.conftest.assert_frames_match) against its
+order-insensitively (tests.conftest.check_queries) against its
 DuckDB oracle over the same parquet files.
 """
 
@@ -16,18 +16,12 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
-
-import duckdb
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from scache_spark.registry import REGISTRY, _ensure_loaded
 from scache_spark.session import get_session
-from tests.conftest import assert_frames_match
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+from tests.conftest import check_queries
 
 
 def main() -> None:
@@ -35,43 +29,12 @@ def main() -> None:
     out_path = (
         sys.argv[2]
         if len(sys.argv) > 2
-        else os.path.join("/root/repo", "CORRECTNESS_sf0.1.json")
+        else os.path.join(REPO, "CORRECTNESS_sf0.1.json")
     )
     _ensure_loaded()
     spark = get_session("sweep-sf")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')"
-        )
-    results: dict[str, dict] = {}
     t_all = time.time()
-    for name, spec in sorted(REGISTRY.items()):
-        t0 = time.time()
-        try:
-            spdf = spec.fn(spark, sf).toPandas()
-            if spec.oracle is None:
-                results[name] = {
-                    "status": "ROWS-ONLY",
-                    "rows": len(spdf),
-                    "sec": round(time.time() - t0, 1),
-                }
-                continue
-            odf = con.execute(spec.oracle).df()
-            assert_frames_match(spdf, odf, name)
-            results[name] = {
-                "status": "MATCH",
-                "rows": len(spdf),
-                "sec": round(time.time() - t0, 1),
-            }
-        except Exception as ex:
-            results[name] = {
-                "status": "FAIL",
-                "err": str(ex)[:300],
-                "sec": round(time.time() - t0, 1),
-            }
-        print(f"  {name:36s} {results[name]['status']}  {results[name]['sec']}s",
-              flush=True)
+    results = check_queries(spark, sf, sorted(REGISTRY))
     n_match = sum(1 for r in results.values() if r["status"] == "MATCH")
     n_fail = sum(1 for r in results.values() if r["status"] == "FAIL")
     out = {
