@@ -9,7 +9,10 @@ assert the contract.
 
 from __future__ import annotations
 
+import errno
 import os
+import shutil
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -132,6 +135,40 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
+
+
+def staged_key(sf_dir: str) -> str:
+    """The name component every staged copy of ``sf_dir`` carries (the
+    alt-format, streaming and stress stagings key on the dir path)."""
+    return sf_dir.strip("/").replace("/", "_")
+
+
+def _stage_once(out: str, write) -> str:
+    """Publish a staged directory whole: ``write(tmp)`` fills a unique
+    sibling of ``out``, which is then renamed into place.  Concurrent
+    stagers of one ``out`` each write their own copy; the first rename
+    wins and the losers delete theirs, so no reader sees a directory
+    half-written or overwritten in place.  An ``out`` without
+    ``_SUCCESS`` (an interrupted in-place write) is replaced."""
+    marker = os.path.join(out, "_SUCCESS")
+    if os.path.exists(marker):
+        return out
+    tmp = f"{out}.tmp-{uuid.uuid4().hex}"
+    try:
+        write(tmp)
+        for _ in range(2):
+            try:
+                os.rename(tmp, out)
+                return out
+            except OSError as exc:
+                if exc.errno not in (errno.ENOTEMPTY, errno.EEXIST):
+                    raise
+            if os.path.exists(marker):
+                return out  # a concurrent stager published first
+            shutil.rmtree(out, ignore_errors=True)
+        raise OSError(errno.EEXIST, "staged directory not published", out)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 # events.ts has shipped as both TIMESTAMP(NANOS) and TIMESTAMP(MICROS)

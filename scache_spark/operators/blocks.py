@@ -683,22 +683,7 @@ def blocktrace_stream_waves(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("n_blocks"),
         F.sum("size_b").cast("long").alias("total_b"),
     )
-    # run_stream leaves its memory-sink view and sets its two confs
-    # explicitly; this query is also in the batch plan sweep, so it
-    # hands the session back as it found it.  The returned frame holds
-    # the resolved sink, not the view.
-    confs = (
-        "spark.sql.shuffle.partitions",
-        "spark.sql.streaming.numRecentProgressUpdates",
-    )
-    unset = [k for k in confs if spark.conf.get(k, None) is None]
-    out = run_stream(agg, "blocktrace_waves", "complete")
-    for t in spark.catalog.listTables():
-        if t.isTemporary and t.name.startswith("blocktrace_waves_"):
-            spark.catalog.dropTempView(t.name)
-    for k in unset:
-        spark.conf.unset(k)
-    return out
+    return run_stream(agg, "blocktrace_waves", "complete")
 
 
 # ---------------------------------------------------------------------------

@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from scache_spark import api
 from scache_spark.api import CMS_ROWS, CMS_WIDTH
-from scache_spark.catalog import load_table
+from scache_spark.catalog import _stage_once, load_table, staged_key
 from scache_spark.functions import SQL_PROPS_K_INT, SQL_VECTOR_READY, bounded_window
 from scache_spark.functions import kll_fold_double, vector_ready
 from scache_spark.registry import register
@@ -296,43 +296,12 @@ def fuzzy_match_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
 # non-parquet source coverage: CSV and ORC round trips (B1 long tail)
 # ---------------------------------------------------------------------------
 
-import errno as _errno
 import os as _os
-import shutil as _shutil
-import uuid as _uuid
 
 _SRC_ROOT = _os.path.join(
     _os.path.dirname(_os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))),
     ".alt_src",
 )
-
-
-def _stage_once(out: str, write) -> str:
-    """Publish a staged directory whole: ``write(tmp)`` fills a unique
-    sibling of ``out``, which is then renamed into place.  Concurrent
-    stagers of one ``out`` each write their own copy; the first rename
-    wins and the losers delete theirs, so no reader sees a directory
-    half-written or overwritten in place.  An ``out`` without
-    ``_SUCCESS`` (an interrupted in-place write) is replaced."""
-    marker = _os.path.join(out, "_SUCCESS")
-    if _os.path.exists(marker):
-        return out
-    tmp = f"{out}.tmp-{_uuid.uuid4().hex}"
-    try:
-        write(tmp)
-        for _ in range(2):
-            try:
-                _os.rename(tmp, out)
-                return out
-            except OSError as exc:
-                if exc.errno not in (_errno.ENOTEMPTY, _errno.EEXIST):
-                    raise
-            if _os.path.exists(marker):
-                return out  # a concurrent stager published first
-            _shutil.rmtree(out, ignore_errors=True)
-        raise OSError(_errno.EEXIST, "staged directory not published", out)
-    finally:
-        _shutil.rmtree(tmp, ignore_errors=True)
 
 
 def _staged_alt(spark: SparkSession, sf_dir: str, fmt: str, table: str) -> str:
@@ -344,7 +313,7 @@ def _staged_alt(spark: SparkSession, sf_dir: str, fmt: str, table: str) -> str:
     invalidates stale staged copies instead of silently misreading
     them."""
     _FMT_VERSION = {"csv": "v2"}  # bump when writer options change
-    key = sf_dir.strip("/").replace("/", "_")
+    key = staged_key(sf_dir)
     ver = _FMT_VERSION.get(fmt, "v1")
 
     def write(path: str) -> None:
@@ -775,7 +744,7 @@ def _staged_partitioned_events(spark: SparkSession, sf_dir: str) -> str:
     registered query."""
     from scache_spark.sources import write_parquet
 
-    key = sf_dir.strip("/").replace("/", "_")
+    key = staged_key(sf_dir)
     return _stage_once(
         _os.path.join(_SRC_ROOT, f"{key}_events_parts"),
         lambda path: write_parquet(
@@ -2362,7 +2331,7 @@ def _staged_manifest_tt(spark: SparkSession, sf_dir: str) -> str:
     (part files + CAS-claimed version manifests)."""
     from scache_spark.sources.manifest_sink import register_manifest_sink
 
-    key = sf_dir.strip("/").replace("/", "_")
+    key = staged_key(sf_dir)
     out = _os.path.join(_SRC_ROOT, f"{key}_manifest_tt_v1")
     cols = ["o_orderkey", "o_orderstatus", "o_totalprice"]
 

@@ -128,12 +128,6 @@ def codegen_stage_count(df: DataFrame) -> int:
 # (or side-effect) a stream run.
 SHAPE_SKIP_PREFIXES = ("stream_", "statestore_")
 
-# Swept queries whose builder runs a stream to completion: run_stream
-# sets spark.sql.shuffle.partitions for the run, so the sweep builds
-# them before its threads start and no concurrent explain sees it.
-BUILDS_RUN_STREAM = ("blocktrace_stream_waves",)
-
-
 def shape_counts(df: DataFrame) -> dict[str, int]:
     """The plan-shape numbers the regression ratchet records and
     re-measures: exchange count and total broad same-file scans.
@@ -173,10 +167,11 @@ def sweep_plan_reports(
 
     Builds run concurrently: batch builders bind their input frames
     instead of registering fixed-name temp views and set no session
-    conf beyond the values ``get_session`` already pins, so one build
-    cannot change another's plan.  The BUILDS_RUN_STREAM queries are
-    built first, one at a time.  A builder that raises is recorded as
-    the exception; consumers decide how to report it.
+    conf beyond the values ``get_session`` already pins; a stream
+    (``blocktrace_stream_waves``) sets its confs only inside its
+    ``start()``, so one build cannot change another's plan shape.  A
+    builder that raises is recorded as the exception; consumers decide
+    how to report it.
     """
     from concurrent.futures import ThreadPoolExecutor
 
@@ -196,8 +191,6 @@ def sweep_plan_reports(
         for n, s in REGISTRY.items()
         if not n.startswith(SHAPE_SKIP_PREFIXES)
     ]
-    streamed = [t for t in todo if t[0] in BUILDS_RUN_STREAM]
-    batch = [t for t in todo if t[0] not in BUILDS_RUN_STREAM]
     # Explain-only sweep, so eager localCheckpoints are forced LAZY for
     # its duration (r10, pytest-wall item): materializing a local
     # checkpoint runs the builder's whole upstream job, and this sweep
@@ -218,9 +211,7 @@ def sweep_plan_reports(
 
     _DF.localCheckpoint = _lazy_ckpt
     try:
-        reports = dict(map(one, streamed))
         with ThreadPoolExecutor(max_workers=max_workers) as pool:
-            reports.update(pool.map(one, batch))
-        return reports
+            return dict(pool.map(one, todo))
     finally:
         _DF.localCheckpoint = _orig_ckpt

@@ -273,25 +273,17 @@ def stream_transform_with_state_mix(spark: SparkSession, sf_dir: str) -> DataFra
         # transformWithState requires the RocksDB state store provider
         # (the default HDFS-backed store does not implement the new
         # multi-state-variable protocol); scope the conf to this query.
-        prov_key = "spark.sql.streaming.stateStore.providerClass"
-        prev = spark.conf.get(prov_key, None)
-        spark.conf.set(
-            prov_key,
+        mixed = s.groupBy("user_id").transformWithStateInPandas(
+            _UserTypeMix(),
+            outputStructType=_MIX_SCHEMA,
+            outputMode="append",
+            timeMode="none",
+        )
+        provider = (
+            "spark.sql.streaming.stateStore.providerClass",
             "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
         )
-        try:
-            mixed = s.groupBy("user_id").transformWithStateInPandas(
-                _UserTypeMix(),
-                outputStructType=_MIX_SCHEMA,
-                outputMode="append",
-                timeMode="none",
-            )
-            emitted = run_stream(mixed, "tws_mix", "append")
-        finally:
-            if prev is None:
-                spark.conf.unset(prov_key)
-            else:
-                spark.conf.set(prov_key, prev)
+        emitted = run_stream(mixed, "tws_mix", "append", confs=[provider])
     else:
         mixed = s.groupBy("user_id").applyInPandasWithState(
             _update_type_mix,

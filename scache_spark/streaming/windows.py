@@ -32,12 +32,14 @@ from __future__ import annotations
 
 import itertools
 import os
+import threading
 import time as _time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
-from scache_spark.catalog import SCHEMAS, load_table
+from scache_spark.catalog import SCHEMAS, _stage_once, load_table, staged_key
 from scache_spark.registry import register
 
 _STAGE_ROOT = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(__file__))), ".stream_src")
@@ -103,19 +105,18 @@ def _staged_events_dir(spark: SparkSession, sf_dir: str, copies: int = 1) -> str
     the flush row.  ``copies=2`` includes every event twice — planted
     duplicates for the streaming-dedup query.
 
-    All copies and the flush row go out in ONE overwrite write, so
-    ``_SUCCESS`` implies the complete corpus (an interrupted run can
-    never leave an accepted half-staged dir).  The ``_v2`` suffix
-    versioned the layout against pre-flush-row stagings; ``_v3`` (r10)
-    stages 16 files instead of 4 for the same reason the documents
-    staging moved to 16 in r9: the replayed data batch's SCAN stage
-    carries the map-side per-event work (window assignment, the CMS
-    md5 x3 explode) and file count caps its parallelism — a real
-    ingest feed arrives in many files; 4 was an artifact of the
-    staging write."""
-    key = sf_dir.strip("/").replace("/", "_")
-    out = os.path.join(_STAGE_ROOT, f"{key}_x{copies}_v3")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
+    All copies and the flush row go out in ONE write, published whole
+    by ``_stage_once``, so ``_SUCCESS`` implies the complete corpus and
+    concurrent stagers never write one directory in place.  The
+    ``_v2`` suffix versioned the layout against pre-flush-row
+    stagings; ``_v3`` (r10) stages 16 files instead of 4 for the same
+    reason the documents staging moved to 16 in r9: the replayed data
+    batch's SCAN stage carries the map-side per-event work (window
+    assignment, the CMS md5 x3 explode) and file count caps its
+    parallelism — a real ingest feed arrives in many files; 4 was an
+    artifact of the staging write."""
+
+    def write(path: str) -> None:
         ev = load_table(spark, sf_dir, "events")
         flush = ev.agg(F.max("ts").alias("mx")).select(
             F.lit(FLUSH_EVENT_ID).cast("long").alias("event_id"),
@@ -128,8 +129,11 @@ def _staged_events_dir(spark: SparkSession, sf_dir: str, copies: int = 1) -> str
         full = ev
         for _ in range(copies - 1):
             full = full.unionByName(ev)
-        full.unionByName(flush).repartition(16).write.mode("overwrite").parquet(out)
-    return out
+        full.unionByName(flush).repartition(16).write.parquet(path)
+
+    return _stage_once(
+        os.path.join(_STAGE_ROOT, f"{staged_key(sf_dir)}_x{copies}_v3"), write
+    )
 
 
 def events_stream(spark: SparkSession, sf_dir: str, copies: int = 1) -> DataFrame:
@@ -142,19 +146,17 @@ def _staged_documents_dir(spark: SparkSession, sf_dir: str) -> str:
     replayed as an ingestion feed for at-arrival operators (near-dup
     suppression).  Documents carry no event time and the at-arrival
     operators below use NoTimeout keyed state, so no synthetic flush
-    row is needed; the single overwrite write keeps the ``_SUCCESS``
-    ⇒ complete-corpus invariant of ``_staged_events_dir``."""
-    key = sf_dir.strip("/").replace("/", "_")
+    row is needed; it is published whole like ``_staged_events_dir``."""
     # _v2: 16 files instead of 4 — the replayed batch's scan stage
     # carries the CPU-heavy shingle/minhash map work of the at-arrival
     # dedup, and file count caps its parallelism (a real ingest feed
     # arrives in many files; 4 was an artifact of the staging write).
-    out = os.path.join(_STAGE_ROOT, f"docs_{key}_v2")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        load_table(spark, sf_dir, "documents").repartition(16).write.mode(
-            "overwrite"
-        ).parquet(out)
-    return out
+    return _stage_once(
+        os.path.join(_STAGE_ROOT, f"docs_{staged_key(sf_dir)}_v2"),
+        lambda path: load_table(spark, sf_dir, "documents")
+        .repartition(16)
+        .write.parquet(path),
+    )
 
 
 def documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -175,74 +177,91 @@ STREAM_SHUFFLE_PARTITIONS = 8
 
 # Final state-store footprint of each run_stream invocation, keyed by
 # the caller's label: {"state_rows": n, "state_bytes": b} summed over
-# the plan's stateful operators.  A state BLOW-UP (losing the
-# shard-coalescing of stream_neardup_suppress, a dedup horizon that
-# stops expiring) is invisible to result-correctness checks — the
-# ratchet in tests/test_stream_state_baseline.py reads this dict
-# against tools/stream_state_baseline.json and fails CI at >2x.
-LAST_STATE_METRICS: dict[str, dict[str, int]] = {}
+# the plan's stateful operators and their "state_partitions" counts.
+# A state BLOW-UP (losing the shard-coalescing of
+# stream_neardup_suppress, a dedup horizon that stops expiring) is
+# invisible to result-correctness checks — the ratchet in
+# tests/test_stream_state_baseline.py reads this dict against
+# tools/stream_state_baseline.json and fails CI at >2x.
+LAST_STATE_METRICS: dict[str, dict] = {}
+
+# Serializes _run_to_end's set -> start() -> restore window, so two
+# runners never restore each other's confs.
+_START_LOCK = threading.Lock()
 
 
-def run_stream(df, name: str, mode: str) -> DataFrame:
-    """Run a streaming DataFrame to completion (availableNow) into a
-    memory sink; return the sink as a batch DataFrame.  Raises if the
-    query is still running at the timeout or terminated with an error
-    — a silently partial sink must never be returned."""
+def _run_to_end(writer, label: str, confs=()) -> StreamingQuery:
+    """The one place a stream starts: run ``writer`` to completion
+    (availableNow) and return its query.  The stream confs
+    (STREAM_SHUFFLE_PARTITIONS plus ``confs``, (key, value) pairs) are
+    set only while ``start()`` runs — a query copies its session's SQL
+    conf as it starts — and then restored exactly, an unset conf to
+    unset, so the caller's session is handed back as it was.  Raises
+    if the query is still running at the timeout or terminated with an
+    error — a silently partial sink must never be returned."""
+    spark = writer._spark
+    confs = (("spark.sql.shuffle.partitions", str(STREAM_SHUFFLE_PARTITIONS)), *confs)
+    with _START_LOCK:
+        prev = {k: spark.conf.get(k, None) for k, _ in confs}
+        try:
+            for k, v in confs:
+                spark.conf.set(k, v)
+            q = writer.trigger(availableNow=True).start()
+        finally:
+            for k, v in prev.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)
+    if not q.awaitTermination(600):
+        q.stop()
+        raise RuntimeError(f"streaming query {label} still running after 600s")
+    if q.exception() is not None:
+        raise q.exception()
+    return q
+
+
+def run_stream(df, name: str, mode: str, confs=()) -> DataFrame:
+    """Run a streaming DataFrame to completion through ``_run_to_end``
+    into a memory sink; return the sink as a batch DataFrame.  The
+    sink's temp view is dropped once the frame has resolved it (the
+    frame holds the sink itself), so a run leaves no view behind.
+    Records the run's peak state footprint in LAST_STATE_METRICS."""
     sink = f"{name}_{next(_SINK_COUNTER)}"
     spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_prog = spark.conf.get("spark.sql.streaming.numRecentProgressUpdates")
-    spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_SHUFFLE_PARTITIONS))
-    # recentProgress is a ring buffer of the LAST N progress events
-    # (default 100); a run with more micro-batches would silently drop
-    # the early ones and the "peak over the whole run" scan below
-    # would under-report a mid-run state blow-up.  The availableNow
-    # replays here produce at most a few thousand batches even at the
-    # x10 staging, so a deep buffer is cheap insurance.
-    spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", "100000")
-    try:
-        q = (
-            df.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode(mode)
-            .trigger(availableNow=True)
-            .start()
+    writer = df.writeStream.format("memory").queryName(sink).outputMode(mode)
+    q = _run_to_end(writer, sink, confs)
+    out = spark.table(sink)
+    spark.catalog.dropTempView(sink)
+    # PEAK footprint over the whole run, not the final batch: a
+    # windowed agg evicts everything once the flush row closes the
+    # last window, so final-batch rows would hide a mid-run state
+    # blow-up entirely.  recentProgress is a ring buffer of the latest
+    # progress events (100 by default); a run with more batches than
+    # events kept would under-report, so it fails instead.
+    progress = q.recentProgress
+    n_batches = progress[-1]["batchId"] + 1 if progress else 0
+    if n_batches > len(progress):
+        raise RuntimeError(
+            f"streaming query {sink}: {n_batches} batches but only "
+            f"{len(progress)} progress events kept — peak state would "
+            "under-report"
         )
-        finished = q.awaitTermination(600)
-        if not finished:
-            q.stop()
-            raise RuntimeError(f"streaming query {sink} still running after 600s")
-        if q.exception() is not None:
-            raise q.exception()
-        # PEAK footprint over the whole run, not the final batch: a
-        # windowed agg evicts everything once the flush row closes the
-        # last window, so final-batch rows would hide a mid-run state
-        # blow-up entirely.
-        rows_peak = bytes_peak = 0
-        progress = q.recentProgress
-        if len(progress) >= 100_000:
-            raise RuntimeError(
-                f"streaming query {sink}: progress buffer saturated "
-                f"({len(progress)} events) — peak-state metric would "
-                "under-report; raise numRecentProgressUpdates"
-            )
-        for p in progress:
-            ops = p.get("stateOperators") or []
-            rows_peak = max(
-                rows_peak, sum(int(o.get("numRowsTotal") or 0) for o in ops)
-            )
-            bytes_peak = max(
-                bytes_peak,
-                sum(int(o.get("memoryUsedBytes") or 0) for o in ops),
-            )
-        LAST_STATE_METRICS[name] = {
-            "state_rows": rows_peak,
-            "state_bytes": bytes_peak,
-        }
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", prev_prog)
-    return df.sparkSession.table(sink)
+    rows_peak = bytes_peak = 0
+    parts: set[int] = set()
+    for p in progress:
+        ops = p.get("stateOperators") or []
+        rows_peak = max(rows_peak, sum(int(o.get("numRowsTotal") or 0) for o in ops))
+        bytes_peak = max(
+            bytes_peak, sum(int(o.get("memoryUsedBytes") or 0) for o in ops)
+        )
+        parts.update(int(o["numShufflePartitions"]) for o in ops)
+    LAST_STATE_METRICS[name] = {
+        "state_rows": rows_peak,
+        "state_bytes": bytes_peak,
+        "state_partitions": sorted(parts),
+    }
+    return out
 
 
 @register(
@@ -615,18 +634,10 @@ def stream_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = events_stream(spark, sf_dir).filter(
         F.col("event_id") != FLUSH_EVENT_ID
     )
-    q = (
-        src.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    _run_to_end(
+        src.writeStream.foreachBatch(_sink).option("checkpointLocation", ckpt),
+        "foreachBatch stream",
     )
-    finished = q.awaitTermination(600)
-    if not finished:
-        q.stop()
-        raise RuntimeError("foreachBatch stream still running after 600s")
-    if q.exception() is not None:
-        raise q.exception()
     return (
         spark.read.parquet(out)
         .groupBy("event_type")
@@ -1064,28 +1075,13 @@ def statestore_dedup_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .dropDuplicates(["user_id"])
     )
-    sink = f"statestore_audit_{next(_SINK_COUNTER)}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(STREAM_SHUFFLE_PARTITIONS)
+    # only the checkpoint is read back, so the rows go to a noop sink
+    _run_to_end(
+        s.writeStream.format("noop")
+        .outputMode("append")
+        .option("checkpointLocation", ckpt),
+        "state-audit stream",
     )
-    try:
-        q = (
-            s.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        finished = q.awaitTermination(600)
-        if not finished:
-            q.stop()
-            raise RuntimeError(f"state-audit stream still running after 600s")
-        if q.exception() is not None:
-            raise q.exception()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     state = spark.read.format("statestore").load(ckpt)
     return state.agg(
         F.count(F.lit(1)).cast("long").alias("n_state_keys"),
@@ -1341,18 +1337,10 @@ def stream_cdc_serving_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).parquet(_staged_events_dir(spark, sf_dir)).filter(
         F.col("event_id") != FLUSH_EVENT_ID
     )
-    q = (
-        src.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    _run_to_end(
+        src.writeStream.foreachBatch(_apply).option("checkpointLocation", ckpt),
+        "cdc serving stream",
     )
-    finished = q.awaitTermination(600)
-    if not finished:
-        q.stop()
-        raise RuntimeError("cdc serving stream still running after 600s")
-    if q.exception() is not None:
-        raise q.exception()
     return spark.read.parquet(f"{view_base}_v{last['bid']}").select(
         F.col("cohort").cast("int"),
         F.col("n_live").cast("long"),

@@ -6,22 +6,19 @@ Execution model (r8, VERDICT item 7 — hold the suite under the
 15-minute bar; r9 ADVICE — lazy per-query): the session fixture
 submits one future per SELECTED test (it reads the post-filter
 collection, so a targeted ``pytest -k one_query`` run computes only
-that query instead of paying the full-suite cost) — DataFrame
-CONSTRUCTION serialized under a lock (stream runners set
-``spark.sql.shuffle.partitions`` for their run and register
-memory-sink views; batch builders need no lock, so
-plans.sweep_plan_reports has none: it skips stream_* and builds its
-BUILDS_RUN_STREAM queries before its threads start), while
+that query instead of paying the full-suite cost).  Builds,
 collection (py4j, GIL released) and the DuckDB oracle (own
-connection per task, GIL released) overlap across queries.  Each
-parametrized test blocks only on its own future and pops it once
-consumed, so pandas pairs are freed as tests drain instead of living
-for the whole session.
+connection per task, GIL released) overlap across queries: no
+builder changes the shared session (batch builders bind their
+frames, stream builders set their confs only inside their query's
+``start()`` and drop their sink views, shared staging publishes by
+atomic rename).  Each parametrized test blocks only on its own
+future and pops it once consumed, so pandas pairs are freed as tests
+drain instead of living for the whole session.
 """
 
 from __future__ import annotations
 
-import threading
 from concurrent.futures import ThreadPoolExecutor
 
 import pytest
@@ -37,13 +34,9 @@ ROWS_ONLY = sorted(n for n, s in REGISTRY.items() if s.oracle is None)
 
 @pytest.fixture(scope="session")
 def correctness_results(request, spark, sf_dir):
-    build_lock = threading.Lock()
-
     def one(name: str):
         spec = REGISTRY[name]
-        with build_lock:
-            df = spec.fn(spark, sf_dir)
-        spark_pdf = df.toPandas()
+        spark_pdf = spec.fn(spark, sf_dir).toPandas()
         con = oracle_con(sf_dir)
         try:
             oracle_pdf = con.execute(spec.oracle).df()

@@ -8,7 +8,6 @@ and every dirty axis (one AXES entry each) against their oracles."""
 from __future__ import annotations
 
 import re
-import shutil
 
 import duckdb
 import pytest
@@ -22,6 +21,7 @@ from tools.scale_stress import (
     DIRTY_BINARY_QUERIES,
     DIRTY_TRACE_QUERIES,
     axis_pool,
+    drop_replica,
     stage,
     stage_axis,
 )
@@ -31,7 +31,7 @@ from tools.scale_stress import (
 def x2_dir():
     out = stage("/root/testdata/sf0.001", 2)
     yield out
-    shutil.rmtree(out, ignore_errors=True)
+    drop_replica(out)
 
 
 def test_stage_scales_facts_and_copies_dims(x2_dir):
@@ -88,7 +88,7 @@ def bp_dir():
 
     out = stage_boilerplate("/root/testdata/sf0.001", 2, BOILERPLATE_PCT_GUARDED)
     yield out
-    shutil.rmtree(out, ignore_errors=True)
+    drop_replica(out)
 
 
 def test_boilerplate_plants_hot_bands_and_cap_triggers(bp_dir):
@@ -132,7 +132,7 @@ def axis_dir():
 
     yield get
     for d in dirs.values():
-        shutil.rmtree(d, ignore_errors=True)
+        drop_replica(d)
 
 
 # The 16 queries the dirty stress originally broke (ANSI div-by-zero,

@@ -570,7 +570,7 @@ def test_stream_foreachbatch_manifest_exactly_once(spark, sf_dir, tmp_path):
         read_manifest,
         write_stream_batch,
     )
-    from scache_spark.streaming.windows import _staged_events_dir
+    from scache_spark.streaming.windows import _run_to_end, _staged_events_dir
 
     src = _staged_events_dir(spark, sf_dir, copies=1)
     out = str(tmp_path / "stream_pub")
@@ -583,16 +583,13 @@ def test_stream_foreachbatch_manifest_exactly_once(spark, sf_dir, tmp_path):
         assert not write_stream_batch(projected, out, batch_id)
         seen.append(batch_id)
 
-    q = (
+    _run_to_end(
         spark.readStream.schema(SCHEMAS["events"])
         .option("maxFilesPerTrigger", "2")
         .parquet(src)
-        .writeStream.foreachBatch(publish)
-        .trigger(availableNow=True)
-        .start()
+        .writeStream.foreachBatch(publish),
+        "manifest publish",
     )
-    assert q.awaitTermination(600)
-    assert q.exception() is None
     assert len(seen) >= 2, "expected multiple micro-batches"
 
     import pyspark.sql.types as T

@@ -10,7 +10,9 @@ this test replays every stream query at the baseline SF and fails
 when peak state rows exceed 2x tools/stream_state_baseline.json
 (regenerate deliberately with tools/gen_stream_state_baseline.py).
 Bytes are recorded for observability, not ratcheted — they swing
-with the state-store provider and JVM layout.
+with the state-store provider and JVM layout.  Every stateful run must
+report STREAM_SHUFFLE_PARTITIONS state partitions, which the runner
+sets only around its query's start().
 """
 
 from __future__ import annotations
@@ -23,6 +25,7 @@ sys.path.insert(
     0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 )
 
+from scache_spark.streaming import windows as W  # noqa: E402
 from tools.gen_stream_state_baseline import (  # noqa: E402
     OUT as BASELINE_PATH,
     measure,
@@ -57,4 +60,10 @@ def test_no_stream_state_blowups(spark):
                 f"{name}: peak state rows {cur['state_rows']} > "
                 f"{limit} (baseline {base_rows})"
             )
+        # measure() left this query's runs in LAST_STATE_METRICS
+        parts = [m["state_partitions"] for m in W.LAST_STATE_METRICS.values()]
+        want = [W.STREAM_SHUFFLE_PARTITIONS]
+        stray = [p for p in parts if p not in ([], want)]
+        if stray or (base_rows and want not in parts):
+            regressions.append(f"{name}: state partitions {parts}, want {want}")
     assert regressions == [], "\n".join(regressions)

@@ -6,7 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from scache_spark.catalog import load_table
-from scache_spark.streaming.windows import events_stream
+from scache_spark.streaming.windows import _run_to_end, events_stream
 
 
 def test_foreachbatch_incremental_sink(spark, sf_dir, tmp_path):
@@ -24,16 +24,14 @@ def test_foreachbatch_incremental_sink(spark, sf_dir, tmp_path):
             .parquet(out)
         )
 
-    q = (
+    _run_to_end(
         # event_id >= 0 drops the staged watermark-flush row
         events_stream(spark, sf_dir)
         .filter(F.col("event_id") >= 0)
         .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", str(tmp_path / "ckpt")),
+        "incremental sink",
     )
-    q.awaitTermination(300)
 
     sunk = spark.read.parquet(out).groupBy("event_type").agg(F.sum("n").alias("n"))
     expected = (
@@ -59,14 +57,12 @@ def test_checkpoint_no_reprocessing_on_restart(spark, sf_dir, tmp_path):
         batch_df.limit(0).write.mode("append").parquet(out)
 
     def run_once():
-        q = (
+        _run_to_end(
             events_stream(spark, sf_dir)
             .writeStream.foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+            .option("checkpointLocation", ckpt),
+            "restart sink",
         )
-        q.awaitTermination(300)
 
     run_once()
     first_total = sum(seen)
@@ -144,7 +140,7 @@ def test_rocksdb_state_store_matches_default_provider(spark, sf_dir):
         "RocksDBStateStoreProvider"
     )
 
-    def tumbling():
+    def tumbling(confs=()):
         s = events_stream(spark, sf_dir).withWatermark("ts", "1 minute")
         agg = s.groupBy(
             F.window("ts", "5 minutes").alias("w"), "event_type"
@@ -158,23 +154,14 @@ def test_rocksdb_state_store_matches_default_provider(spark, sf_dir):
             "n",
             "total_value",
         )
-        return run_stream(res, "rocksdb_check", "append").toPandas()
+        return run_stream(res, "rocksdb_check", "append", confs).toPandas()
 
     base = tumbling().sort_values(["window_start", "event_type"]).reset_index(
         drop=True
     )
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, rocksdb)
-    try:
-        rdb = tumbling().sort_values(
-            ["window_start", "event_type"]
-        ).reset_index(drop=True)
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
+    rdb = tumbling(
+        (("spark.sql.streaming.stateStore.providerClass", rocksdb),)
+    ).sort_values(["window_start", "event_type"]).reset_index(drop=True)
     assert base.equals(rdb), (len(base), len(rdb))
 
 
@@ -257,15 +244,12 @@ def test_watermark_actually_drops_window_state(spark, sf_dir, tmp_path):
         .withWatermark("ts", "1 minute")
     )
     agg = stream.groupBy(F.window("ts", "5 minutes"), "event_type").count()
-    q = (
+    q = _run_to_end(
         agg.writeStream.format("memory")
         .queryName("state_drop_probe")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),
+        "state_drop_probe",
     )
-    assert q.awaitTermination(600)
-    assert q.exception() is None
     progresses = [p for p in q.recentProgress if p["stateOperators"]]
     removed = sum(
         p["stateOperators"][0].get("numRowsRemoved", 0) for p in progresses

@@ -81,7 +81,7 @@ sys.path.insert(0, REPO)
 
 import duckdb
 
-from scache_spark.catalog import TABLES
+from scache_spark.catalog import TABLES, staged_key
 
 
 # (table, key columns to shift). orders/lineitem share the orderkey
@@ -229,24 +229,28 @@ BOILERPLATE_PCT_GUARDED = 60
 BOILERPLATE_PCT_UNGUARDED = 1
 
 
+def drop_replica(out: str) -> None:
+    """Remove the staged dir ``out`` and every cache DERIVED from it
+    (the avro/csv/orc alt-format stagings, the streaming source
+    copies) — they key on the dir path, not its contents."""
+    shutil.rmtree(out, ignore_errors=True)
+    for root in (".alt_src", ".stream_src"):
+        for d in glob.glob(os.path.join(REPO, root, f"*{staged_key(out)}*")):
+            shutil.rmtree(d, ignore_errors=True)
+
+
 def _stage_replica(base: str, name: str, select, marker: dict) -> str:
     """The one stager: write ``<repo>/.scale_stress/<base key>_<name>``
     with one parquet file per table, each the DuckDB query
     ``select(con, table, src)`` over the table's source scan ``src``,
     then a ``_STAGED`` marker holding ``base`` and ``marker``.  A dir
-    that has its marker is reused as it is.  Staging afresh first
-    drops every cache DERIVED from the dir (the avro/csv/orc alt-format
-    stagings, the streaming source copies) — they key on the dir path,
-    not its contents."""
-    key = base.strip("/").replace("/", "_")
-    out = os.path.join(REPO, ".scale_stress", f"{key}_{name}")
+    that has its marker is reused as it is; otherwise ``drop_replica``
+    clears it and its derived caches before staging afresh."""
+    out = os.path.join(REPO, ".scale_stress", f"{staged_key(base)}_{name}")
     marker_path = os.path.join(out, "_STAGED")
     if os.path.exists(marker_path):
         return out
-    derived_key = out.strip("/").replace("/", "_")
-    for root in (".alt_src", ".stream_src"):
-        for d in glob.glob(os.path.join(REPO, root, f"*{derived_key}*")):
-            shutil.rmtree(d, ignore_errors=True)
+    drop_replica(out)
     os.makedirs(out, exist_ok=True)
     con = duckdb.connect()
     for t in TABLES:
