@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from scache_spark.functions import (
+    bound,
     bounded_window,
     cosine_defined,
     hash64,
@@ -624,12 +625,15 @@ def semantic_dedup(
 def _span_segments(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(id_col, seg_idx, seg): consecutive non-overlapping SEG_N-token
     spans of the lowercased whitespace token stream (last span may be
-    shorter).  Built with sequence+transform+slice so it runs in
-    codegen; oracles mirror it with range()+list slicing."""
-    toks = tokens(F.col(text_col))
-    segs = F.transform(
-        F.sequence(F.lit(1), F.size(toks), F.lit(SEG_N)),
-        lambda s: F.concat_ws(" ", F.slice(toks, s, SEG_N)),
+    shorter).  Built with sequence+transform+slice over the token array
+    bound once per row (``bound``); oracles mirror it with
+    range()+list slicing."""
+    segs = bound(
+        tokens(F.col(text_col)),
+        lambda t: F.transform(
+            F.sequence(F.lit(1), F.size(t), F.lit(SEG_N)),
+            lambda s: F.concat_ws(" ", F.slice(t, s, SEG_N)),
+        ),
     )
     return df.select(id_col, F.posexplode(segs).alias("seg_idx", "seg"))
 
@@ -640,11 +644,13 @@ def span_dedup_rewrite(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     occurrence, and return (id_col, text_col) with the rewritten
     text (surviving spans rejoined in order).
 
-    Scale shape (cf. the oracle-checked ``corpus.dedup_span_rewrite``,
-    which reports the same pass as per-doc accounting): one explode,
-    one span-frequency aggregate whose state is distinct spans (never
-    pairs), one shuffle join back on span, one per-doc ordered
-    reassembly — no pair space, no window over the corpus.
+    Scale shape: one explode, one span-frequency aggregate whose state
+    is distinct spans (never pairs), one shuffle join back on span, one
+    per-doc ordered reassembly — no pair space.  The oracle-checked
+    ``corpus.dedup_span_rewrite`` reports the same pass as per-doc
+    accounting, and takes its verdict from a window over span-keyed
+    (span, doc) pair rows instead of the join: it tokenizes the corpus
+    once, where this join's two branches tokenize it twice.
     """
     seg = _span_segments(df, id_col, text_col)
     freq = seg.groupBy("seg").agg(

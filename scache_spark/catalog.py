@@ -281,7 +281,8 @@ def widen_scan(df: DataFrame, *keys: str) -> DataFrame:
     """
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
-    if _scan_partitions(df) >= target:
+    parts, size = _scan_probe(df)
+    if parts >= target:
         return df
     # Byte-size guard (r9 judge item 4): the partition-count guard
     # alone would widen a mid-size table that arrives in FEW but LARGE
@@ -292,7 +293,7 @@ def widen_scan(df: DataFrame, *keys: str) -> DataFrame:
     # split count is trusted.  The sf fixtures are tens of MB, so the
     # cap never binds locally, and at production scale the
     # partition-count guard already no-ops.
-    if _scan_size_bytes(df) >= WIDEN_MAX_BYTES:
+    if size >= WIDEN_MAX_BYTES:
         return df
     from pyspark.sql import functions as F
 
@@ -315,6 +316,7 @@ _SCAN_PARTS_CACHE: dict[tuple[str, str], tuple[int, int]] = {}
 
 
 def _scan_probe(df: DataFrame) -> tuple[int, int]:
+    """(partition count, optimizer size estimate in bytes) of ``df``."""
     spark = df.sparkSession
     key = (
         spark.sparkContext.applicationId,
@@ -330,14 +332,6 @@ def _scan_probe(df: DataFrame) -> tuple[int, int]:
             _SCAN_PARTS_CACHE.clear()
         _SCAN_PARTS_CACHE[key] = probe
     return probe
-
-
-def _scan_partitions(df: DataFrame) -> int:
-    return _scan_probe(df)[0]
-
-
-def _scan_size_bytes(df: DataFrame) -> int:
-    return _scan_probe(df)[1]
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -9,6 +9,8 @@ identically in both engines (md5 hex, sequential fold order).
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window, WindowSpec
@@ -75,19 +77,46 @@ def tokens(col: Column | str) -> Column:
     return F.split(F.lower(c), " ")
 
 
-def word_shingles(toks: Column, n: int) -> Column:
-    """Distinct n-word shingles of a token array (empty if < n tokens).
+def bound(col: Column, fn: Callable[[Column], Column]) -> Column:
+    """``fn(col)`` with ``col`` evaluated once per row.
 
-    Built with sequence+transform+slice so it runs in codegen; the
-    DuckDB oracle mirrors it with a list comprehension over range().
+    Spark evaluates a higher-order function's lambda once per array
+    element, and a row expression captured inside the lambda is
+    evaluated again for every element: ``split(lower(text))`` used
+    inside a per-shingle lambda re-tokenizes the document once per
+    shingle.  Passing ``col`` through a one-element ``transform`` binds
+    it to a lambda variable, so every use inside ``fn`` reads the value
+    computed once.
     """
-    shingled = F.transform(
-        F.sequence(F.lit(1), F.size(toks) - (n - 1)),
-        lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
-    )
-    return F.array_distinct(
-        F.when(F.size(toks) >= n, shingled).otherwise(F.array().cast("array<string>"))
-    )
+    return F.transform(F.array(col), fn)[0]
+
+
+def word_ngrams(toks: Column, n: int) -> Column:
+    """Every n-word shingle of a token array in order, repeats kept
+    (empty if < n tokens).
+
+    The token array is bound once (``bound``) before the per-shingle
+    lambda reads it; the DuckDB oracle mirrors the list with a list
+    comprehension over range().
+    """
+
+    def grams(t: Column) -> Column:
+        shingled = F.transform(
+            F.sequence(F.lit(1), F.size(t) - (n - 1)),
+            lambda i: F.concat_ws(" ", F.slice(t, i, n)),
+        )
+        return F.when(F.size(t) >= n, shingled).otherwise(
+            F.array().cast("array<string>")
+        )
+
+    return bound(toks, grams)
+
+
+def word_shingles(toks: Column, n: int) -> Column:
+    """Distinct n-word shingles of a token array (empty if < n tokens):
+    ``word_ngrams`` without repeats, so the token array is evaluated
+    once per row, not once per shingle."""
+    return F.array_distinct(word_ngrams(toks, n))
 
 
 # ---------------------------------------------------------------------------

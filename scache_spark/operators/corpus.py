@@ -22,11 +22,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from scache_spark import api
 from scache_spark.api import DSIR_BUCKETS, PPL_BINS, SEG_N, _span_segments
-from scache_spark.catalog import load_table
-from scache_spark.functions import sql_hash64, tokens
+from scache_spark.catalog import load_table, widen_scan
+from scache_spark.functions import sql_hash64, tokens, word_ngrams
 from scache_spark.registry import register
 
 _SQL_SEGMENTS = f"""
@@ -70,39 +71,41 @@ _SQL_SEGMENTS = f"""
     "per doc, report span/removal counts and the character length of "
     "the rewritten text.  Differs from the pairwise dedup family: "
     "this is the corpus-wide mutation pass C4/RefinedWeb actually "
-    "apply.  At 100 TB: one explode, one span-frequency aggregate "
-    "(map-side combinable; state = distinct spans, not pairs), one "
-    "shuffle join back on span, one per-doc aggregate — no pair "
-    "space, no window, no driver state.",
+    "apply.  At 100 TB: one explode, one span-keyed repartition of "
+    "(span, doc) pair rows that serves the pair aggregate and the "
+    "span-frequency window (count and keeper per span: a sort, no "
+    "second exchange), one per-doc aggregate — no pair space, no "
+    "join, no driver state.",
 )
 def dedup_span_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load_table(spark, sf_dir, "documents")
-    # r9 restructure (§2.4): the removal verdict is identical for every
-    # occurrence of a (seg, doc) pair, so collapse to one row per pair
-    # FIRST (carrying the occurrence count) and key everything on seg:
-    # one repartition establishes the distribution that the pair
-    # aggregate, the span-frequency aggregate AND the verdict join all
-    # reuse — the old shape tokenized the corpus twice (seg fed two
-    # branches un-materialized), planned an Expand for the mixed
-    # countDistinct+min aggregate, and re-exchanged for the join.
-    # nd = count(*) over the pair level IS the distinct-doc count.
+    # widen_scan: local single-row-group fixture only (no-op at scale);
+    # the tokenize is the query's CPU, so it runs on every core.
+    d = widen_scan(load_table(spark, sf_dir, "documents"), "doc_id")
+    # The removal verdict is identical for every occurrence of a
+    # (seg, doc) pair, so collapse to one row per pair FIRST (carrying
+    # the occurrence count) and key everything on seg: the seg
+    # repartition feeds the pair aggregate, and the per-span count and
+    # keeper are a window over that same distribution — one sort, no
+    # exchange.  A self-join of per_sd with its own span aggregate
+    # would scan and tokenize the corpus once per branch (exchange
+    # reuse does not match the two branches).  nd = count(*) over the
+    # pair level IS the distinct-doc count (a NULL doc_id is counted
+    # there and ignored by min, as the join shape did).
     per_sd = (
         _span_segments(d, "doc_id", "text")
         .repartition("seg")
         .groupBy("seg", "doc_id")
         .agg(F.count(F.lit(1)).alias("n_occ"))
     )
-    freq = per_sd.groupBy("seg").agg(
-        F.count(F.lit(1)).alias("nd"),
-        F.min("doc_id").alias("keeper"),
-    )
-    marked = per_sd.join(freq, "seg").select(
+    by_seg = Window.partitionBy("seg")
+    marked = per_sd.select(
         "doc_id",
         "n_occ",
         F.length("seg").alias("seg_len"),
-        ((F.col("nd") >= 2) & (F.col("doc_id") != F.col("keeper"))).alias(
-            "removed"
-        ),
+        (
+            (F.count(F.lit(1)).over(by_seg) >= 2)
+            & (F.col("doc_id") != F.min("doc_id").over(by_seg))
+        ).alias("removed"),
     )
     kept = F.sum(F.when(F.col("removed"), 0).otherwise(F.col("n_occ")))
     return marked.groupBy("doc_id").agg(
@@ -408,17 +411,7 @@ def bpe_merge_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs = (
             seq.select(
                 "freq",
-                F.explode(
-                    # guard: Spark's sequence(1, 0) counts DOWN, so a
-                    # 1-symbol word must short-circuit to an empty list
-                    F.expr(
-                        "CASE WHEN size(split(s, ' ')) >= 2 THEN"
-                        " transform(sequence(1, size(split(s, ' ')) - 1),"
-                        " i -> concat(element_at(split(s, ' '), i), ' ',"
-                        " element_at(split(s, ' '), i + 1)))"
-                        " ELSE array() END"
-                    )
-                ).alias("pair"),
+                F.explode(word_ngrams(F.split("s", " "), 2)).alias("pair"),
             )
             .groupBy("pair")
             .agg(F.sum("freq").alias("pf"))

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from scache_spark.catalog import load_table
+from scache_spark.functions import tokens, word_shingles
 from scache_spark.operators.dedup import (
     _AUG_SQL,
     _BAND_SQL,
@@ -467,16 +468,11 @@ def temperature_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     "materialized).",
 )
 def document_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = F.split(F.lower("text"), " ")
-    g3 = F.transform(
-        F.sequence(F.lit(1), F.size(t) - 2),
-        lambda i: F.concat_ws(" ", F.slice(t, i, 3)),
-    )
+    t = tokens("text")
     n_tok = F.size(t)
     rep = F.when(
         n_tok >= 3,
-        1.0
-        - F.size(F.array_distinct(g3)) / (n_tok - 2).cast("double"),
+        1.0 - F.size(word_shingles(t, 3)) / (n_tok - 2).cast("double"),
     ).otherwise(0.0)
     nonalpha = F.when(
         F.length("text") > 0,
@@ -560,15 +556,11 @@ def document_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     "mixture_sampling_weights feed on its output in production).",
 )
 def training_corpus_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = F.split(F.lower("text"), " ")
+    t = tokens("text")
     n_tok = F.size(t)
-    g3 = F.transform(
-        F.sequence(F.lit(1), F.size(t) - 2),
-        lambda i: F.concat_ws(" ", F.slice(t, i, 3)),
-    )
     rep = F.when(
         n_tok >= 3,
-        1.0 - F.size(F.array_distinct(g3)) / (n_tok - 2).cast("double"),
+        1.0 - F.size(word_shingles(t, 3)) / (n_tok - 2).cast("double"),
     ).otherwise(0.0)
     sig = load_table(spark, sf_dir, "documents").select(
         "doc_id",

@@ -815,16 +815,10 @@ def unigram_lm_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     "state is bounded by document length, not corpus size.",
 )
 def text_repetition_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = F.split(F.lower("text"), " ")
-    g3 = F.when(
-        F.size(t) >= 3,
-        F.transform(
-            F.sequence(F.lit(1), F.size(t) - 2),
-            lambda i: F.concat_ws(" ", F.slice(t, i, 3)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    from scache_spark.functions import tokens, word_ngrams
+
     d = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "source", g3.alias("g3")
+        "doc_id", "source", word_ngrams(tokens("text"), 3).alias("g3")
     )
     n_grams = F.size("g3")
     n_unique = F.size(F.array_distinct("g3"))

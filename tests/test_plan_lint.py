@@ -6,10 +6,6 @@ so it fails the suite instead of waiting for a judge's hand audit."""
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 
 def test_no_plan_antipatterns(spark, plan_reports):
     from tools.plan_lint import lint_all

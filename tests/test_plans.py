@@ -247,6 +247,18 @@ def test_e2e_funnel_two_exchanges(spark, sf_dir):
     assert "Cartesian" not in plans.formatted_plan(df)
 
 
+def test_span_rewrite_tokenizes_corpus_once(spark, sf_dir):
+    from scache_spark.operators.corpus import dedup_span_rewrite
+
+    df = dedup_span_rewrite(spark, sf_dir)
+    # the per-span count and keeper are a window over the seg-keyed
+    # pair rows, not a self-join, so the corpus is scanned (and
+    # tokenized) once — also under the count the benchmark runs
+    for frame in (df, df.groupBy().count()):
+        scans = plans.scan_counts(frame).get("documents.parquet", 0)
+        assert scans == 1, plans.formatted_plan(frame)
+
+
 def test_q2_no_cartesian_and_bounded(spark, sf_dir):
     from scache_spark.operators.tpch2 import tpch_q2_min_cost_supplier
 

@@ -22,7 +22,7 @@ import json
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from scache_spark.plans import sweep_plan_reports
 from scache_spark.session import get_session

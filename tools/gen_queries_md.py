@@ -4,9 +4,11 @@ companion to COVERAGE.md's family map."""
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from scache_spark.registry import PRIORITY, REGISTRY, _ensure_loaded
 
@@ -43,7 +45,7 @@ def main() -> None:
         if len(doc) > 160:
             doc = doc[:157] + "..."
         lines.append(f"| `{name}`{w} | {tags} | {loc} | {oracle} | {doc} |")
-    open("/root/repo/QUERIES.md", "w").write("\n".join(lines) + "\n")
+    open(os.path.join(REPO, "QUERIES.md"), "w").write("\n".join(lines) + "\n")
     print(f"written {len(REGISTRY)} entries")
 
 

@@ -14,6 +14,10 @@ run):
   EXCHANGES   exchange count (reported; >8 flagged)
   PY-UDF      row-at-a-time BatchEvalPython in the plan (pandas/Arrow
               variants are fine)
+  RESPLIT     a lambdafunction( body holding split( of a row
+              expression: Spark evaluates a lambda once per array
+              element, so the row is re-split per element (bind the
+              token array once: scache_spark.functions.bound)
 
 Usage: python tools/plan_lint.py [--all]  (default skips stream_*)
 Also invoked by ``tests/test_plan_lint.py`` so a CARTESIAN / PY-UDF /
@@ -22,9 +26,11 @@ exchange-count regression fails CI instead of waiting for a judge.
 
 from __future__ import annotations
 
+import os
+import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from scache_spark import plans
 from scache_spark.registry import REGISTRY, _ensure_loaded
@@ -50,6 +56,32 @@ RESCAN_OK: set[str] = {
     # column-pruned scans — strictly more IO than the three scans.
     "referential_integrity_audit",
 }
+
+
+def _parenthesized(text: str, start: int) -> str:
+    """``text`` from ``start`` (just past an open paren) up to its
+    matching close paren, or to the end if it never closes."""
+    depth = 1
+    for i in range(start, len(text)):
+        if text[i] == "(":
+            depth += 1
+        elif text[i] == ")":
+            depth -= 1
+            if depth == 0:
+                return text[start:i]
+    return text[start:]
+
+
+def resplits(plan: str) -> bool:
+    """Whether a lambda body in ``plan`` splits a row expression (its
+    argument holds no lambda variable)."""
+    for line in plan.splitlines():
+        for lam in re.finditer(r"lambdafunction\(", line):
+            body = _parenthesized(line, lam.end())
+            for sp in re.finditer(r"\bsplit\(", body):
+                if "lambda " not in _parenthesized(body, sp.end()):
+                    return True
+    return False
 
 
 def lint_all(
@@ -81,6 +113,8 @@ def lint_all(
             issues.append("CARTESIAN")
         if "BatchEvalPython " in p and "ArrowEvalPython" not in p:
             issues.append("PY-UDF")
+        if resplits(p):
+            issues.append("RESPLIT")
         nex = rep["exchanges"]
         if nex > MAX_EXCHANGES:
             issues.append(f"EXCHANGES={nex}")

@@ -211,9 +211,9 @@ BOILERPLATE_GUARDED = [
     "stream_neardup_suppress",     # capped keyed state is the guard
     # the MITIGATION leg: at extreme severity the cap costs recall, so
     # the production pipeline strips boilerplate upstream with the
-    # C4-style span rewrite — a linear pass (span-frequency agg + join
-    # back; state = distinct spans, never pairs), verified here on the
-    # worst-case corpus itself
+    # C4-style span rewrite — a linear pass (span-keyed pair agg +
+    # per-span window; state = distinct spans, never pairs), verified
+    # here on the worst-case corpus itself
     "dedup_span_rewrite",
     # r9: winnowing's FP_CAP demotes the preamble's shared
     # fingerprints before the pair space materializes — same guard
