@@ -6,7 +6,7 @@ an application and the registry (`registry.py`) use.  The registry's
 queries for these algorithms are fixture wrappers: they load the
 fixture tables, call the function here and project/rename the result
 for their DuckDB oracle.  The plans are the scale-first ones
-(hash-before-shuffle dedup, capped banded LSH joins, broadcast
+(one-read window verdicts for dedup, capped banded LSH joins, broadcast
 codebooks, union+window as-of joins), and each function returns a
 DataFrame: callers compose them and let Catalyst optimize across the
 seams.  Dependencies point one way, ``operators/* -> api ->
@@ -83,19 +83,29 @@ CMS_ROWS = 3
 CMS_WIDTH = 256
 
 
+def _hash_rep(content: Column, id_col: str) -> Column:
+    """The min ``id_col`` among the rows sharing ``md5(content)``: one
+    window partitioned by the hash, so the input is read once.  NULL
+    content hashes to NULL, and the NULL rows form one group."""
+    return F.min(id_col).over(Window.partitionBy(F.md5(content)))
+
+
 def exact_dedup(df: DataFrame, content_col: str, id_col: str) -> DataFrame:
     """Keep one survivor (min id) per exact content hash.
 
-    Scale shape: only (16-byte md5, id) pairs reach the exchange; the
-    content column never shuffles — the survivor set joins back on
-    the frame's own id (cf. ``pipeline.dedup_materialize``).
+    Scale shape: one hash-partitioned window over the frame — the
+    input is read once and the survivors need no join back.  NULL
+    content is one group (its min id survives), and empty text is a
+    group of its own.  A NULL id never survives; rows that share the
+    min id all survive.  The aggregate reports that count copies
+    (``dedup_exact_hash``, ``pipeline.dedup_materialize``) stay
+    separate registry queries; ``leakage_safe_split`` takes its
+    cluster representative from the same ``_hash_rep``.
     """
-    hashed = df.withColumn("__h", F.md5(F.col(content_col)))
-    keep = hashed.groupBy("__h").agg(F.min(id_col).alias("__keep"))
     return (
-        hashed.join(keep, "__h")
+        df.withColumn("__keep", _hash_rep(F.col(content_col), id_col))
         .filter(F.col(id_col) == F.col("__keep"))
-        .drop("__h", "__keep")
+        .drop("__keep")
     )
 
 
@@ -120,29 +130,20 @@ def _band_cols() -> list:
     ]
 
 
-def _capped_candidate_pairs(sh: DataFrame) -> DataFrame:
-    """Given a (materialized) ``(doc_id, sh)`` shingle frame, return the
-    distinct ``(doc_a, doc_b)`` band candidates (doc_a < doc_b) that
-    survive BAND_CAP demotion: buckets holding more than BAND_CAP docs
-    are dropped BEFORE any pair materializes (a k-member bucket
-    contributes k² candidates, so one boilerplate band can dominate
-    the job — SCALE.md §12 measured a 30,150-doc bucket).  Demoted
-    content still pairs through its OTHER bands.  The LEAN melt
-    (doc_id, band_id, band_hash — no shingle payload) is checkpointed
-    once and feeds the cap count plus both self-join sides."""
-    sigs = sh.select("doc_id", *_signature_cols())
-    melted = sigs.select(
+def _band_melt(sh: DataFrame) -> DataFrame:
+    """The LEAN melt of a ``(doc_id, sh)`` shingle frame: one
+    ``(doc_id, band_id, band_hash)`` row per document and LSH band —
+    no shingle payload."""
+    return sh.select("doc_id", *_signature_cols()).select(
         "doc_id", F.posexplode(F.array(*_band_cols())).alias("band_id", "band_hash")
-    ).localCheckpoint(eager=True)
-    keep = (
-        melted.groupBy("band_id", "band_hash")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") <= BAND_CAP)
-        .select("band_id", "band_hash")
     )
-    capped = melted.join(keep, ["band_id", "band_hash"])
-    a = capped.select(F.col("doc_id").alias("doc_a"), "band_id", "band_hash")
-    b = capped.select(
+
+
+def _band_pairs(melted: DataFrame) -> DataFrame:
+    """Distinct ``(doc_a, doc_b)`` candidates (doc_a < doc_b) sharing a
+    band bucket of a ``_band_melt`` frame: the banded self-join."""
+    a = melted.select(F.col("doc_id").alias("doc_a"), "band_id", "band_hash")
+    b = melted.select(
         F.col("doc_id").alias("doc_b"),
         F.col("band_id").alias("band_id_b"),
         F.col("band_hash").alias("band_hash_b"),
@@ -159,6 +160,41 @@ def _capped_candidate_pairs(sh: DataFrame) -> DataFrame:
     )
 
 
+def _capped_candidate_pairs(sh: DataFrame) -> DataFrame:
+    """Given a (materialized) ``(doc_id, sh)`` shingle frame, return the
+    ``_band_pairs`` candidates that survive BAND_CAP demotion: buckets
+    holding more than BAND_CAP docs are dropped BEFORE any pair
+    materializes (a k-member bucket contributes k² candidates, so one
+    boilerplate band can dominate the job — SCALE.md §12 measured a
+    30,150-doc bucket).  Demoted content still pairs through its
+    OTHER bands.  The melt is checkpointed once and feeds the cap
+    count plus both self-join sides."""
+    melted = _band_melt(sh).localCheckpoint(eager=True)
+    keep = (
+        melted.groupBy("band_id", "band_hash")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .filter(F.col("n") <= BAND_CAP)
+        .select("band_id", "band_hash")
+    )
+    return _band_pairs(melted.join(keep, ["band_id", "band_hash"]))
+
+
+def _verified_pairs(sh: DataFrame, cand: DataFrame, threshold: float) -> DataFrame:
+    """``(doc_a, doc_b, jaccard)``: the ``(doc_a, doc_b)`` candidates
+    whose exact Jaccard over the ``(doc_id, sh)`` shingle sets reaches
+    ``threshold`` — shingles travel into the pair space only for
+    candidates."""
+    verified = cand.join(
+        sh.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a")), "doc_a"
+    ).join(sh.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b")), "doc_b")
+    jac = F.size(F.array_intersect("sh_a", "sh_b")).cast("double") / F.size(
+        F.array_union("sh_a", "sh_b")
+    )
+    return verified.select("doc_a", "doc_b", jac.alias("jaccard")).filter(
+        F.col("jaccard") >= threshold
+    )
+
+
 def minhash_pairs(
     df: DataFrame, id_col: str, text_col: str, *, threshold: float = 0.5
 ) -> DataFrame:
@@ -169,7 +205,8 @@ def minhash_pairs(
     The capped banded self-join bounds the candidate space (never
     all-pairs, and no hot bucket above BAND_CAP members); exact
     Jaccard verifies candidates only.  A document below the shingle
-    width has no shingles and never pairs.  Two materializations: the
+    width — NULL and empty text included — has no shingles and never
+    pairs.  Two materializations: the
     shingle frame (feeds the minhash AND the two verification joins)
     and the lean band melt; shingles travel into the pair space only
     for surviving candidates.
@@ -187,33 +224,25 @@ def minhash_pairs(
         )
         .localCheckpoint(eager=True)
     )
-    verified = (
-        _capped_candidate_pairs(sh)
-        .join(
-            sh.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a")),
-            "doc_a",
-        )
-        .join(
-            sh.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b")),
-            "doc_b",
-        )
+    return _verified_pairs(sh, _capped_candidate_pairs(sh), threshold).select(
+        F.col("doc_a").alias("id_a"), F.col("doc_b").alias("id_b"), "jaccard"
     )
-    jac = F.size(F.array_intersect("sh_a", "sh_b")).cast("double") / F.size(
-        F.array_union("sh_a", "sh_b")
-    )
-    return verified.select(
-        F.col("doc_a").alias("id_a"), F.col("doc_b").alias("id_b"), jac.alias("jaccard")
-    ).filter(F.col("jaccard") >= threshold)
 
 
 def lsh_cosine_bucket(
     vec: Column, *, dim: int, n_planes: int = 8
 ) -> Column:
     """Hyperplane-LSH bucket id of an array<float/double> column:
-    sign bits of ``n_planes`` deterministic (sin-derived) planes —
-    the partition key that turns ANN into a ~1/2^p partition read
-    (cf. ``similarity.lsh_bucket``, here with the dimension as a
-    parameter instead of the fixture constant)."""
+    sign bits of ``n_planes`` deterministic planes, plane ``p``'s
+    weight at element ``j`` being ``sin(p*131 + j*7)`` — the
+    partition key that turns ANN into a ~1/2^p partition read.  The
+    registry's LSH queries call it with the fixture's dimension.
+
+    A bit is set only for a dot product > 0, so a NULL vector, an
+    all-zero vector, and a real vector whose every plane dot is <= 0
+    all land in bucket 0; a NULL element makes its dots NULL, which
+    also clears their bits.  Cosine callers filter with
+    ``functions.cosine_defined`` first."""
     def _plane_term(p: int):
         # a one-parameter lambda: pyspark treats two-parameter lambdas
         # as (element, index) functions, so p must close over, not
@@ -245,11 +274,18 @@ def knn_topk(
 ) -> DataFrame:
     """Exact cosine top-k neighbors per query (queries broadcast,
     corpus scanned once for ALL queries; ranking is totally ordered
-    by (cosine desc, neighbor id))."""
-    q = queries.select(
+    by (cosine desc, neighbor id)).
+
+    Vectors without a defined cosine — NULL, a NULL/NaN/infinite
+    element, or zero norm — are excluded on both sides
+    (``functions.cosine_defined``, the contract ``knn_batch_topk``
+    gets from ``cosine_ready``); a corpus row with a NULL id never
+    ranks.  ``knn_batch_topk`` stays a separate registry query
+    because it blocks candidates by label."""
+    q = queries.where(cosine_defined(F.col(vec_col))).select(
         F.col(query_id_col).alias("q_id"), F.col(vec_col).alias("__qv")
     )
-    scored = corpus.join(
+    scored = corpus.where(cosine_defined(F.col(vec_col))).join(
         F.broadcast(q), F.col(id_col) != F.col("q_id")
     ).select(
         "q_id",
@@ -275,14 +311,20 @@ def sessionize(
     """Assign batch session ids: a new session starts when the gap to
     the previous event meets/exceeds ``gap``.  Adds ``session_id``
     (per-user dense from 1).  One shuffle on the user key serves the
-    lag and the running sum.
+    lag and the running sum; ``temporal.funnel_session_conversion``
+    is a fixture wrapper over it.
 
     Pass ``order_cols`` (e.g. an event id) whenever ``ts_col`` can
     tie: the computation runs two window passes, and over a
     NON-unique sort key the session assignment of tied rows is
     underdetermined — an engine may re-sort ties differently between
     passes (r5 scale-stress finding; fixtures with unique timestamps
-    never expose it)."""
+    never expose it).
+
+    The rows with a NULL user key are one user.  A NULL timestamp
+    sorts first and opens a session of its own, and so does the row
+    after it; filter NULL timestamps out first when that is not
+    wanted (the registry's funnel does)."""
     w = Window.partitionBy(user_col).orderBy(ts_col, *order_cols)
     prev = F.lag(ts_col).over(w)
     new_sess = (
@@ -309,15 +351,20 @@ def asof_join(
     """As-of join: for each left row, the latest right row with
     ``right_ts`` STRICTLY before ``left_ts`` (per ``on`` key) — the
     union+window plan (ONE shuffle on the key), never an inequality
-    join that degenerates to a nested loop (cf.
-    ``temporal.asof_join_last_click``).  Tie discipline (r2 advisor
-    finding): the left row is tagged ``__side=0`` and right ``1``, so
-    on equal timestamps the left row sorts FIRST and the
+    join that degenerates to a nested loop.  Tie discipline (r2
+    advisor finding): the left row is tagged ``__side=0`` and right
+    ``1``, so on equal timestamps the left row sorts FIRST and the
     frame-ending-at-(-1) window cannot carry a simultaneous right row
-    — exactly the documented strictly-before contract.  (For
-    at-or-before ties, see ``asof_join_next_click``'s convention.)
+    — exactly the documented strictly-before contract.
+    ``temporal.asof_join_last_click`` stays a separate body because
+    its tie contract is the opposite: it orders ``'click' <
+    'purchase'`` and so carries a click at the purchase's own
+    timestamp (at-or-before).
     Right columns arrive as ``asof_<name>``; left rows with no prior
-    right row get nulls."""
+    right row get nulls.  A NULL key is one partition like any
+    other; a NULL timestamp sorts first, so a NULL-time left row
+    carries nothing, and a NULL-time right row is carried (with a
+    NULL ``asof_ts``) only until a timed right row replaces it."""
     lt = left.withColumn("__side", F.lit(0))
     rt = right.select(
         F.col(on),
@@ -377,7 +424,8 @@ def windowed_pair_join(
     ``window`` must be a fixed interval (the bucket width); both ts
     columns must be timestamps.  Output: all left columns + the
     right columns (caller projects/renames beforehand to avoid
-    collisions) — one row per qualifying pair.
+    collisions) — one row per qualifying pair.  A NULL key or a NULL
+    timestamp on either side never joins.
     """
     span = F.expr(f"INTERVAL {window}")
     # bucket width in microseconds, derived from the SAME interval
@@ -405,23 +453,31 @@ def windowed_pair_join(
 def quality_signals(df: DataFrame, text_col: str) -> DataFrame:
     """Attach the document-quality signal battery: token count, mean
     token length, punctuation ratio, digit ratio, uppercase ratio —
-    all single-pass narrow expressions (cf. ``text.text_quality_score``)."""
+    all single-pass narrow expressions.  ``text.text_quality_score``
+    stays a separate registry query: it scores a different battery
+    (non-alpha and stopword ratios into one quality score).
+
+    NULL or empty text gives 0.0 for the four ratios, the guard
+    ``text_quality_score`` uses, instead of dividing by zero.  Its
+    token count is NULL for NULL text and 1 for empty text (the split
+    yields one empty token)."""
     t = F.col(text_col)
     toks = F.split(t, " ")
     n_chars = F.length(t).cast("double")
+
+    def zero_safe(ratio: Column) -> Column:
+        return F.when(n_chars > 0, ratio).otherwise(0.0)
+
+    def share(pattern: str) -> Column:
+        return zero_safe(F.round(F.length(F.regexp_replace(t, pattern, "")) / n_chars, 6))
+
     return df.select(
         "*",
         F.size(toks).cast("long").alias("q_tokens"),
-        F.round(n_chars / F.size(toks), 4).alias("q_mean_tok_len"),
-        F.round(
-            F.length(F.regexp_replace(t, r"[^\p{Punct}]", "")) / n_chars, 6
-        ).alias("q_punct_ratio"),
-        F.round(
-            F.length(F.regexp_replace(t, r"[^0-9]", "")) / n_chars, 6
-        ).alias("q_digit_ratio"),
-        F.round(
-            F.length(F.regexp_replace(t, r"[^A-Z]", "")) / n_chars, 6
-        ).alias("q_upper_ratio"),
+        zero_safe(F.round(n_chars / F.size(toks), 4)).alias("q_mean_tok_len"),
+        share(r"[^\p{Punct}]").alias("q_punct_ratio"),
+        share(r"[^0-9]").alias("q_digit_ratio"),
+        share(r"[^A-Z]").alias("q_upper_ratio"),
     )
 
 
@@ -433,7 +489,11 @@ def top_k_per_group(
     k: int,
 ) -> DataFrame:
     """Totally-ordered top-k per group (window row_number; callers
-    must include a unique tie-break in ``order_cols``)."""
+    must include a unique tie-break in ``order_cols``).  NULL group
+    keys form one group; NULL order values sort as their ``Column``
+    ordering says (Spark: first ascending, last descending).
+    ``relational.topk_per_group`` stays a separate body because it is
+    a benchmark query whose plan is held fixed."""
     w = Window.partitionBy(*group_cols).orderBy(*order_cols)
     return df.withColumn("rk", F.row_number().over(w)).filter(
         F.col("rk") <= k
@@ -445,7 +505,10 @@ def shard_assign(
 ) -> DataFrame:
     """Deterministic md5 shard id + dense position within the shard —
     a global random permutation with every shard's ordering computed
-    in parallel (cf. ``curation.training_shard_assignment``)."""
+    in parallel; ``curation.training_shard_assignment`` is a fixture
+    wrapper over it.  A NULL id hashes to NULL (``concat`` with NULL
+    is NULL), so NULL-id rows get a NULL shard and are numbered
+    within that one NULL group."""
     keyed = df.withColumn(
         "__k",
         hash64(F.concat(F.lit(f"{salt}:"), F.col(id_col).cast("string"))),
@@ -471,8 +534,11 @@ def train_val_test_split(
 ) -> DataFrame:
     """Deterministic hash split into train/val/test.  With
     ``group_col`` (e.g. a duplicate-cluster id) the WHOLE group moves
-    as a unit — the leakage-safe posture (cf. ``leakage_safe_split``):
-    near-duplicates can never straddle the train/eval boundary."""
+    as a unit — the leakage-safe posture: near-duplicates can never
+    straddle the train/eval boundary.  A NULL key hashes to NULL and
+    lands in ``train``.  ``pipeline.leakage_safe_split`` stays a
+    separate body because its oracle fixes a different hash (md5 of
+    the bare representative id, 80/10/10 by ``% 10``)."""
     key = F.col(group_col) if group_col else F.col(id_col)
     pct = F.pmod(
         hash64(F.concat(F.lit(f"{salt}:"), key.cast("string"))), F.lit(100)
@@ -499,7 +565,9 @@ def bm25_score(
     ``query_terms`` is a list of terms, or a function from the
     corpus document-frequency frame ``(tok, df)`` to the query's rows
     of it (a query that derives its terms from the corpus itself).
-    Returns ``(id_col, bm25)`` for the k best documents.
+    Returns ``(id_col, bm25)`` for the k best documents.  NULL and
+    empty text have no tokens: such a document is never scored and is
+    not counted in the corpus size N.
 
     Plan shape: the corpus tokenizes exactly once into a FLAT
     ``(id, tok, tf, dl)`` table, materialized once — dl attaches via
@@ -551,6 +619,39 @@ def bm25_score(
     )
 
 
+def _nearest_centroid(
+    df: DataFrame, vec_col: str, id_col: str, centroids: DataFrame
+) -> DataFrame:
+    """``(id_col, vec_col, cell, d2)``: each vector's nearest
+    ``(cell, centroid)`` by squared L2 distance ``d2``, via a broadcast
+    join and a min-struct aggregate.  Distance ties break by cell id —
+    struct comparison is field-ordered, so ``min(struct(d2, cell))`` is
+    the same total order a windowed row_number would use.
+
+    The aggregate is map-side combinable: each task reduces its K
+    candidate rows per vector locally, so the shuffle carries n rows —
+    not K·n as the windowed argmin would (the window has no partial
+    aggregation).  At 100 TB with K=16 that is a 16× shuffle saving.
+    Rows sharing an ``(id, vector)`` collapse to one.
+    """
+    scored = df.crossJoin(F.broadcast(centroids)).select(
+        F.col(id_col),
+        F.col(vec_col),
+        F.col("cell"),
+        vec_l2sq(F.col(vec_col), F.col("centroid")).alias("d2"),
+    )
+    return (
+        scored.groupBy(id_col, vec_col)
+        .agg(F.min(F.struct("d2", "cell")).alias("best"))
+        .select(
+            F.col(id_col),
+            F.col(vec_col),
+            F.col("best.cell").alias("cell"),
+            F.col("best.d2").alias("d2"),
+        )
+    )
+
+
 def semantic_dedup(
     df: DataFrame,
     vec_col: str,
@@ -565,30 +666,19 @@ def semantic_dedup(
     Each duplicate maps to the MIN surviving id among its >=threshold
     within-cell partners.  Vectors without a defined cosine — NULL,
     a NULL/NaN/infinite element, or zero norm — are excluded
-    (``functions.cosine_defined``).  Assignment is a broadcast-K
-    min-struct aggregate (the corpus never shuffles for it; distance
-    ties break by cell id).  The assigned frame feeds both sides of
+    (``functions.cosine_defined``).  Assignment is
+    ``_nearest_centroid``, which the registry's IVF and k-means
+    queries share (the corpus never shuffles for it).  The assigned frame feeds both sides of
     the within-cell self-join, so it is materialized once with each
     vector's norm, and each pair then costs one dot product —
     dot/(na*nb) is the same IEEE operations as ``vec_cosine``.
     """
-    scored = (
-        df.where(cosine_defined(F.col(vec_col)))
-        .crossJoin(F.broadcast(centroids))
+    assigned = (
+        _nearest_centroid(df.where(cosine_defined(F.col(vec_col))), vec_col, id_col, centroids)
         .select(
             F.col(id_col),
             F.col(vec_col),
             F.col("cell"),
-            vec_l2sq(F.col(vec_col), F.col("centroid")).alias("d2"),
-        )
-    )
-    assigned = (
-        scored.groupBy(id_col, vec_col)
-        .agg(F.min(F.struct("d2", "cell")).alias("best"))
-        .select(
-            F.col(id_col),
-            F.col(vec_col),
-            F.col("best.cell").alias("cell"),
             vec_norm(F.col(vec_col)).alias("nrm"),
         )
         .localCheckpoint(eager=True)
@@ -644,40 +734,32 @@ def span_dedup_rewrite(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     occurrence, and return (id_col, text_col) with the rewritten
     text (surviving spans rejoined in order).
 
-    Scale shape: one explode, one span-frequency aggregate whose state
-    is distinct spans (never pairs), one shuffle join back on span, one
-    per-doc ordered reassembly — no pair space.  The oracle-checked
-    ``corpus.dedup_span_rewrite`` reports the same pass as per-doc
-    accounting, and takes its verdict from a window over span-keyed
-    (span, doc) pair rows instead of the join: it tokenizes the corpus
-    once, where this join's two branches tokenize it twice.
+    A span row survives iff its id is the min id over its span — a
+    span found in one document only passes trivially.  Scale shape:
+    one explode, one span-partitioned window for that verdict, one
+    per-doc ordered reassembly — the input is read and tokenized
+    once, and there is no pair space.  The reassembly collects only
+    the surviving spans, so a document whose every span was removed
+    comes back with empty text instead of vanishing from downstream
+    inner joins.  Rows sharing an id collapse to one output row.
+    NULL text reads as empty text (one empty span) and comes back as
+    ``''``; a NULL id keeps no span and comes back once, as ``''``.
+    The oracle-checked ``corpus.dedup_span_rewrite`` takes the same
+    verdict and reports it as per-doc accounting.
     """
-    seg = _span_segments(df, id_col, text_col)
-    freq = seg.groupBy("seg").agg(
-        F.countDistinct(id_col).alias("__nd"),
-        F.min(id_col).alias("__keeper"),
+    seg = _span_segments(
+        df.withColumn(text_col, F.coalesce(F.col(text_col), F.lit(""))), id_col, text_col
     )
-    kept = seg.join(freq, "seg").filter(
-        (F.col("__nd") < 2) | (F.col(id_col) == F.col("__keeper"))
-    )
-    rewritten = kept.groupBy(id_col).agg(
-        F.concat_ws(
-            " ",
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("seg_idx", "seg"))),
-                lambda s: s["seg"],
-            ),
-        ).alias(text_col)
-    )
-    # A document whose EVERY span was removed has no surviving rows in
-    # kept — left-join the rewrite back onto the input ids so such docs
-    # come back with empty text instead of silently vanishing from
-    # downstream inner joins.
+    keep = F.col(id_col) == F.min(id_col).over(Window.partitionBy("seg"))
+    kept = F.collect_list(F.when(F.col("__keep"), F.struct("seg_idx", "seg")))
     return (
-        df.select(id_col)
-        .distinct()
-        .join(rewritten, id_col, "left")
-        .select(id_col, F.coalesce(F.col(text_col), F.lit("")).alias(text_col))
+        seg.withColumn("__keep", keep)
+        .groupBy(id_col)
+        .agg(
+            F.concat_ws(" ", F.transform(F.array_sort(kept), lambda s: s["seg"])).alias(
+                text_col
+            )
+        )
     )
 
 
@@ -688,7 +770,9 @@ def dsir_score(
     against the target subset selected by ``is_target``: hashed-unigram
     bucket counts (DSIR_BUCKETS buckets), add-one smoothed, per-doc
     sum over tokens of ln(p_t/p_r).  Returns (id_col, log_weight);
-    rank descending and keep the head to importance-resample.
+    rank descending and keep the head to importance-resample.  A
+    NULL-text document has no tokens and no output row; empty text is
+    one empty token and is scored.
 
     A doc's score is sum over buckets of n_occurrences·logratio, so
     the token stream collapses to per-(doc, bucket) counts FIRST and
@@ -736,7 +820,8 @@ def perplexity_buckets(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     assign it to the 'head' / 'middle' / 'tail' third of the
     distribution.  Returns (id_col, <the other columns of df>,
     surprisal, bucket): every column besides ``text_col`` passes
-    through, one value per id.
+    through, one value per id.  A NULL-text document has no tokens and
+    no output row; empty text is one empty token.
 
     The tertile boundaries need NO global sort: surprisals land in
     PPL_BINS equal-width bins (broadcast min/max), the tiny
@@ -843,10 +928,17 @@ def cms_sketch(df: DataFrame, key_col: str) -> DataFrame:
     in-map and the aggregate map-side-combines down to at most
     CMS_ROWS * CMS_WIDTH partials per partition — the shuffle ships
     KB regardless of stream size, and two sketches MERGE by summing
-    matching cells (so shards sign independently, cf.
-    ``minhash_merge_property``).  Worst-case overcount is
-    ~e/CMS_WIDTH of the stream length at confidence 1 - e^-CMS_ROWS
-    (Cormode-Muthukrishnan 2005).
+    matching cells (so shards sign independently, as
+    ``minhash_merge_property`` shows for signatures).  Worst-case
+    overcount is ~e/CMS_WIDTH of the stream length at confidence
+    1 - e^-CMS_ROWS (Cormode-Muthukrishnan 2005).  A NULL key hashes
+    to a NULL cell, so its count sits in one ``(r, NULL)`` row per
+    sketch row, apart from every real cell (``cms_estimate`` reads 0
+    for it).
+    The registry's ``heavy_hitters_cms`` shares ``cms_increments``
+    and ``cms_estimate`` but keeps its own sketch build, a weighted
+    one: it sums per-token counts into the cells instead of counting
+    occurrences.
     """
     incs = df.select(cms_increments(F.col(key_col)).alias("rc"))
     return incs.groupBy(
@@ -862,7 +954,8 @@ def cms_estimate(sketch: DataFrame, keys: DataFrame, key_col: str) -> DataFrame:
     probe is a map-side join + min-over-rows aggregate grouped by
     the key frame's columns.  Estimates are one-sided:
     est_cnt >= true count, always.  Keys absent from the stream may
-    still read > 0 (hash collisions) — the CMS contract.
+    still read > 0 (hash collisions) — the CMS contract.  A NULL key
+    hashes to NULL cells and reads 0.
 
     ``keys`` rows are expected DISTINCT over its columns (the final
     groupBy collapses duplicates); the sketch's columns are aliased to
@@ -893,7 +986,8 @@ def cms_estimate(sketch: DataFrame, keys: DataFrame, key_col: str) -> DataFrame:
 def edit_distance_pairs(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """All pairs within ONE Levenshtein edit, without a
     blocking key and without the O(n²) pair space (FastSS deletion
-    neighborhoods; cf. registry ``fastss_edit1_pairs``).
+    neighborhoods; the registry's ``fastss_edit1_pairs`` is a
+    fixture wrapper over it).
 
     Candidate generation is EXACT for distance <= 1: two strings are
     within one edit iff their {self} ∪ {single-character deletions}
@@ -953,8 +1047,8 @@ def edit_distance_pairs(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
 def skyline_2d(df: DataFrame, x_col: str, y_col: str) -> DataFrame:
     """Rows not strictly dominated when MAXIMIZING both ``x_col`` and
-    ``y_col`` — the 2-D Pareto frontier (cf. registry
-    ``pareto_frontier_docs``).
+    ``y_col`` — the 2-D Pareto frontier (the registry's
+    ``pareto_frontier_docs`` is a fixture wrapper over it).
 
     O(n log n), never a self-join: fold to one (x, max y) row per
     distinct x, then one ROWS window ordered by x DESC — the running
@@ -992,8 +1086,8 @@ def skyline_2d(df: DataFrame, x_col: str, y_col: str) -> DataFrame:
 def auc_rank(df: DataFrame, score_col: str, label_col: str) -> DataFrame:
     """Exact tie-corrected Mann-Whitney ROC-AUC of ``score_col``
     against binary ``label_col`` — one row ``(auc, gini, np, nn)``
-    (cf. registry ``classifier_auc_rank``, which adds the decile ROC
-    operating points over the fixture's quality score).
+    (the registry's ``classifier_auc_rank`` calls it, and adds the
+    decile ROC operating points over the fixture's quality score).
 
     The frame folds map-side to one (score, n, n_pos) row per
     DISTINCT score; average ranks come from a DISTRIBUTED midrank

@@ -68,34 +68,6 @@ def _centroids(
     )
 
 
-def _assign(vectors: DataFrame, centroids: DataFrame) -> DataFrame:
-    """Nearest-centroid assignment via broadcast join + min-struct
-    aggregate (dist ties broken by cell id — struct comparison is
-    field-ordered, so min(struct(d2, cell)) IS the same total order a
-    windowed row_number would use).
-
-    The aggregate form is map-side combinable: each task reduces its
-    K candidate rows per vector locally, so the shuffle carries n rows
-    — not K·n as the windowed argmin would (the window has no partial
-    aggregation).  At 100 TB with K=16 that is a 16× shuffle saving.
-    """
-    scored = vectors.crossJoin(F.broadcast(centroids)).select(
-        "vec_id",
-        "embedding",
-        "cell",
-        vec_l2sq(F.col("embedding"), F.col("centroid")).alias("d2"),
-    )
-    best = scored.groupBy("vec_id", "embedding").agg(
-        F.min(F.struct("d2", "cell")).alias("best")
-    )
-    return best.select(
-        "vec_id",
-        "embedding",
-        F.col("best.cell").alias("cell"),
-        F.col("best.d2").alias("d2"),
-    )
-
-
 _SQL_ASSIGN0 = f"""
     seeds AS (SELECT vec_id AS cell, embedding AS centroid
               FROM embeddings
@@ -133,7 +105,9 @@ _SQL_ASSIGN0 = f"""
 )
 def ann_ivf_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = vector_ready(load_table(spark, sf_dir, "embeddings"))
-    assigned = _assign(e, _centroids(spark, sf_dir))
+    assigned = api._nearest_centroid(
+        e, "embedding", "vec_id", _centroids(spark, sf_dir)
+    )
     return assigned.groupBy("cell").agg(
         F.count(F.lit(1)).cast("long").alias("n_vectors"),
         F.round(F.avg(F.sqrt("d2")), 6).alias("mean_dist"),
@@ -163,9 +137,9 @@ def ann_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = vector_ready(load_table(spark, sf_dir, "embeddings"))
     # assignment feeds the query lookup AND the candidate filter —
     # checkpoint so the corpus scores against the centroids once
-    assigned = _assign(e, _centroids(spark, sf_dir)).localCheckpoint(
-        eager=True
-    )
+    assigned = api._nearest_centroid(
+        e, "embedding", "vec_id", _centroids(spark, sf_dir)
+    ).localCheckpoint(eager=True)
     q = assigned.filter(F.col("vec_id") == 42).select(
         F.col("embedding").alias("qv"), F.col("cell").alias("q_cell")
     )
@@ -227,7 +201,9 @@ def kmeans_two_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = widen_scan(
         vector_ready(load_table(spark, sf_dir, "embeddings")), "vec_id"
     ).localCheckpoint(eager=True)
-    assign0 = _assign(e, _centroids(spark, sf_dir, e=e))
+    assign0 = api._nearest_centroid(
+        e, "embedding", "vec_id", _centroids(spark, sf_dir, e=e)
+    )
     exploded = assign0.select(
         "cell", F.posexplode("embedding").alias("pos0", "val_f")
     ).select(
@@ -241,7 +217,7 @@ def kmeans_two_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.array_sort(F.collect_list(F.struct("pos", "mu"))), lambda s: s["mu"]
         ).alias("centroid")
     )
-    assign1 = _assign(e, centroids1)
+    assign1 = api._nearest_centroid(e, "embedding", "vec_id", centroids1)
     return assign1.groupBy("cell").agg(
         F.count(F.lit(1)).cast("long").alias("n_vectors"),
         F.round(F.avg(F.sqrt("d2")), 6).alias("mean_dist"),
@@ -429,7 +405,9 @@ def ann_ivf_nprobe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpoint instead of re-scanning parquet), cell ranks, truth,
     # every nprobe re-rank — derives from it inside ONE final plan.
     assigned = (
-        _assign(e, _centroids(spark, sf_dir, e=e))
+        api._nearest_centroid(
+            e, "embedding", "vec_id", _centroids(spark, sf_dir, e=e)
+        )
         .select("vec_id", "embedding", "cell")
         .localCheckpoint(eager=True)
     )

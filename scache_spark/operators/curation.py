@@ -21,8 +21,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from scache_spark import api
 from scache_spark.catalog import load_table
-from scache_spark.functions import bounded_window, hash64, sql_hash64
+from scache_spark.functions import bounded_window, sql_hash64
 from scache_spark.registry import register
 
 N_SHARDS = 16
@@ -55,19 +56,8 @@ TOKEN_BUDGET = 15_000
 )
 def training_shard_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    keyed = docs.select(
-        "doc_id",
-        hash64(F.concat(F.lit("shard:"), F.col("doc_id").cast("string"))).alias(
-            "k"
-        ),
-    )
-    w = Window.partitionBy("shard").orderBy("k", "doc_id")
-    return (
-        keyed.withColumn(
-            "shard", F.pmod(F.col("k"), F.lit(N_SHARDS)).cast("int")
-        )
-        .withColumn("pos", F.row_number().over(w).cast("long"))
-        .select("doc_id", "shard", "pos")
+    return api.shard_assign(docs, "doc_id", n_shards=N_SHARDS).select(
+        "doc_id", "shard", F.col("shard_pos").alias("pos")
     )
 
 

@@ -45,8 +45,11 @@ from scache_spark.api import (
     N_MINHASH,
     SHINGLE_N,
     _band_cols,
+    _band_melt,
+    _band_pairs,
     _capped_candidate_pairs,
     _signature_cols,
+    _verified_pairs,
 )
 from scache_spark.catalog import load_table, widen_scan
 from scache_spark.functions import (
@@ -420,43 +423,9 @@ def dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "sh")
         .localCheckpoint(eager=True)
     )
-    sigs = sh.select("doc_id", *_signature_cols())
-    bands = sigs.select("doc_id", *_band_cols())
-    melted = bands.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("band_id"), F.col(f"band_{j}").alias("band_hash")
-                    )
-                    for j in range(N_BANDS)
-                ]
-            )
-        ).alias("b"),
-    ).select("doc_id", "b.band_id", "b.band_hash")
-    a, b = melted.alias("a"), melted.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    sa = sh.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
-    sb = sh.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
-    jac = F.size(F.array_intersect("sh_a", "sh_b")).cast("double") / F.size(
-        F.array_union("sh_a", "sh_b")
-    )
-    return (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select("doc_a", "doc_b", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= 0.5)
-    )
+    # api.minhash_pairs' melt, band self-join and Jaccard check, with
+    # no BAND_CAP demotion between the melt and the self-join
+    return _verified_pairs(sh, _band_pairs(_band_melt(sh)), 0.5)
 
 
 # ---------------------------------------------------------------------------
@@ -722,7 +691,8 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 # of the deterministic hyperplane machinery
 from scache_spark.functions import sql_vec_cosine, vec_cosine  # noqa: E402
 from scache_spark.operators.similarity import (  # noqa: E402
-    lsh_bucket,
+    DIM,
+    N_PLANES,
     sql_lsh_bucket,
 )
 
@@ -753,7 +723,7 @@ from scache_spark.operators.similarity import (  # noqa: E402
     doc="Embedding near-dup with the LSH bucket as the BLOCKING KEY "
     "— the production path at 100 TB (dedup_embedding_cosine's "
     "label blocking is the validation baseline).  Hyperplane "
-    "buckets are closed-form deterministic (similarity.lsh_bucket), "
+    "buckets are closed-form deterministic (api.lsh_cosine_bucket), "
     "so both engines derive identical candidate sets; cosine ≥ "
     "0.95 verifies candidates only.  Exact duplicates always "
     "collide (identical vector → identical bucket); near-dup "
@@ -768,7 +738,9 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bucketed feeds both sides of the bucket self-join — materialize
     # so the scan + hyperplane hashing run once.
     bucketed = aug.select(
-        "vec_id", "embedding", lsh_bucket(F.col("embedding")).alias("bucket")
+        "vec_id",
+        "embedding",
+        api.lsh_cosine_bucket(F.col("embedding"), dim=DIM, n_planes=N_PLANES).alias("bucket"),
     ).localCheckpoint(eager=True)
     a = bucketed.select(
         F.col("bucket"),
@@ -1261,21 +1233,7 @@ def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "sh")
         .localCheckpoint(eager=True)
     )
-    sigs = sh.select("doc_id", *_signature_cols())
-    bands = sigs.select("doc_id", *_band_cols())
-    melted = bands.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("band_id"), F.col(f"band_{j}").alias("band_hash")
-                    )
-                    for j in range(N_BANDS)
-                ]
-            )
-        ).alias("b"),
-    ).select("doc_id", "b.band_id", "b.band_hash")
+    melted = _band_melt(sh)
     corpus = melted.filter(F.col("doc_id") < 100000).select(
         F.col("doc_id").alias("corpus_id"), "band_id", "band_hash"
     )

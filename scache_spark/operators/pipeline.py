@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from scache_spark import api
 from scache_spark.catalog import load_table
 from scache_spark.functions import tokens, word_shingles
 from scache_spark.operators.dedup import (
@@ -733,24 +734,20 @@ def sequence_packing_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
 def leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     from scache_spark.operators.dedup import augmented_docs
 
-    from pyspark.sql.window import Window
-
-    # r9: the cluster representative is a windowed min over the content
-    # hash — the old cluster-map + join-back paid a second exchange and
-    # a checkpoint for what ONE h-partitioned window computes in place.
-    # assign still checkpoints (it feeds the leak check AND the final
-    # split counts), so the corpus hashes exactly once.
-    hashed = augmented_docs(spark, sf_dir).select(
-        "doc_id", F.md5("text").alias("h")
-    )
-    rep = F.min("doc_id").over(Window.partitionBy("h"))
+    # The cluster representative is api.exact_dedup's survivor rule: a
+    # windowed min over the content hash, computed in place by ONE
+    # hash-partitioned window (a cluster map joined back would pay a
+    # second exchange).  assign checkpoints because it feeds the leak
+    # check AND the final split counts, so the corpus hashes once.
+    rep = api._hash_rep(F.col("text"), "doc_id")
     m = (
         F.conv(F.substring(F.md5(F.col("rep").cast("string")), 1, 15), 16, 10)
         .cast("long")
         % 10
     )
     assign = (
-        hashed.select("doc_id", rep.alias("rep"))
+        augmented_docs(spark, sf_dir)
+        .select("doc_id", rep.alias("rep"))
         .select(
             "doc_id",
             "rep",

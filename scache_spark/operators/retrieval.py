@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from scache_spark import api
 from scache_spark.catalog import load_table
 from scache_spark.functions import (
     SQL_COSINE_READY,
@@ -37,7 +38,7 @@ from scache_spark.functions import (
     vector_ready,
 )
 from scache_spark.operators.clustering import _SQL_ASSIGN0
-from scache_spark.operators.similarity import N_PLANES, lsh_bucket, sql_lsh_bucket
+from scache_spark.operators.similarity import N_PLANES, sql_lsh_bucket
 from scache_spark.registry import register
 
 DIM = 64
@@ -306,7 +307,9 @@ _H1_SQL = ", ".join(str(x) for x in _H1)
 def retrieval_rerank_two_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = cosine_ready(load_table(spark, sf_dir, "embeddings"))
     bucketed = e.select(
-        "vec_id", "embedding", lsh_bucket(F.col("embedding")).alias("bucket")
+        "vec_id",
+        "embedding",
+        api.lsh_cosine_bucket(F.col("embedding"), dim=DIM, n_planes=N_PLANES).alias("bucket"),
     )
     qs = bucketed.filter(F.col("vec_id") % 50 == 0).select(
         F.col("vec_id").alias("q_id"),
@@ -477,7 +480,7 @@ IVF_PROBE = 2
     "scan, shuffle, and score all shrink together.",
 )
 def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from scache_spark.operators.clustering import _assign, _centroids
+    from scache_spark.operators.clustering import _centroids
 
     # The corpus feeds FOUR build branches (IVF assignment, IVF seeds,
     # PQ subvectors, PQ training rows) — an index build is a multi-pass
@@ -488,7 +491,7 @@ def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         eager=True
     )
     cents_ivf = _centroids(spark, sf_dir, e=e)
-    assigned = _assign(e, cents_ivf)
+    assigned = api._nearest_centroid(e, "embedding", "vec_id", cents_ivf)
     # query's IVF_PROBE nearest cells: rescore the query against all
     # K centroids (K rows) and keep the best IVF_PROBE
     from scache_spark.functions import vec_l2sq
@@ -872,9 +875,9 @@ def retrieval_ndcg_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # cosine contract (r6): NULL / zero-norm vectors cannot rank
     e = cosine_ready(load_table(spark, sf_dir, "embeddings"))
+    bucket = api.lsh_cosine_bucket(F.col("embedding"), dim=DIM, n_planes=N_PLANES)
     qv = e.filter(F.col("vec_id") == _NDCG_QUERY).select(
-        F.col("embedding").alias("q"),
-        lsh_bucket(F.col("embedding")).alias("qb"),
+        F.col("embedding").alias("q"), bucket.alias("qb")
     )
     base = (
         e.filter(F.col("vec_id") != _NDCG_QUERY)
@@ -882,7 +885,7 @@ def retrieval_ndcg_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_id",
             F.round(vec_cosine(F.col("embedding"), F.col("q")), 6).alias("cos"),
-            (lsh_bucket(F.col("embedding")) == F.col("qb")).alias("in_bucket"),
+            (bucket == F.col("qb")).alias("in_bucket"),
         )
     )
     ideal = (

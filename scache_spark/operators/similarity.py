@@ -15,10 +15,11 @@ Spark implements as TakeOrderedAndProject.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from scache_spark import api
 from scache_spark.catalog import load_table
 from scache_spark.functions import (
     MOMENT_MAG_BOUND,
@@ -119,29 +120,6 @@ def knn_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _plane_dot(emb: Column, p: int) -> Column:
-    """Dot of emb with deterministic pseudo-random plane p:
-    weight(p, j) = sin(p*131 + j*7)."""
-    return F.aggregate(
-        F.transform(
-            F.sequence(F.lit(1), F.lit(DIM)),
-            lambda j: F.element_at(emb, j).cast("double")
-            * F.sin(F.lit(float(p * 131)) + j.cast("double") * 7.0),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def lsh_bucket(emb: Column) -> Column:
-    """Hyperplane-LSH bucket id: sign bits of N_PLANES dots."""
-    bucket = None
-    for p in range(N_PLANES):
-        bit = F.when(_plane_dot(emb, p) > 0, F.lit(1 << p)).otherwise(F.lit(0))
-        bucket = bit if bucket is None else bucket + bit
-    return bucket.cast("int")
-
-
 def _sql_plane_dot(emb: str, p: int) -> str:
     return (
         f"list_aggregate([CAST({emb}[j] AS DOUBLE) * sin({p * 131}.0 + j * 7.0) "
@@ -150,7 +128,8 @@ def _sql_plane_dot(emb: str, p: int) -> str:
 
 
 def sql_lsh_bucket(emb: str) -> str:
-    """DuckDB expression computing the same bucket id as lsh_bucket."""
+    """DuckDB expression computing the same bucket id as
+    ``api.lsh_cosine_bucket`` at dim=DIM, n_planes=N_PLANES."""
     return " + ".join(
         f"CASE WHEN {_sql_plane_dot(emb, p)} > 0 THEN {1 << p} ELSE 0 END"
         for p in range(N_PLANES)
@@ -183,7 +162,12 @@ def ann_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     # embedding_ingest_audit, never silently bucketed)
     e = cosine_ready(load_table(spark, sf_dir, "embeddings"))
     return (
-        e.select("vec_id", lsh_bucket(F.col("embedding")).alias("bucket"))
+        e.select(
+            "vec_id",
+            api.lsh_cosine_bucket(F.col("embedding"), dim=DIM, n_planes=N_PLANES).alias(
+                "bucket"
+            ),
+        )
         .groupBy("bucket")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_vectors"),
@@ -214,7 +198,9 @@ def ann_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ann_lsh_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = cosine_ready(load_table(spark, sf_dir, "embeddings"))
     bucketed = e.select(
-        "vec_id", "embedding", lsh_bucket(F.col("embedding")).alias("bucket")
+        "vec_id",
+        "embedding",
+        api.lsh_cosine_bucket(F.col("embedding"), dim=DIM, n_planes=N_PLANES).alias("bucket"),
     )
     q = bucketed.filter(F.col("vec_id") == 0).select(
         F.col("embedding").alias("qv"), F.col("bucket").alias("q_bucket")
@@ -343,7 +329,9 @@ _H1_SET = ", ".join(str(v) for v in [0] + [1 << p for p in range(N_PLANES)])
 def ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = cosine_ready(load_table(spark, sf_dir, "embeddings"))
     bucketed = e.select(
-        "vec_id", "embedding", lsh_bucket(F.col("embedding")).alias("bucket")
+        "vec_id",
+        "embedding",
+        api.lsh_cosine_bucket(F.col("embedding"), dim=DIM, n_planes=N_PLANES).alias("bucket"),
     )
     q = bucketed.filter(F.col("vec_id") == 0).select(
         F.col("embedding").alias("qv"), F.col("bucket").alias("q_bucket")

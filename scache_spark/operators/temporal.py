@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from scache_spark import api
 from scache_spark.catalog import load_table
 from scache_spark.functions import bounded_window
 from scache_spark.registry import register
@@ -45,10 +46,13 @@ from scache_spark.registry import register
     FROM carried WHERE side = 'purchase'
     """,
     tags=("temporal", "B11"),
-    doc="As-of join: for each purchase, the user's most recent strictly "
-    "earlier click — via union+window (one shuffle on user_id), not an "
-    "inequality join (broadcast-nested-loop at scale).  Total order "
-    "(ts, side, event_id) makes simultaneous events deterministic.",
+    doc="As-of join: for each purchase, the user's most recent click "
+    "at or before the purchase time — via union+window (one shuffle on "
+    "user_id), not an inequality join (broadcast-nested-loop at "
+    "scale).  Total order (ts, side, event_id) makes simultaneous "
+    "events deterministic: 'click' sorts before 'purchase', so a click "
+    "with the purchase's own timestamp is carried (api.asof_join is "
+    "the strictly-before variant).",
 )
 def asof_join_last_click(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
@@ -177,38 +181,14 @@ def funnel_session_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     # nulls-first, DuckDB nulls-last) — excluded on both sides.
     ev = load_table(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
     # event_id tie-break: the sessionizer runs TWO window passes (gap
-    # flag, then running sid), and with duplicate (user_id, ts) rows
-    # an engine may re-sort between passes with a different tie order
-    # — splitting a tie group across sessions (found by the x10
-    # scale-stress replica, where every ts appears 10x).  A total
-    # order makes the session assignment well-defined in any engine.
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    ordered = ev.select(
-        "user_id",
-        "ts",
-        "event_id",
-        "event_type",
-        # unix_micros, not cast('long'): the cast truncates to whole
-        # seconds, which can disagree with the oracle's full-precision
-        # interval comparison at the 10-minute boundary
-        F.when(
-            F.lag("ts").over(w).isNull()
-            | (
-                F.unix_micros(F.col("ts")) - F.unix_micros(F.lag("ts").over(w))
-                >= 600 * 1_000_000
-            ),
-            1,
-        )
-        .otherwise(0)
-        .alias("new_sess"),
+    # flag, then running session id), and with duplicate (user_id, ts)
+    # rows an engine may re-sort between passes with a different tie
+    # order — splitting a tie group across sessions (found by the x10
+    # scale-stress replica, where every ts appears 10x).
+    sess = api.sessionize(
+        ev, user_col="user_id", ts_col="ts", gap="10 minutes", order_cols=("event_id",)
     )
-    sess = ordered.withColumn(
-        "sid",
-        F.sum("new_sess").over(
-            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ),
-    )
-    per_session = sess.groupBy("user_id", "sid").agg(
+    per_session = sess.groupBy("user_id", "session_id").agg(
         F.max(F.when(F.col("event_type") == "click", 1).otherwise(0)).alias(
             "has_click"
         ),

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
 from scache_spark import api
@@ -544,3 +545,120 @@ def test_auc_rank_single_class_is_null(spark):
     got = api.auc_rank(df, "score", "label").collect()[0]
     assert got.auc is None and got.gini is None
     assert got.np == 2 and got.nn == 0
+
+
+def _dirty_docs(spark):
+    return spark.createDataFrame(
+        [(1, "aaa"), (2, "aaa"), (3, None), (4, None), (5, "")],
+        "id long, text string",
+    )
+
+
+def _dirty_vecs(spark):
+    return spark.createDataFrame(
+        [
+            (1, [1.0, 0.0, 0.0, 0.0]),
+            (2, [0.0, 0.0, 0.0, 0.0]),  # zero norm
+            (3, None),
+            (4, [1.0, None, 0.0, 0.0]),  # NULL element
+            (5, [0.6, 0.8, 0.0, 0.0]),
+        ],
+        "id long, v array<double>",
+    )
+
+
+def _check_exact_dedup(spark):
+    # NULL content is one group, '' another: ids 1, 3 and 5 survive
+    out = api.exact_dedup(_dirty_docs(spark), "text", "id").toPandas()
+    assert sorted(out["id"]) == [1, 3, 5]
+
+
+def _check_quality_signals(spark):
+    out = api.quality_signals(_dirty_docs(spark), "text").toPandas().set_index("id")
+    ratios = ["q_mean_tok_len", "q_punct_ratio", "q_digit_ratio", "q_upper_ratio"]
+    for i in (3, 4, 5):  # NULL and empty text: every ratio is 0.0
+        assert out.loc[i, ratios].tolist() == [0.0] * 4
+    assert out.loc[5, "q_tokens"] == 1
+    assert out.loc[1, "q_mean_tok_len"] == 3.0
+
+
+def _check_knn_topk(spark):
+    queries = _dirty_vecs(spark).select(
+        (F.col("id") + 100).alias("qid"), F.col("v")
+    )
+    out = api.knn_topk(
+        _dirty_vecs(spark), queries, vec_col="v", id_col="id",
+        query_id_col="qid", k=5,
+    ).toPandas()
+    # only well-defined vectors rank, on both sides
+    assert sorted(set(out["q_id"])) == [101, 105]
+    assert set(out["neighbor_id"]) == {1, 5}
+    assert out["cosine"].notna().all()
+
+
+def _check_span_dedup_rewrite(spark):
+    df = spark.createDataFrame(
+        [(1, None), (2, ""), (3, "a b c d e f"), (4, "a b c d e")],
+        "id long, text string",
+    )
+    out = api.span_dedup_rewrite(df, "id", "text").toPandas().set_index("id")["text"]
+    # NULL text reads as '', and a fully removed doc comes back as ''
+    assert out.to_dict() == {1: "", 2: "", 3: "a b c d e f", 4: ""}
+
+
+def _check_lsh_cosine_bucket(spark):
+    out = (
+        _dirty_vecs(spark)
+        .select("id", api.lsh_cosine_bucket(F.col("v"), dim=4).alias("b"))
+        .toPandas()
+        .set_index("id")["b"]
+    )
+    # NULL, all-zero and NULL-element vectors set no sign bit
+    assert out[2] == out[3] == out[4] == 0
+    assert out.notna().all()
+
+
+@pytest.mark.parametrize(
+    "check",
+    [
+        _check_exact_dedup,
+        _check_quality_signals,
+        _check_knn_topk,
+        _check_span_dedup_rewrite,
+        _check_lsh_cosine_bucket,
+    ],
+    ids=lambda f: f.__name__.removeprefix("_check_"),
+)
+def test_api_dirty_rows(spark, check):
+    """NULL content, empty text, zero-norm and NULL vectors: each API
+    function's documented contract, on rows the fixtures never hold."""
+    check(spark)
+
+
+def test_asof_join_last_click_carries_simultaneous_click(spark, tmp_path):
+    """The registry's last-click as-of join is at-or-before: 'click'
+    sorts before 'purchase' at equal timestamps, so a click at the
+    purchase's own timestamp is carried (api.asof_join, strictly
+    before, would not carry it)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from scache_spark.operators.temporal import asof_join_last_click
+
+    t0 = dt.datetime(2024, 1, 1)
+    ts = [t0, t0 + dt.timedelta(minutes=5), t0 + dt.timedelta(minutes=5)]
+    events = pa.table(
+        {
+            "event_id": pa.array([1, 2, 3], pa.int64()),
+            "ts": pa.array(ts, pa.timestamp("us", tz="UTC")),
+            "user_id": pa.array([7, 7, 7], pa.int64()),
+            "event_type": ["click", "click", "purchase"],
+            "value": pa.array([0.0, 0.0, 1.0]),
+            "props": pa.array([None, None, None], pa.string()),
+        }
+    )
+    pq.write_table(events, str(tmp_path / "events.parquet"))
+    out = asof_join_last_click(spark, str(tmp_path)).collect()
+    assert len(out) == 1
+    assert out[0].purchase_id == 3
+    assert out[0].last_click_ts == out[0].purchase_ts

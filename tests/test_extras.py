@@ -11,10 +11,10 @@ import pytest
 from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
-from scache_spark import plans
+from scache_spark import api, plans
 from scache_spark.catalog import load_table
 from scache_spark.operators.blocks import block_view
-from scache_spark.operators.similarity import lsh_bucket
+from scache_spark.operators.similarity import DIM, N_PLANES
 from scache_spark.sources import write_bucketed, write_parquet
 
 
@@ -144,6 +144,7 @@ def test_ann_lsh_recall_on_near_duplicates(spark, sf_dir):
     vector land in its bucket (recall 1.0 on dups), (b) the bucket is
     a small fraction of the corpus (the scan-reduction claim)."""
     e = load_table(spark, sf_dir, "embeddings")
+    lsh_bucket = lambda c: api.lsh_cosine_bucket(c, dim=DIM, n_planes=N_PLANES)  # noqa: E731
     # planted dup: scale by 1.5 — cosine-invariant, must hash identically
     dup = e.filter(F.col("vec_id") % 25 == 0).select(
         "vec_id", F.transform("embedding", lambda x: x * F.lit(1.5)).alias("embedding")
